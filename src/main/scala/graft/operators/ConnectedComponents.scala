@@ -17,6 +17,17 @@ import graft.operators.IterCheckpoint.IterCheckpointOps
   * is one join + one aggregation shuffling on the node key, with
   * localCheckpoint truncating the logical plan (same iterative-plan
   * discipline as PageRank).
+  *
+  * Size gate: the job that materializes the symmetrised edge frame also
+  * counts its rows. When rows × the planner's per-row size fit one
+  * advisory partition (`spark.sql.adaptive.advisoryPartitionSizeInBytes`)
+  * the rounds would each be a one-task job of a few KB, so the operator
+  * returns a lazy single-task frame that replays them in memory instead
+  * ([[LocalGraph]]) — same rows, cap and warning included, one job in
+  * place of about 25. At 100 TB the gate fails on its first measurement
+  * and the distributed loop runs on the already-materialized frame: per
+  * round it shuffles only the V-sized label side against the keyed,
+  * cached edge set, with no driver-side materialization at any size.
   */
 object ConnectedComponents {
 
@@ -27,21 +38,51 @@ object ConnectedComponents {
     * exceeds it — raise the cap for long chain-shaped clusters). */
   def components(edges: DataFrame, maxIterations: Int = 10): DataFrame = {
     val e = edges.toDF("src", "dst")
-    // undirected: propagate both ways; hash-partitioned by the per-round
-    // join key ONCE — the cached layout is reused by every round's
-    // neighbor-min join, so only the V-sized label side ever shuffles
-    // (the E-sized per-round exchange is gone; guide §2.4)
-    val sym = e.union(e.select(col("dst"), col("src")))
-      .toDF("a", "b")
-      .transform(IterCheckpoint.keyedForReuse(_, col("b")))
-    // init fused with the first propagation round: every node starts at
-    // min(self, neighbors) — one aggregation over sym replaces both the
-    // distinct-nodes pass and the first loop round (any labeling between
-    // the identity and the fixed point converges to the same labels)
-    var labels = sym.groupBy(col("a"))
+    // undirected: propagate both ways. The job that materializes the
+    // symmetrised frame also counts it — the local-finish gate
+    val sym = IterCheckpoint.measure(
+      e.union(e.select(col("dst"), col("src"))).toDF("a", "b"))
+    if (LocalGraph.fits(sym)) local(sym.df, maxIterations)
+    else distributed(sym, maxIterations)
+  }
+
+  // init fused with the first propagation round: every node starts at
+  // min(self, neighbors) — one aggregation over sym replaces both the
+  // distinct-nodes pass and the first loop round (any labeling between
+  // the identity and the fixed point converges to the same labels)
+  private def initLabels(sym: DataFrame): DataFrame =
+    sym.groupBy(col("a"))
       .agg(least(col("a"), min(col("b"))).as("comp"))
       .withColumnRenamed("a", "node")
-      .iterCheckpoint()
+
+  /** The rounds of [[distributed]] replayed in one task, typed as its
+    * output. */
+  private def local(sym: DataFrame, maxIterations: Int): DataFrame =
+    LocalGraph.finish(sym, initLabels(sym).schema) { g =>
+      val (a, b) = (g.a, g.b)
+      var label = Array.range(0, g.nodes)
+      for (e <- a.indices) if (b(e) < label(a(e))) label(a(e)) = b(e)
+      var converged = false
+      var iter = 0
+      while (!converged && iter < maxIterations) {
+        val prop = label.clone()
+        for (e <- a.indices) if (label(b(e)) < prop(a(e))) prop(a(e)) = label(b(e))
+        val next = prop.map(c => math.min(c, prop(c)))
+        converged = java.util.Arrays.equals(next, label)
+        label = next
+        iter += 1
+      }
+      if (!converged) warnNotConverged(maxIterations)
+      (Array.range(0, g.nodes), label)
+    }
+
+  private def distributed(measured: IterCheckpoint.Measured, maxIterations: Int): DataFrame = {
+    // hash-partitioned by the per-round join key ONCE — the cached layout
+    // is reused by every round's neighbor-min join, so only the V-sized
+    // label side ever shuffles (the E-sized per-round exchange is gone;
+    // guide §2.4)
+    val sym = IterCheckpoint.keyedForReuse(measured, col("b"))
+    var labels = initLabels(sym).iterCheckpoint()
     var converged = false
     var iter = 0
     while (!converged && iter < maxIterations) {
@@ -80,13 +121,15 @@ object ConnectedComponents {
       labels = next.select(col("node"), col("comp"))
       iter += 1
     }
-    if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connected components did not converge in $maxIterations rounds " +
-          "— some cluster's diameter exceeds the cap; labels are partial")
+    if (!converged) warnNotConverged(maxIterations)
     sym.unpersist(false)
     labels
   }
+
+  private def warnNotConverged(maxIterations: Int): Unit =
+    org.slf4j.LoggerFactory.getLogger(getClass).warn(
+      s"connected components did not converge in $maxIterations rounds " +
+        "— some cluster's diameter exceeds the cap; labels are partial")
 
   /** Survivor selection: given near-dup pairs over a corpus, return the
     * corpus with one canonical row (min id) kept per duplicate cluster;

@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{col, count, lit, when}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
 
 /** Per-round materialization for the iterative family (PageRank, connected
@@ -38,6 +41,40 @@ object IterCheckpoint {
     }
   }
 
+  /** A frame materialized by [[measure]] with the row counts its
+    * materializing job observed — read synchronously from that job, unlike
+    * the block manager's storage info, which fills asynchronously and can
+    * read 0 right after the job. */
+  final case class Measured(df: DataFrame, rows: Long, nullRows: Long) {
+    /** Estimated size: rows × the planner's own per-row estimate for the
+      * frame's columns. */
+    def bytes: BigInt =
+      BigInt(rows) * EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output)
+
+    /** True when the frame fits one advisory partition
+      * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`), i.e. AQE would
+      * give it a single task anyway — the gate for finishing a fixpoint in
+      * one in-memory task. No knob of its own, and independent of cluster
+      * size. */
+    def fitsOnePartition: Boolean =
+      bytes <= df.sparkSession.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+  }
+
+  /** Materialize `df` through [[apply]] (so the reliable conf applies) and
+    * count its rows, and the rows holding any null, in the same job. */
+  def measure(df: DataFrame): Measured = measured(df, apply)
+
+  private def measured(df: DataFrame, materialize: DataFrame => DataFrame): Measured = {
+    val anyNull = df.columns
+      .map(c => col("`" + c.replace("`", "``") + "`").isNull)
+      .reduceOption(_ || _).getOrElse(lit(false))
+    val obs = new Observation(s"measure_${System.nanoTime()}")
+    val ck = materialize(df.observe(obs,
+      count(lit(1)).as("rows"), count(when(anyNull, 1)).as("null_rows")))
+    val m = obs.get
+    Measured(ck, m("rows").asInstanceOf[Long], m("null_rows").asInstanceOf[Long])
+  }
+
   /** Prepare a LOOP-INVARIANT frame for per-round joins on `keys`:
     * materialize it once, then cache (and eagerly fill) a copy
     * hash-partitioned by `keys` at a SIZE-DERIVED width. Cached that way,
@@ -45,7 +82,7 @@ object IterCheckpoint {
     * (label/frontier) side ever shuffles — the invariant-sized exchange
     * or rebroadcast the naive plan pays per round is gone (guide §2.4).
     * The caller unpersists the returned frame when the loop is done. */
-  def keyedForReuse(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
+  def keyedForReuse(df: DataFrame, keys: Column*): DataFrame = {
     // Materialize first: AQE coalesces the frame to its advisory
     // partition size, and that MEASURED count — not the static
     // spark.sql.shuffle.partitions — becomes the keyed width. A handful
@@ -69,10 +106,15 @@ object IterCheckpoint {
     // possibly under projections) skips the scratch copy entirely — its
     // partition count is already the AQE-coalesced one.
     IterRoundExplain.maybeDump(df)
-    val preMaterialized = materializedScan(df.queryExecution.analyzed)
-    val ck = if (preMaterialized) df else df.localCheckpoint(eager = true)
-    val n = math.max(1, ck.rdd.getNumPartitions)
-    val keyed = ck.repartition(n, keys: _*).persist(StorageLevel.MEMORY_AND_DISK)
+    if (materializedScan(df.queryExecution.analyzed)) keyedCopy(df, keys: _*)
+    else keyedForReuse(measured(df, _.localCheckpoint(eager = true)), keys: _*)
+  }
+
+  /** [[keyedForReuse]] over a frame [[measure]] materialized for this
+    * call alone (under the durability conf), which therefore acts as the
+    * scratch copy. */
+  def keyedForReuse(scratch: Measured, keys: Column*): DataFrame = {
+    val keyed = keyedCopy(scratch.df, keys: _*)
     // Scratch release is SIZE-GATED: below the threshold the cache fills
     // lazily on the first consumer (r17 behavior — an extra eager fill
     // job measured +8-13% on the sf0.1 graph family, pure action latency
@@ -81,9 +123,9 @@ object IterCheckpoint {
     // second E-sized resident copy is real memory — fill the cache now
     // and drop the scratch immediately; the one extra job is amortized
     // by the frame size that triggered it.
-    if (!preMaterialized && scratchBytes(ck) >= releaseThreshold(df)) {
+    if (scratch.bytes >= releaseThreshold(scratch.df)) {
       keyed.count()
-      releaseMaterialized(ck)
+      releaseMaterialized(scratch.df)
     }
     keyed
   }
@@ -93,27 +135,21 @@ object IterCheckpoint {
   private val ReleaseBytesDefault = 512L * 1024 * 1024
 
   private def releaseThreshold(df: DataFrame): Long =
-    df.sparkSession.conf.getOption(ReleaseBytesKey)
-      .map(_.toLong).getOrElse(ReleaseBytesDefault)
+    df.sparkSession.conf.getOption(ReleaseBytesKey).map { v =>
+      v.trim.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
+        s"$ReleaseBytesKey must be a non-negative byte count, got '$v'"))
+    }.getOrElse(ReleaseBytesDefault)
 
-  /** Stored size of an (eager) localCheckpoint's blocks. */
-  private def scratchBytes(ck: DataFrame): Long =
-    ck.queryExecution.analyzed match {
-      case l: LogicalRDD =>
-        ck.sparkSession.sparkContext.getRDDStorageInfo
-          .find(_.id == l.rdd.id).map(i => i.memSize + i.diskSize).getOrElse(0L)
-      case _ => 0L
-    }
-
-  /** Second keyed copy of an ALREADY-cached-and-filled invariant frame on
-    * a different key (HITS joins the edge set on opposite endpoints;
-    * betweenness's backward phase mirrors the forward copy): repartition
-    * straight off the existing cache — no fresh scratch materialization
-    * of the upstream derivation. */
-  def keyedCopy(cached: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame = {
+  /** Keyed copy of an ALREADY-materialized frame (a checkpoint, or a
+    * filled cache) at its own partition count: the last step of
+    * [[keyedForReuse]], and the second keyed copy of a cached invariant
+    * frame on a different key (HITS joins the edge set on opposite
+    * endpoints; betweenness's backward phase mirrors the forward copy) —
+    * no fresh scratch materialization of the upstream derivation. */
+  def keyedCopy(cached: DataFrame, keys: Column*): DataFrame = {
     val n = math.max(1, cached.rdd.getNumPartitions)
     // lazy fill: the first consumer's job repartitions straight off the
-    // source cache — no scratch copy exists here, so nothing to release
+    // materialized source
     cached.repartition(n, keys: _*).persist(StorageLevel.MEMORY_AND_DISK)
   }
 
@@ -140,9 +176,9 @@ object IterCheckpoint {
     * replace: `frame.iterCheckpoint()`. */
   implicit class IterCheckpointOps(private val df: DataFrame) extends AnyVal {
     def iterCheckpoint(): DataFrame = IterCheckpoint(df)
-    def keyedForReuse(keys: org.apache.spark.sql.Column*): DataFrame =
+    def keyedForReuse(keys: Column*): DataFrame =
       IterCheckpoint.keyedForReuse(df, keys: _*)
-    def keyedCopy(keys: org.apache.spark.sql.Column*): DataFrame =
+    def keyedCopy(keys: Column*): DataFrame =
       IterCheckpoint.keyedCopy(df, keys: _*)
   }
 }

@@ -20,7 +20,14 @@ import graft.operators.IterCheckpoint.IterCheckpointOps
   * depth (max core-shell chain), which is tiny on real graphs; the cap
   * is a safety net, and extra rounds past convergence are no-ops.
   *
-  * At 100 TB: per-round state is the (shrinking) edge list itself; the
+  * Size gate (shared with [[ConnectedComponents]]): the job that
+  * materializes the symmetrised edge frame also counts its rows; when it
+  * fits one advisory partition the peel rounds are replayed in one
+  * in-memory task ([[LocalGraph]]) instead of one eager job per three
+  * peels — same rows, cap and warning included.
+  *
+  * At 100 TB the gate fails on its first measurement and the distributed
+  * peel runs: per-round state is the (shrinking) edge list itself; the
   * keep-set is one BIGINT column of surviving nodes, broadcast by AQE
   * while it fits and a shuffled semi join beyond that — no driver-side
   * materialization at any size.
@@ -29,11 +36,50 @@ object KCore {
 
   /** @param edges two-column (src, dst) undirected pair frame
     * @return symmetric surviving edges (a, b) — both directions present;
-    *         per-node core degree is `count(*) GROUP BY a`. */
+    *         per-node core degree is `count(*) GROUP BY a`. Logs a warning
+    *         if the peel did not reach its fixed point within
+    *         `maxIterations` (the edges are then partial). */
   def coreEdges(edges: DataFrame, k: Int, maxIterations: Int = 20): DataFrame = {
     val e = edges.toDF("src", "dst")
-    var sym = e.union(e.select(col("dst"), col("src")))
-      .toDF("a", "b").iterCheckpoint()
+    // the job that materializes the symmetrised frame also counts it —
+    // the local-finish gate
+    val sym = IterCheckpoint.measure(
+      e.union(e.select(col("dst"), col("src"))).toDF("a", "b"))
+    if (LocalGraph.fits(sym)) local(sym.df, k, maxIterations)
+    else distributed(sym.df, k, maxIterations)
+  }
+
+  /** The rounds of [[distributed]] replayed in one task over a multiset
+    * edge list (duplicate edges and both halves of a self-loop count
+    * toward degree, as in the distributed aggregation). */
+  private def local(sym: DataFrame, k: Int, maxIterations: Int): DataFrame =
+    LocalGraph.finish(sym, sym.schema) { g =>
+      val (a, b) = (g.a, g.b)
+      val alive = Array.fill(a.length)(true)
+      val deg = new Array[Int](g.nodes)
+      def peel(): Unit = {
+        java.util.Arrays.fill(deg, 0)
+        for (e <- a.indices) if (alive(e)) deg(a(e)) += 1
+        for (e <- a.indices) if (alive(e)) alive(e) = deg(a(e)) >= k && deg(b(e)) >= k
+      }
+      var prevCount = -1L
+      var converged = false
+      var iter = 0
+      while (!converged && iter < maxIterations) {
+        val steps = math.min(3, maxIterations - iter)
+        (1 to steps).foreach(_ => peel())
+        val curCount = alive.count(identity).toLong
+        converged = curCount == prevCount || curCount == 0L
+        prevCount = curCount
+        iter += steps
+      }
+      if (!converged) warnNotConverged(maxIterations)
+      val kept = a.indices.filter(alive(_)).toArray
+      (kept.map(a(_)), kept.map(b(_)))
+    }
+
+  private def distributed(symmetrised: DataFrame, k: Int, maxIterations: Int): DataFrame = {
+    var sym = symmetrised
     // -1 sentinel: convergence is judged from the per-round Observation
     // alone (first round never matches), so no upfront count() pass
     var prevCount = -1L
@@ -67,6 +113,12 @@ object KCore {
       sym = next
       iter += steps
     }
+    if (!converged) warnNotConverged(maxIterations)
     sym
   }
+
+  private def warnNotConverged(maxIterations: Int): Unit =
+    org.slf4j.LoggerFactory.getLogger(getClass).warn(
+      s"k-core did not converge in $maxIterations rounds " +
+        "— the peel depth exceeds the cap; edges are partial")
 }

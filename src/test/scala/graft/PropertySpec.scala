@@ -6,7 +6,7 @@ import scala.util.Random
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{AsOfJoin, RangeJoin}
+import graft.operators.{AsOfJoin, ConnectedComponents, KCore, RangeJoin}
 
 /** Randomized equivalence: the distributed operators must agree with
   * naive single-machine reference implementations on arbitrary inputs —
@@ -22,6 +22,29 @@ class PropertySpec extends AnyFunSuite {
 
   private def randRows(r: Random, n: Int): List[(Long, Long)] =
     List.fill(n)((1L + r.nextInt(3), r.nextInt(121).toLong))
+
+  private val AdvisoryKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+  /** `build` on the single-task local finish (the default at these sizes)
+    * and again on the distributed loop, forced by a 1-byte advisory
+    * partition: both must give the same schema and the same multiset of
+    * rows. Returns the (two-id-column) rows as longs. */
+  private def bothPaths(build: => org.apache.spark.sql.DataFrame): Seq[(Long, Long)] = {
+    def run() = {
+      val df = build
+      def id(v: Any) = v.asInstanceOf[Number].longValue
+      (df.schema, df.collect().map(r => (id(r.get(0)), id(r.get(1)))).sorted.toSeq)
+    }
+    val (localSchema, localRows) = run()
+    val saved = spark.conf.getOption(AdvisoryKey)
+    spark.conf.set(AdvisoryKey, "1")
+    val (distSchema, distRows) =
+      try run()
+      finally saved.fold(spark.conf.unset(AdvisoryKey))(spark.conf.set(AdvisoryKey, _))
+    assert(localSchema === distSchema)
+    assert(localRows === distRows)
+    localRows
+  }
 
   test("asof join equals the naive per-row latest-preceding scan (12 random trials)") {
     val r = new Random(42)
@@ -123,11 +146,25 @@ class PropertySpec extends AnyFunSuite {
         val wantMin = want.groupBy(_._2).flatMap { case (_, m) =>
           val mn = m.keys.min; m.keys.map(_ -> mn)
         }
-        val got = graft.operators.ConnectedComponents
-          .components(edges.toDF("src", "dst"), maxIterations = nodes)
-          .as[(Long, Long)].collect().toMap
+        val got = bothPaths(ConnectedComponents
+          .components(edges.toDF("src", "dst"), maxIterations = nodes)).toMap
         assert(got === wantMin, s"edges: $edges")
       }
+    }
+  }
+
+  test("connected components: both paths return the same partial labels when the cap is hit") {
+    // a 40-node chain under scrambled ids needs ~log2(40) pointer-jumping
+    // rounds; caps 0-2 stop short of the fixed point
+    val ids = (0 until 40).map(i => 100L + (i * 17) % 41)
+    val chain = ids.zip(ids.tail).toDF("src", "dst")
+    val intChain = chain.select(chain.columns.map(c => chain(c).cast("int")): _*)
+    for (cap <- 0 to 2) {
+      val got = bothPaths(ConnectedComponents.components(chain, maxIterations = cap))
+      assert(got.map(_._1).toSet === ids.toSet)
+      assert(got.map(_._2).distinct.size > 1, s"cap $cap reached the fixed point")
+      // INT ids take the same path and keep their type
+      assert(bothPaths(ConnectedComponents.components(intChain, maxIterations = cap)) === got)
     }
   }
 
@@ -858,12 +895,39 @@ class PropertySpec extends AnyFunSuite {
           bad.foreach { n => adj(n).foreach(adj(_) -= n); adj -= n }
         }
         val want = adj.map { case (n, nb) => n -> nb.size.toLong }.toMap
-        val got = graft.operators.KCore
-          .coreEdges(edges.toDF("src", "dst"), k, maxIterations = nodes)
-          .groupBy("a").count().as[(Long, Long)].collect().toMap
+        val got = bothPaths(KCore
+          .coreEdges(edges.toDF("src", "dst"), k, maxIterations = nodes))
+          .groupBy(_._1).map { case (n, es) => n -> es.size.toLong }
         assert(got === want, s"trial $trial k=$k edges: $edges")
       }
     }
+  }
+
+  test("k-core keeps multiset degrees (duplicates, self-loops) and a hit cap on both paths") {
+    val r = new Random(43)
+    for (trial <- 1 to 6) {
+      val nodes = 4 + r.nextInt(12)
+      val k = 2 + r.nextInt(3)
+      // raw draws: duplicate edges and self-loops stay in
+      val edges = List.fill(10 + r.nextInt(30))(
+        (r.nextInt(nodes).toLong, r.nextInt(nodes).toLong))
+      // driver-side synchronous peel over the symmetrised multiset
+      var live = edges.flatMap { case (a, b) => List((a, b), (b, a)) }
+      var done = false
+      while (!done) {
+        val deg = live.groupBy(_._1).map { case (n, es) => n -> es.size }
+        val next = live.filter { case (a, b) => deg(a) >= k && deg(b) >= k }
+        done = next.size == live.size
+        live = next
+      }
+      val got = bothPaths(KCore.coreEdges(edges.toDF("src", "dst"), k, maxIterations = 50))
+      assert(got === live.sorted, s"trial $trial k=$k edges: $edges")
+    }
+    // a path's 2-core is empty, but each peel only strips its two ends:
+    // one or two peels leave partial edges
+    val path = (0L until 30L).map(i => (i, i + 1)).toDF("src", "dst")
+    for (cap <- 1 to 2)
+      assert(bothPaths(KCore.coreEdges(path, 2, maxIterations = cap)).size === 2 * (30 - 2 * cap))
   }
 
   test("jaro-winkler expression matches known values and a driver reference") {
