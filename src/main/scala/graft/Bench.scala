@@ -46,7 +46,7 @@ object Bench {
       val times = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 } catch {
-          case e: Throwable =>
+          case scala.util.control.NonFatal(e) =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             -1.0
         }

@@ -98,10 +98,10 @@ final class MRPipeline[K, V] private (
         // the reduce re-groups every combined run, so any ALGEBRAIC
         // combiner (the only kind a combiner may be) yields identical
         // final results — spec-asserted with a tiny flush threshold.
-        val maxBuffered = spark.conf
-          .get("graft.mr.combine.maxBuffered", (1 << 20).toString).toInt
-        require(maxBuffered > 0, // <= 0 would spin refill() forever
-          s"graft.mr.combine.maxBuffered must be positive, got $maxBuffered")
+        // must be positive: <= 0 would spin refill() forever
+        val maxBuffered = spark.conf.getOption("graft.mr.combine.maxBuffered")
+          .map(graft.ConfValue.positiveInt("graft.mr.combine.maxBuffered", _))
+          .getOrElse(1 << 20)
         rdd.mapPartitions { it =>
           new Iterator[(K, V)] {
             private var out: Iterator[(K, V)] = Iterator.empty

@@ -21,7 +21,9 @@ import graft.operators.IterCheckpoint.IterCheckpointOps
 object KTruss {
 
   /** @param edges canonical undirected (src, dst) pairs, src < dst
-    * @return surviving canonical edges with their in-truss support. */
+    * @return surviving canonical edges with their in-truss support. Logs
+    *         a warning if the peel did not converge within `maxIterations`
+    *         rounds (the edges are then partial). */
   def trussEdges(edges: DataFrame, k: Int, maxIterations: Int = 12): DataFrame = {
     var cur = edges.toDF("a", "b").iterCheckpoint()
     var lastWithSupport: DataFrame = null
@@ -53,6 +55,7 @@ object KTruss {
     // checkpointed (a, b, support) IS the final support — returning it
     // skips a whole adjacency-build + double-join pass. Only a capped-out
     // non-converged loop still needs the recompute over the final set.
+    if (!converged) warnNotConverged(maxIterations)
     if (converged && lastWithSupport != null) lastWithSupport
     else {
       val sym = cur.union(cur.select(col("b"), col("a"))).toDF("n", "m")
@@ -64,4 +67,9 @@ object KTruss {
           size(array_intersect(col("na"), col("nb"))).cast("long").as("support"))
     }
   }
+
+  private def warnNotConverged(maxIterations: Int): Unit =
+    org.slf4j.LoggerFactory.getLogger(getClass).warn(
+      s"k-truss did not converge in $maxIterations rounds " +
+        "— the peel depth exceeds the cap; edges are partial")
 }

@@ -1,7 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 
 import graft.streaming.EventStreams
 
@@ -31,10 +31,9 @@ object StreamQueries {
     * append mode the windows newer than the final watermark would be
     * withheld — correct for an unbounded run, wrong for a backfill
     * compare). */
-  private def runToMemory(s: SparkSession, df: DataFrame,
+  private[graft] def runToMemory(s: SparkSession, df: DataFrame,
       mode: OutputMode = OutputMode.Complete()): DataFrame = {
     val name = s"graft_stream_sink_${sinkCounter.incrementAndGet()}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt")
     // State-partition knob: a stateful op's partition count is fixed from
     // spark.sql.shuffle.partitions at FIRST start and pays a per-batch
     // per-partition state-store commit. A bounded backfill of one input
@@ -43,27 +42,49 @@ object StreamQueries {
     // STATE, and a live deployment sizes it up. Scoped set/restore: the
     // fixed count rides the checkpoint, not the session.
     // Default 8: measured 2.6× faster than 32 on the sf0.1 backfills
-    // (stream-stream joins 6.9 s → 2.4 s) — commit overhead, not data,
-    // bounds these runs. A live deployment overrides via the conf.
-    val stateParts = sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE")
-      .orElse(try { Option(s.conf.get("graft.stream.statePartitions")) }
-        catch { case _: Exception => None })
-      .orElse(Some("8"))
+    // (stream-stream joins 6.9 s → 2.4 s). Each commit writes and renames
+    // a handful of checkpoint files per partition; much of that per-file
+    // cost was a forked chmod/readlink process per call, which the
+    // fork-free `file:` scheme (Tuning, sources/LocalFs) now removes.
+    // A live deployment overrides via the conf.
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    stateParts.foreach(n => s.conf.set("spark.sql.shuffle.partitions", n))
+    s.conf.set("spark.sql.shuffle.partitions", statePartitions(s).toString)
     try {
-      val q = df.writeStream.format("memory").queryName(name)
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt.toString)
-        .start()
+      runAvailableNow("graft_stream_ckpt",
+        df.writeStream.format("memory").queryName(name).outputMode(mode))
+      s.table(name) // resolves to the sink's rows — keep the plan,
+    } finally {
+      s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      s.catalog.dropTempView(name) // drop the name (repeated runs must not
+    } //                               accumulate views in one JVM)
+  }
+
+  /** The state-partition count for [[runToMemory]]: the environment
+    * override, else the session conf, else 8. A value that is not a
+    * positive integer fails naming its key. */
+  private[graft] def statePartitions(s: SparkSession,
+      env: Map[String, String] = sys.env): Int =
+    env.get("SPARK_GRAFT_STREAM_SHUFFLE")
+      .map(graft.ConfValue.positiveInt("SPARK_GRAFT_STREAM_SHUFFLE", _))
+      .orElse(s.conf.getOption("graft.stream.statePartitions")
+        .map(graft.ConfValue.positiveInt("graft.stream.statePartitions", _)))
+      .getOrElse(8)
+
+  /** Run `writer` to completion under `Trigger.AvailableNow`, checkpointed
+    * to a fresh temp dir (`prefix*` under java.io.tmpdir). The query is
+    * stopped and the dir deleted whether it finishes or throws, so
+    * repeated and failed runs leave no checkpoints behind. */
+  private def runAvailableNow(prefix: String, writer: DataStreamWriter[Row]): Unit = {
+    val ckpt = java.nio.file.Files.createTempDirectory(prefix)
+    var q: StreamingQuery = null
+    try {
+      q = writer.trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt.toString).start()
       q.awaitTermination()
-    } finally stateParts.foreach(_ =>
-      s.conf.set("spark.sql.shuffle.partitions", prevParts))
-    val out = s.table(name) // resolves to the sink's rows — keep the plan,
-    s.catalog.dropTempView(name) // drop the name (repeated runs must not
-    deleteRecursively(ckpt) //     accumulate views/checkpoints in one JVM)
-    out
+    } finally {
+      if (q != null) q.stop()
+      deleteRecursively(ckpt)
+    }
   }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit = {
@@ -397,17 +418,11 @@ object StreamQueries {
     graft.sources.kv.KvStore.register(table, "user_id",
       latestPerKey(s.createDataFrame(
         s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stream.schema)).schema)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_upsert_ckpt")
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    runAvailableNow("graft_upsert_ckpt",
+      stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
         latestPerKey(batch).write.format("graft-kv")
           .option("table", table).mode("append").save()
-      }
-      .start()
-    q.awaitTermination()
-    deleteRecursively(ckpt)
+      })
   }
 
   val qStreamUpsertSql: String =
