@@ -1,21 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // n>=3 runs per query, report the per-query MIN: the minimum is the
     // least-contended observation and the only number comparable across
     // rounds in a shared sandbox (round-2 showed 4-39x swings on
     // byte-identical code from external contention).
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = Tuning.withClusterDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val runs = ConfValue.positiveInt("SPARK_GRAFT_BENCH_RUNS",
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3"))
+    val spark = Tuning.localSession().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JIT/codegen warmup so the first measured query doesn't absorb JVM
     // startup; standard steady-state measurement practice.

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 import graft.operators.IterRoundExplain
@@ -14,9 +13,8 @@ import graft.operators.IterRoundExplain
   *
   * Usage: runMain graft.PlanDump <names-csv> <outDir> <suffix>
   *
-  * Builds the SAME session as Bench (Tuning defaults, local[$CPUS],
-  * shuffle.partitions=$CPUS) so the captured plans are the plans the
-  * bench actually runs. For the iterative operators the returned frame
+  * Builds the SAME session as Bench (`Tuning.localSession`) so the
+  * captured plans are the plans the bench actually runs. For the iterative operators the returned frame
   * only shows the final stage; set `graft.iter.explainTo` (see
   * IterCheckpoint) to also capture every per-round plan as it is
   * materialized.
@@ -24,18 +22,11 @@ import graft.operators.IterRoundExplain
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names = args(0).split(',').toSeq
     val outDir = Paths.get(args(1))
     val suffix = if (args.length > 2) args(2) else ""
     Files.createDirectories(outDir)
-    val spark = Tuning.withClusterDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = Tuning.localSession().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { n =>
       val target = outDir.resolve(s"$n$suffix.txt")

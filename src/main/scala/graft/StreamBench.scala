@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
@@ -34,30 +34,27 @@ object StreamBench {
   // with batch size as the fixed per-batch state-commit cost amortizes —
   // measure at 4 (default, 8 batches) and 16 (2 batches) to see the curve
   private val FilesPerTrigger =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_FILES_PER_TRIGGER", "4").toInt
+    ConfValue.positiveInt("SPARK_GRAFT_STREAM_FILES_PER_TRIGGER",
+      sys.env.getOrElse("SPARK_GRAFT_STREAM_FILES_PER_TRIGGER", "4"))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val stateParts = sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8")
+    val stateParts = ConfValue.positiveInt("SPARK_GRAFT_STREAM_SHUFFLE",
+      sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
     // checkpoint-mode dial (SPARK_GRAFT_STREAM_CHANGELOG=true): RocksDB
     // changelog checkpointing commits per-batch delta files instead of
     // full snapshot uploads — the large-state deployment default, whose
     // commit cost stops scaling with state size. StreamingSpec pins the
     // two modes result- and metering-identical; this dial measures the
     // RATE side of the trade on the same three stateful families.
-    val changelog =
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_CHANGELOG", "false").toBoolean
-    val spark = Tuning.withClusterDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", stateParts)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val changelog = ConfValue.boolean("SPARK_GRAFT_STREAM_CHANGELOG",
+      sys.env.getOrElse("SPARK_GRAFT_STREAM_CHANGELOG", "false"))
+    val spark = Tuning.localSession()
+      .config("spark.sql.shuffle.partitions", stateParts.toLong)
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.sql.streaming.stateStore.rocksdb." +
         "changelogCheckpointing.enabled", changelog.toString)
-      .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
@@ -108,7 +105,8 @@ object StreamBench {
     // tens-of-MB snapshots never bottleneck the commit. This is the
     // "join full event payloads" production profile, not an artificial
     // shape. When set, only the wide join runs.
-    val padBytes = sys.env.getOrElse("SPARK_GRAFT_STREAM_PAD_BYTES", "0").toInt
+    val padBytes = Math.toIntExact(ConfValue.nonNegativeLong("SPARK_GRAFT_STREAM_PAD_BYTES",
+      sys.env.getOrElse("SPARK_GRAFT_STREAM_PAD_BYTES", "0")))
     // pad = CONCATENATED DISTINCT md5 blocks, not one block repeated:
     // RocksDB block compression flattens repetitive payloads ~8x, which
     // silently shrinks the on-disk state the dial exists to grow. The

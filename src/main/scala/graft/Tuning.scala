@@ -77,4 +77,22 @@ object Tuning {
     * after). */
   def withClusterDefaults(b: SparkSession.Builder): SparkSession.Builder =
     clusterDefaults.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  /** Environment variable: cores of the local master (default 4). */
+  val CpusEnv = "SPARK_GRAFT_CPUS"
+
+  /** The builder of the one local session Bench, Verify, PlanDump and
+    * StreamBench run: the defaults above on `local[$SPARK_GRAFT_CPUS]`,
+    * one shuffle partition per core, nanosecond parquet timestamps read as
+    * longs, no UI, and the Graft extensions. Callers may add config before
+    * `getOrCreate()`. */
+  def localSession(env: Map[String, String] = sys.env): SparkSession.Builder = {
+    val cpus = ConfValue.positiveInt(CpusEnv, env.getOrElse(CpusEnv, "4"))
+    withClusterDefaults(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
+  }
 }

@@ -8,14 +8,7 @@ import scala.util.control.NonFatal
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Tuning.withClusterDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = Tuning.localSession().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Dev-only subset filter (SPARK_GRAFT_ONLY=q_a,q_b): the driver never
     // sets it, so its runs always dump the full suite.

@@ -72,7 +72,7 @@ object ConnectedComponents {
         label = next
         iter += 1
       }
-      if (!converged) warnNotConverged(maxIterations)
+      if (!converged) Fixpoint.warnCapHit(this, capMessage(maxIterations))
       (Array.range(0, g.nodes), label)
     }
 
@@ -82,10 +82,14 @@ object ConnectedComponents {
     // label side ever shuffles (the E-sized per-round exchange is gone;
     // guide §2.4)
     val sym = IterCheckpoint.keyedForReuse(measured, col("b"))
-    var labels = initLabels(sym).iterCheckpoint()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIterations) {
+    val init = initLabels(sym).iterCheckpoint()
+    // the convergence probe rides the checkpoint job as an observed
+    // metric — no separate action per round
+    val changed = Fixpoint.Probe(
+      Seq(sum(when(col("comp") =!= col("prev"), 1L).otherwise(0L)).as("changed")),
+      (_, cur) => cur.getAs[Long]("changed") == 0L)
+    val run = Fixpoint.run(init, maxIterations, 1, Some(changed)) { (st, _) =>
+      val labels = st.select(col("node"), col("comp"))
       val neighborMin = sym
         .join(labels.withColumnRenamed("node", "b"), "b")
         .groupBy(col("a").as("node")).agg(min(col("comp")).as("ncomp"))
@@ -106,30 +110,19 @@ object ConnectedComponents {
       // rounds drop from O(diameter) to O(log diameter), which is the
       // difference between 11 rounds and 4 on a chain-shaped cluster.
       val jump = prop.select(col("node").as("comp"), col("comp").as("jcomp"))
-      // the convergence probe rides the checkpoint job as an observed
-      // metric — no separate action per round
-      val obs = new org.apache.spark.sql.Observation(
-        s"cc_conv_${iter}_${System.nanoTime()}")
-      val next = prop.join(jump, Seq("comp"), "left")
+      prop.join(jump, Seq("comp"), "left")
         .select(col("node"),
           least(col("comp"), coalesce(col("jcomp"), col("comp"))).as("comp"),
           col("prev"))
-        .observe(obs,
-          sum(when(col("comp") =!= col("prev"), 1L).otherwise(0L)).as("changed"))
-        .iterCheckpoint()
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
-      labels = next.select(col("node"), col("comp"))
-      iter += 1
     }
-    if (!converged) warnNotConverged(maxIterations)
+    if (!run.converged) Fixpoint.warnCapHit(this, capMessage(maxIterations))
     sym.unpersist(false)
-    labels
+    run.state.select(col("node"), col("comp"))
   }
 
-  private def warnNotConverged(maxIterations: Int): Unit =
-    org.slf4j.LoggerFactory.getLogger(getClass).warn(
-      s"connected components did not converge in $maxIterations rounds " +
-        "— some cluster's diameter exceeds the cap; labels are partial")
+  private def capMessage(maxIterations: Int): String =
+    s"connected components did not converge in $maxIterations rounds " +
+      "— some cluster's diameter exceeds the cap; labels are partial"
 
   /** Survivor selection: given near-dup pairs over a corpus, return the
     * corpus with one canonical row (min id) kept per duplicate cluster;

@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.execution.LogicalRDD
@@ -22,6 +25,11 @@ import org.apache.spark.storage.StorageLevel
   * checkpoint files, at the cost of a write per round. Unset (the local
   * test default) the behavior and plans are byte-identical to before the
   * option existed (IterCheckpointSpec pins both).
+  *
+  * [[observed]] materializes a frame and reads aggregates over its rows
+  * from the same job — the convergence probe of every iterative loop.
+  * [[Fixpoint]] is the loop itself: it composes the rounds, checkpoints
+  * through here and stops at the fixed point or the cap.
   */
 object IterCheckpoint {
   /** Session-conf key; value = reliable checkpoint directory. */
@@ -68,11 +76,22 @@ object IterCheckpoint {
     val anyNull = df.columns
       .map(c => col("`" + c.replace("`", "``") + "`").isNull)
       .reduceOption(_ || _).getOrElse(lit(false))
-    val obs = new Observation(s"measure_${System.nanoTime()}")
-    val ck = materialize(df.observe(obs,
-      count(lit(1)).as("rows"), count(when(anyNull, 1)).as("null_rows")))
-    val m = obs.get
-    Measured(ck, m("rows").asInstanceOf[Long], m("null_rows").asInstanceOf[Long])
+    val (ck, m) = observedBy(materialize)(df,
+      count(lit(1)).as("rows"), count(when(anyNull, 1)).as("null_rows"))
+    Measured(ck, m.getAs[Long]("rows"), m.getAs[Long]("null_rows"))
+  }
+
+  /** Materialize `df` through [[apply]] and read `metrics` — aggregates
+    * over its rows, observed by the materializing job itself, so a probe
+    * costs no action of its own. */
+  def observed(df: DataFrame, metrics: Column*): (DataFrame, Row) =
+    observedBy(apply)(df, metrics: _*)
+
+  private def observedBy(materialize: DataFrame => DataFrame)(
+      df: DataFrame, metrics: Column*): (DataFrame, Row) = {
+    val obs = new Observation()
+    val ck = materialize(df.observe(obs, metrics.head, metrics.tail: _*))
+    (ck, Await.result(obs.future, Duration.Inf))
   }
 
   /** Prepare a LOOP-INVARIANT frame for per-round joins on `keys`:
@@ -135,10 +154,9 @@ object IterCheckpoint {
   private val ReleaseBytesDefault = 512L * 1024 * 1024
 
   private def releaseThreshold(df: DataFrame): Long =
-    df.sparkSession.conf.getOption(ReleaseBytesKey).map { v =>
-      v.trim.toLongOption.filter(_ >= 0).getOrElse(throw new IllegalArgumentException(
-        s"$ReleaseBytesKey must be a non-negative byte count, got '$v'"))
-    }.getOrElse(ReleaseBytesDefault)
+    df.sparkSession.conf.getOption(ReleaseBytesKey)
+      .map(graft.ConfValue.nonNegativeLong(ReleaseBytesKey, _))
+      .getOrElse(ReleaseBytesDefault)
 
   /** Keyed copy of an ALREADY-materialized frame (a checkpoint, or a
     * filled cache) at its own partition count: the last step of

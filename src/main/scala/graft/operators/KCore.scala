@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.IterCheckpoint.IterCheckpointOps
 
 /** K-core decomposition by iterative peeling — the density filter used on
   * similarity/co-occurrence graphs before community detection or dedup
@@ -73,25 +72,20 @@ object KCore {
         prevCount = curCount
         iter += steps
       }
-      if (!converged) warnNotConverged(maxIterations)
+      if (!converged) Fixpoint.warnCapHit(this, capMessage(maxIterations))
       val kept = a.indices.filter(alive(_)).toArray
       (kept.map(a(_)), kept.map(b(_)))
     }
 
-  private def distributed(symmetrised: DataFrame, k: Int, maxIterations: Int): DataFrame = {
-    var sym = symmetrised
-    // -1 sentinel: convergence is judged from the per-round Observation
-    // alone (first round never matches), so no upfront count() pass
-    var prevCount = -1L
-    var converged = false
-    var iter = 0
+  private def distributed(sym: DataFrame, k: Int, maxIterations: Int): DataFrame = {
     // One peel as a pure plan transform; THREE peels ride each checkpoint
     // job (one step deeper than the BFS/SSSP double-step — peeling has no
     // frontier join that grows with batched steps, so the probe cadence
     // can stretch further and trim a third of the per-round job overhead).
     // The surviving-edge count is MONOTONE non-increasing, so an
     // unchanged count three peels apart pins the peels between as well —
-    // the fixed-point test stays sound.
+    // the fixed-point test stays sound. Convergence is judged from the
+    // observed counts alone — no upfront count() pass.
     def peel(g: DataFrame): DataFrame = {
       val keep = g.groupBy(col("a")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("a"))
@@ -99,26 +93,12 @@ object KCore {
         .join(keep.withColumnRenamed("a", "b"), Seq("b"), "left_semi")
         .select(col("a"), col("b"))
     }
-    while (!converged && iter < maxIterations) {
-      val steps = math.min(3, maxIterations - iter)
-      val stepped = (1 to steps).foldLeft(sym)((g, _) => peel(g))
-      val obs = new org.apache.spark.sql.Observation(
-        s"kcore_${iter}_${System.nanoTime()}")
-      val next = stepped
-        .observe(obs, count(lit(1)).as("m"))
-        .iterCheckpoint()
-      val curCount = obs.get("m").asInstanceOf[Long]
-      converged = curCount == prevCount || curCount == 0L
-      prevCount = curCount
-      sym = next
-      iter += steps
-    }
-    if (!converged) warnNotConverged(maxIterations)
-    sym
+    val run = Fixpoint.run(sym, maxIterations, 3, Some(Fixpoint.rowsStable))((g, _) => peel(g))
+    if (!run.converged) Fixpoint.warnCapHit(this, capMessage(maxIterations))
+    run.state
   }
 
-  private def warnNotConverged(maxIterations: Int): Unit =
-    org.slf4j.LoggerFactory.getLogger(getClass).warn(
-      s"k-core did not converge in $maxIterations rounds " +
-        "— the peel depth exceeds the cap; edges are partial")
+  private def capMessage(maxIterations: Int): String =
+    s"k-core did not converge in $maxIterations rounds " +
+      "— the peel depth exceeds the cap; edges are partial"
 }

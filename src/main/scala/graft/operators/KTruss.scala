@@ -25,51 +25,31 @@ object KTruss {
     *         a warning if the peel did not converge within `maxIterations`
     *         rounds (the edges are then partial). */
   def trussEdges(edges: DataFrame, k: Int, maxIterations: Int = 12): DataFrame = {
-    var cur = edges.toDF("a", "b").iterCheckpoint()
-    var lastWithSupport: DataFrame = null
-    var prevCount = -1L
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIterations) {
+    def withSupport(cur: DataFrame): DataFrame = {
       val sym = cur.union(cur.select(col("b"), col("a"))).toDF("n", "m")
       val adj = sym.groupBy(col("n")).agg(sort_array(collect_list(col("m"))).as("nbrs"))
-      val obs = new org.apache.spark.sql.Observation(
-        s"ktruss_${iter}_${System.nanoTime()}")
-      val next = cur
+      cur
         .join(adj.select(col("n").as("a"), col("nbrs").as("na")), Seq("a"))
         .join(adj.select(col("n").as("b"), col("nbrs").as("nb")), Seq("b"))
         .withColumn("support", size(array_intersect(col("na"), col("nb"))).cast("long"))
+    }
+    val run = Fixpoint.run(edges.toDF("a", "b").iterCheckpoint(), maxIterations, 1,
+        Some(Fixpoint.rowsStable)) { (st, _) =>
+      withSupport(st.select(col("a"), col("b")))
         .filter(col("support") >= k - 2)
         .select(col("a"), col("b"), col("support"))
-        .observe(obs, count(lit(1)).as("m"))
-        .iterCheckpoint()
-      val curCount = obs.get("m").asInstanceOf[Long]
-      converged = curCount == prevCount || curCount == 0L
-      prevCount = curCount
-      lastWithSupport = next
-      cur = next.select(col("a"), col("b"))
-      iter += 1
     }
     // Converged exit: the last round kept the SAME edge set it scored
     // (|S_i| = |S_{i-1}| and S_i ⊆ S_{i-1} force S_i = S_{i-1}), so its
     // checkpointed (a, b, support) IS the final support — returning it
     // skips a whole adjacency-build + double-join pass. Only a capped-out
     // non-converged loop still needs the recompute over the final set.
-    if (!converged) warnNotConverged(maxIterations)
-    if (converged && lastWithSupport != null) lastWithSupport
+    if (run.converged) run.state
     else {
-      val sym = cur.union(cur.select(col("b"), col("a"))).toDF("n", "m")
-      val adj = sym.groupBy(col("n")).agg(sort_array(collect_list(col("m"))).as("nbrs"))
-      cur
-        .join(adj.select(col("n").as("a"), col("nbrs").as("na")), Seq("a"))
-        .join(adj.select(col("n").as("b"), col("nbrs").as("nb")), Seq("b"))
-        .select(col("a"), col("b"),
-          size(array_intersect(col("na"), col("nb"))).cast("long").as("support"))
+      Fixpoint.warnCapHit(this, s"k-truss did not converge in $maxIterations rounds " +
+        "— the peel depth exceeds the cap; edges are partial")
+      withSupport(run.state.select(col("a"), col("b")))
+        .select(col("a"), col("b"), col("support"))
     }
   }
-
-  private def warnNotConverged(maxIterations: Int): Unit =
-    org.slf4j.LoggerFactory.getLogger(getClass).warn(
-      s"k-truss did not converge in $maxIterations rounds " +
-        "— the peel depth exceeds the cap; edges are partial")
 }

@@ -29,7 +29,7 @@ object LabelPropagation {
     val sym = e.union(e.select(col("dst"), col("src"))).toDF("a", "b")
       .transform(IterCheckpoint.keyedForReuse(_, col("b")))
     val sd = seeds.toDF("node", "lab")
-    var labels = sym.select(col("a").as("node")).distinct()
+    val init = sym.select(col("a").as("node")).distinct()
       .join(sd, Seq("node"), "left")
       .iterCheckpoint()
     // One synchronous round as a pure plan transform; TWO rounds ride
@@ -58,13 +58,7 @@ object LabelPropagation {
       l.join(winner, Seq("node"), "left")
         .select(col("node"), coalesce(col("lab"), col("wlab")).as("lab"))
     }
-    var done = 0
-    while (done < rounds) {
-      val steps = math.min(2, rounds - done)
-      labels = (1 to steps).foldLeft(labels)((l, _) => step(l))
-        .iterCheckpoint()
-      done += steps
-    }
+    val labels = Fixpoint.run(init, rounds, 2)((l, _) => step(l)).state
     sym.unpersist(false)
     labels
   }

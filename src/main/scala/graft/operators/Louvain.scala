@@ -87,8 +87,8 @@ object Louvain {
     // round cost is the three keyed aggregations, not the broadcast —
     // kept for the simpler per-round plan.)
     val m2: Long = k.agg(sum(col("k"))).head().getLong(0)
-    var labels = k.select(col("node"), col("node").as("comm")).iterCheckpoint()
-    for (r <- 0 until rounds) {
+    val init = k.select(col("node"), col("node").as("comm")).iterCheckpoint()
+    val moved = Fixpoint.run(init, rounds, 1) { (labels, r) =>
       val vol = labels.join(k, Seq("node"))
         .groupBy(col("comm")).agg(sum(col("k")).as("vol"))
       // weight from each node to each NEIGHBOR community, plus the node's
@@ -115,14 +115,13 @@ object Louvain {
         .agg(max(struct(col("score"), (-col("comm")).as("nc"))).as("b"),
           first(col("c0")).as("c0"))
         .select(col("node"), (-col("b.nc")).as("bcomm"), col("c0"))
-      labels = best.select(col("node"),
+      best.select(col("node"),
         when(pmod(col("node"), lit(2)) === lit(r % 2), col("bcomm"))
           .otherwise(col("c0")).as("comm"))
-        .iterCheckpoint()
-    }
+    }.state
     sym.unpersist(false)
     k.unpersist(false)
-    labels
+    moved
   }
 
   /** Collapse communities into supernodes: inter-community edges sum

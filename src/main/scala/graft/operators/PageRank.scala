@@ -43,7 +43,7 @@ object PageRank {
     // logical plan each round — persist only caches physical results, so
     // the analyzer/optimizer would still walk an ever-deeper join tree
     // (and eventually OOM the driver around ~20 iterations).
-    var ranks = nodes.withColumn("rank", lit(1.0)).iterCheckpoint()
+    val init = nodes.withColumn("rank", lit(1.0)).iterCheckpoint()
     def step(r: DataFrame): DataFrame = {
       val contribs = weighted
         .join(r.withColumnRenamed("node", "src"), "src")
@@ -56,13 +56,7 @@ object PageRank {
     // Double-step: two rank updates per checkpoint job (same cadence as
     // BFS/SSSP/k-core) — identical math, a 2-deep plan per action, half
     // the job-submission overhead that dominates at toy scale.
-    var i = 0
-    while (i < iterations) {
-      val twoLeft = i + 1 < iterations
-      ranks = (if (twoLeft) step(step(ranks)) else step(ranks))
-        .iterCheckpoint()
-      i += (if (twoLeft) 2 else 1)
-    }
+    val ranks = Fixpoint.run(init, iterations, 2)((r, _) => step(r)).state
     nodes.unpersist(false)
     weighted.unpersist(false)
     ranks
@@ -91,7 +85,7 @@ object PageRank {
       .transform(IterCheckpoint.keyedForReuse(_, col("src"))) // per-round join key — see pagerank above
     val isSeed = col("node").isin(seeds.map(java.lang.Long.valueOf): _*)
     val restart = when(isSeed, lit(1 - damping)).otherwise(lit(0.0))
-    var ranks = nodes
+    val init = nodes
       .withColumn("rank", when(isSeed, lit(1.0)).otherwise(lit(0.0)))
       .iterCheckpoint()
     def step(r: DataFrame): DataFrame = {
@@ -103,13 +97,7 @@ object PageRank {
         .select(col("node"),
           (restart + lit(damping) * coalesce(col("s"), lit(0.0))).as("rank"))
     }
-    var i = 0
-    while (i < iterations) {
-      val twoLeft = i + 1 < iterations
-      ranks = (if (twoLeft) step(step(ranks)) else step(ranks))
-        .iterCheckpoint()
-      i += (if (twoLeft) 2 else 1)
-    }
+    val ranks = Fixpoint.run(init, iterations, 2)((r, _) => step(r)).state
     nodes.unpersist(false)
     weighted.unpersist(false)
     ranks

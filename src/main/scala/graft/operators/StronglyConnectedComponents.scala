@@ -52,15 +52,17 @@ object StronglyConnectedComponents {
     // init fused with round one: F0(v) = min(v, out-neighbors) — labels
     // start at one-hop reach; isolated-as-source nodes (dst-only) get
     // their own id via the full outer union below
-    var labels = e.groupBy(col("src"))
+    val init = e.groupBy(col("src"))
       .agg(least(col("src"), min(col("dst"))).as("m"))
       .withColumnRenamed("src", "node")
       .union(e.select(col("dst").as("node"), col("dst").as("m")))
       .groupBy(col("node")).agg(min(col("m")).as("m"))
       .iterCheckpoint()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxRounds) {
+    val changed = Fixpoint.Probe(
+      Seq(sum(when(col("m") =!= col("prev"), 1L).otherwise(0L)).as("changed")),
+      (_, cur) => cur.getAs[Long]("changed") == 0L)
+    val run = Fixpoint.run(init, maxRounds, 1, Some(changed)) { (st, _) =>
+      val labels = st.select(col("node"), col("m"))
       // one hop: m'(v) = min(m(v), m(out-neighbors))
       val hop = e.join(labels.withColumnRenamed("node", "dst"), "dst")
         .groupBy(col("src").as("node")).agg(min(col("m")).as("hm"))
@@ -83,24 +85,15 @@ object StronglyConnectedComponents {
       // query at sf0.1, 21→23 per plans/r18/q_scc_{before,after}.txt,
       // against the 2× per-round action cut; whole-query −19% A/B).
       val jump = labels.select(col("m").as("jm"), col("node").as("m"))
-      val obs = new org.apache.spark.sql.Observation(
-        s"scc_reach_${iter}_${System.nanoTime()}")
-      val next = m1.join(jump, Seq("m"), "left")
+      m1.join(jump, Seq("m"), "left")
         .select(col("node"),
           least(col("m"), coalesce(col("jm"), col("m"))).as("m"),
           col("prev"))
-        .observe(obs,
-          sum(when(col("m") =!= col("prev"), 1L).otherwise(0L)).as("changed"))
-        .iterCheckpoint()
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
-      labels = next.select(col("node"), col("m"))
-      iter += 1
     }
     e.unpersist(false)
-    if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"scc min-reach did not converge in $maxRounds rounds; labels partial")
-    labels
+    if (!run.converged)
+      Fixpoint.warnCapHit(this, s"scc min-reach did not converge in $maxRounds rounds; labels partial")
+    run.state.select(col("node"), col("m"))
   }
 
   /** @param edges two-column (src, dst) directed edge frame
@@ -112,15 +105,13 @@ object StronglyConnectedComponents {
     import spark.implicits._
     // the emptiness probe rides the checkpoint job as an observed metric
     // (here and per outer round below) — no separate isEmpty action
-    val obs0 = new org.apache.spark.sql.Observation(
-      s"scc_rem_init_${System.nanoTime()}")
-    var remaining = edges.toDF("src", "dst")
-      .filter(col("src") =!= col("dst")).distinct()
-      .observe(obs0, count(lit(1)).as("n"))
-      .iterCheckpoint()
+    val edgeCount = count(lit(1)).as("n")
+    val (rem0, n0) = IterCheckpoint.observed(edges.toDF("src", "dst")
+      .filter(col("src") =!= col("dst")).distinct(), edgeCount)
+    var remaining = rem0
     var settled: DataFrame = Seq.empty[(Long, Long)].toDF("node", "scc")
     var outer = 0
-    var done = obs0.get("n").asInstanceOf[Long] == 0L
+    var done = n0.getAs[Long]("n") == 0L
     while (!done && outer < maxOuterRounds) {
       val fwd = minReach(remaining, maxPropRounds)
         .withColumnRenamed("m", "f")
@@ -149,14 +140,11 @@ object StronglyConnectedComponents {
           .select(col("node"), col("f").as("scc")))
       val open = verdicts.filter(col("f") =!= col("g"))
         .select(col("node"))
-      val obsR = new org.apache.spark.sql.Observation(
-        s"scc_rem_${outer}_${System.nanoTime()}")
-      remaining = colored
+      val (rem, n) = IterCheckpoint.observed(colored
         .join(open.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
         .join(open.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .observe(obsR, count(lit(1)).as("n"))
-        .iterCheckpoint()
+        .select(col("src"), col("dst")), edgeCount)
+      remaining = rem
       // nodes still open but with no surviving edge are singleton SCCs
       val isolated = open
         .join(remaining.select(col("src").as("node")), Seq("node"), "left_anti")
@@ -170,12 +158,11 @@ object StronglyConnectedComponents {
         .union(isolated.select(col("node"), col("node").as("scc")))
       fwd.unpersist(false)
       colored.unpersist(false)
-      done = obsR.get("n").asInstanceOf[Long] == 0L
+      done = n.getAs[Long]("n") == 0L
       outer += 1
     }
     if (!done)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"scc did not settle every node in $maxOuterRounds outer rounds")
+      Fixpoint.warnCapHit(this, s"scc did not settle every node in $maxOuterRounds outer rounds")
     settled
   }
 }

@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.{Fixpoint, IterCheckpoint}
 import graft.operators.IterCheckpoint.IterCheckpointOps
 
 /** Graph analytics beyond the reference's simplified PageRank
@@ -490,12 +491,9 @@ object GraphQueries {
       .unionAll(edges.select(col("dst").as("a"), col("src").as("b")))
       .keyedForReuse(col("a"))
     val nodes = sym.select(col("a").as("node")).distinct()
-    var dist = nodes.withColumn("dist",
+    val init = nodes.withColumn("dist",
       when(col("node") === source, lit(0L)).otherwise(lit(null).cast("long")))
       .iterCheckpoint()
-    var reached = 1L
-    var round = 0
-    var growing = true
     // One frontier expansion as a pure plan transform — TWO of these ride
     // each checkpoint job (lazy composition), halving the per-round job
     // overhead that dominates at toy scale without touching the 100 TB
@@ -513,29 +511,21 @@ object GraphQueries {
           when(col("dist").isNotNull, col("dist"))
             .otherwise(col("mn") + 1L).as("dist"))
     }
-    while (round < maxRounds && growing) {
-      val steps = if (round + 1 < maxRounds) 2 else 1
-      val stepped = (1 to steps).foldLeft(dist)((d, _) => expand(d))
-      // the reached-count probe rides the checkpoint job as an observed
-      // metric (the CC discipline) — no separate action per round pair.
-      // reached is MONOTONE non-decreasing, so equality two rounds apart
-      // implies equality at the round between: still a sound fixed-point
-      // test, and for BFS a non-growing frontier IS completion.
-      val obs = new org.apache.spark.sql.Observation(
-        s"bfs_conv_${round}_${System.nanoTime()}")
-      val next = stepped
-        .observe(obs,
-          sum(when(col("dist").isNotNull, 1L).otherwise(0L)).as("reached"))
-        .iterCheckpoint()
-      val nowReached = obs.get("reached").asInstanceOf[Long]
-      growing = nowReached > reached
-      reached = nowReached
-      dist = next
-      round += steps
-    }
+    // the reached-count probe rides the checkpoint job as an observed
+    // metric (the CC discipline) — no separate action per round pair.
+    // reached is MONOTONE non-decreasing, so equality two rounds apart
+    // implies equality at the round between: still a sound fixed-point
+    // test, and for BFS a non-growing frontier IS completion (the source
+    // alone is reached before the first pair).
+    val stalled = Fixpoint.Probe(Seq(reachedCount), (prev, cur) =>
+      cur.getAs[Long]("reached") <= prev.fold(1L)(_.getAs[Long]("reached")))
+    val dist = Fixpoint.run(init, maxRounds, 2, Some(stalled))((d, _) => expand(d)).state
     sym.unpersist(false) // dist is checkpointed — the cache can go now
     dist.filter(col("dist").isNotNull)
   }
+
+  private def reachedCount: Column =
+    sum(when(col("dist").isNotNull, 1L).otherwise(0L)).as("reached")
 
   // ── Weighted single-source shortest paths (Bellman–Ford rounds) ────────
   // BFS's weighted sibling: synchronous relaxation rounds — every round,
@@ -557,12 +547,9 @@ object GraphQueries {
       .unionAll(edges.select(col("dst").as("a"), col("src").as("b"), col("w")))
       .keyedForReuse(col("a"))
     val nodes = sym.select(col("a").as("node")).distinct()
-    var dist = nodes.withColumn("dist",
+    val init = nodes.withColumn("dist",
       when(col("node") === source, lit(0L)).otherwise(lit(null).cast("long")))
       .iterCheckpoint()
-    var fixed = (-1L, -1L)
-    var round = 0
-    var changing = true
     // One relaxation round as a pure plan transform — TWO per checkpoint
     // job (same double-step as BFS): reached is monotone non-decreasing
     // and, once reached is stable, total is monotone non-increasing, so
@@ -579,25 +566,13 @@ object GraphQueries {
             .when(col("mn").isNull, col("dist"))
             .otherwise(least(col("dist"), col("mn"))).as("dist"))
     }
-    while (round < maxRounds && changing) {
-      val steps = if (round + 1 < maxRounds) 2 else 1
-      val stepped = (1 to steps).foldLeft(dist)((d, _) => relaxOnce(d))
-      // convergence probe (reached count, total distance) observed on the
-      // checkpoint job itself — no separate action per round pair
-      val obs = new org.apache.spark.sql.Observation(
-        s"sssp_conv_${round}_${System.nanoTime()}")
-      val next = stepped
-        .observe(obs,
-          sum(when(col("dist").isNotNull, 1L).otherwise(0L)).as("reached"),
-          sum(coalesce(col("dist"), lit(0L))).as("total"))
-        .iterCheckpoint()
-      val st = obs.get
-      val now = (st("reached").asInstanceOf[Long], st("total").asInstanceOf[Long])
-      changing = now != fixed
-      fixed = now
-      dist = next
-      round += steps
-    }
+    // convergence probe (reached count, total distance) observed on the
+    // checkpoint job itself — no separate action per round pair
+    def st(r: Row) = (r.getAs[Long]("reached"), r.getAs[Long]("total"))
+    val fixed = Fixpoint.Probe(
+      Seq(reachedCount, sum(coalesce(col("dist"), lit(0L))).as("total")),
+      (prev, cur) => prev.exists(st(_) == st(cur)))
+    val dist = Fixpoint.run(init, maxRounds, 2, Some(fixed))((d, _) => relaxOnce(d)).state
     sym.unpersist(false) // dist is checkpointed — the cache can go now
     dist.filter(col("dist").isNotNull)
   }
@@ -683,31 +658,24 @@ object GraphQueries {
       .filter(col("dist_a") + col("w") === col("dist"))
       .groupBy(col("node")).agg(min(col("a")).as("pred"))
     // state: seg = path over (anc, node] as "id->id->…"; rooted ⟺ anc=src
-    var st = dist.join(pred, Seq("node"), "left")
+    val init = dist.join(pred, Seq("node"), "left")
       .select(col("node"), col("dist"),
         coalesce(col("pred"), col("node")).as("anc"),
         col("node").cast("string").as("seg"))
       .iterCheckpoint()
-    var pending = -1L
-    var round = 0
-    while (pending != 0L && round < PathDoubleRounds) {
+    val rooted = Fixpoint.Probe(
+      Seq(sum(when(col("anc") === source, 0L).otherwise(1L)).as("pending")),
+      (_, cur) => cur.getAs[Long]("pending") == 0L)
+    val st = Fixpoint.run(init, PathDoubleRounds, 1, Some(rooted)) { (st, _) =>
       val byNode = st.select(col("node").as("anc"), col("anc").as("aanc"),
         col("seg").as("aseg"))
-      val obs = new org.apache.spark.sql.Observation(
-        s"sssp_path_${round}_${System.nanoTime()}")
-      val next = st.join(byNode, Seq("anc"), "left")
+      st.join(byNode, Seq("anc"), "left")
         .select(col("node"), col("dist"),
           when(col("anc") === source, col("anc"))
             .otherwise(col("aanc")).as("anc"),
           when(col("anc") === source, col("seg"))
             .otherwise(concat(col("aseg"), lit("->"), col("seg"))).as("seg"))
-        .observe(obs, sum(when(col("anc") === source, 0L).otherwise(1L))
-          .as("pending"))
-        .iterCheckpoint()
-      pending = obs.get("pending").asInstanceOf[Long]
-      st = next
-      round += 1
-    }
+    }.state
     st.filter(col("anc") === source)
       .select(col("node"), col("dist"),
         when(col("node") === source, col("seg"))
@@ -884,36 +852,29 @@ object GraphQueries {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var hub = nodes.withColumn("h", lit(1000000L))
     var auth = nodes.withColumn("a", lit(0L))
-    for (i <- 1 to iters) {
+    // normalization divisor from a half-step's observed max
+    def scale(mx: Row): Long =
+      Option(mx.getAs[java.lang.Long]("mx")).map(_.longValue).getOrElse(0L) / 1000000L + 1
+    for (_ <- 1 to iters) {
       // the normalization scalar rides the checkpoint job as an observed
       // metric (the BFS/SSSP convergence-probe discipline) instead of a
       // separate max() action per half-step, and the scaled projection
       // stays LAZY over the checkpointed raw frame — two driver actions
       // per iteration instead of six
-      val aObs = new org.apache.spark.sql.Observation(
-        s"hits_a_${i}_${System.nanoTime()}")
-      val aRaw = nodes.join(
+      val (aRaw, aMax) = IterCheckpoint.observed(nodes.join(
           eSrc.join(hub.select(col("node").as("src"), col("h")), Seq("src"))
             .groupBy(col("dst").as("node")).agg(sum(col("h")).as("ar")),
           Seq("node"), "left")
-        .select(col("node"), coalesce(col("ar"), lit(0L)).as("ar"))
-        .observe(aObs, max(col("ar")).as("mx"))
-        .iterCheckpoint()
-      val ka = (Option(aObs.get("mx").asInstanceOf[java.lang.Long])
-        .map(_.longValue).getOrElse(0L)) / 1000000L + 1
-      auth = aRaw.select(col("node"), expr(s"ar div ${ka}L").as("a"))
-      val hObs = new org.apache.spark.sql.Observation(
-        s"hits_h_${i}_${System.nanoTime()}")
-      val hRaw = nodes.join(
+        .select(col("node"), coalesce(col("ar"), lit(0L)).as("ar")),
+        max(col("ar")).as("mx"))
+      auth = aRaw.select(col("node"), expr(s"ar div ${scale(aMax)}L").as("a"))
+      val (hRaw, hMax) = IterCheckpoint.observed(nodes.join(
           eDst.join(auth.select(col("node").as("dst"), col("a")), Seq("dst"))
             .groupBy(col("src").as("node")).agg(sum(col("a")).as("hr")),
           Seq("node"), "left")
-        .select(col("node"), coalesce(col("hr"), lit(0L)).as("hr"))
-        .observe(hObs, max(col("hr")).as("mx"))
-        .iterCheckpoint()
-      val kh = (Option(hObs.get("mx").asInstanceOf[java.lang.Long])
-        .map(_.longValue).getOrElse(0L)) / 1000000L + 1
-      hub = hRaw.select(col("node"), expr(s"hr div ${kh}L").as("h"))
+        .select(col("node"), coalesce(col("hr"), lit(0L)).as("hr")),
+        max(col("hr")).as("mx"))
+      hub = hRaw.select(col("node"), expr(s"hr div ${scale(hMax)}L").as("h"))
     }
     // the final frame reads only the checkpointed score tables — release
     // the edge/node caches now (the Louvain-leak lesson from round 9)
@@ -1477,7 +1438,7 @@ object GraphQueries {
     val nodes = sym.select(col("a").as("node")).distinct()
     val seeds = nodes.orderBy(col("node").asc).limit(CentralitySeeds)
       .select(col("node").as("seed"))
-    var dist = nodes.crossJoin(broadcast(seeds))
+    val init = nodes.crossJoin(broadcast(seeds))
       .select(col("seed"), col("node"),
         when(col("node") === col("seed"), 0L)
           .otherwise(lit(null).cast("long")).as("dist"))
@@ -1493,24 +1454,9 @@ object GraphQueries {
           when(col("dist").isNotNull, col("dist"))
             .otherwise(col("mn") + 1L).as("dist"))
     }
-    var reached = -1L
-    var rnd = 0
-    var growing = true
-    while (rnd < CcRounds && growing) {
-      val steps = if (rnd + 1 < CcRounds) 2 else 1
-      val stepped = (1 to steps).foldLeft(dist)((dd, _) => expand(dd))
-      val obs = new org.apache.spark.sql.Observation(
-        s"closeness_conv_${rnd}_${System.nanoTime()}")
-      val next = stepped
-        .observe(obs,
-          sum(when(col("dist").isNotNull, 1L).otherwise(0L)).as("reached"))
-        .iterCheckpoint()
-      val now = obs.get("reached").asInstanceOf[Long]
-      growing = now != reached
-      reached = now
-      dist = next
-      rnd += steps
-    }
+    val stalled = Fixpoint.Probe(Seq(reachedCount), (prev, cur) =>
+      prev.exists(_.getAs[Long]("reached") == cur.getAs[Long]("reached")))
+    val dist = Fixpoint.run(init, CcRounds, 2, Some(stalled))((dd, _) => expand(dd)).state
     sym.unpersist(false) // dist is checkpointed — the cache can go now
     dist
   }
@@ -1663,7 +1609,7 @@ object GraphQueries {
     val seeds = nodes.orderBy(col("node").asc).limit(nSeeds)
       .select(col("node").as("seed"))
     // (seed, node, dist, sigma): dist null = unreached
-    var st = nodes.crossJoin(broadcast(seeds))
+    val init = nodes.crossJoin(broadcast(seeds))
       .select(col("seed"), col("node"),
         when(col("node") === col("seed"), 0L).otherwise(lit(null).cast("long"))
           .as("dist"),
@@ -1678,29 +1624,28 @@ object GraphQueries {
     // stacked lazily per checkpoint: the duplicated state references per
     // plan cost more than the saved actions, +6% drift-adjusted at
     // sf0.1 and +10% at sf1, so the single-step cadence stays.)
-    var r = 1
-    var growing = true
-    var maxDist = 0
-    while (r <= CcRounds && growing) {
+    // Round index i assigns level r = i + 1.
+    val noneAssigned = Fixpoint.Probe(
+      (i: Int) => Seq(sum(when(col("dist") === i + 1, 1L).otherwise(0L)).as("assigned")),
+      (_, cur) => cur.getAs[Long]("assigned") == 0L)
+    val fwd = Fixpoint.run(init, CcRounds, 1, Some(noneAssigned)) { (st, i) =>
+      val r = i + 1
       val frontier = st.filter(col("dist") === (r - 1))
         .select(col("seed"), col("node").as("a"), col("sigma").as("fs"))
       val contrib = sym.join(frontier, Seq("a"))
         .groupBy(col("seed"), col("b").as("node"))
         .agg(sum(col("fs")).as("sig"))
-      val obs = new org.apache.spark.sql.Observation(
-        s"betw_fwd_${r}_${System.nanoTime()}")
-      st = st.join(contrib, Seq("seed", "node"), "left")
+      st.join(contrib, Seq("seed", "node"), "left")
         .select(col("seed"), col("node"),
           when(col("dist").isNotNull, col("dist"))
             .when(col("sig").isNotNull, lit(r.toLong)).as("dist"),
           when(col("dist").isNotNull, col("sigma"))
             .when(col("sig").isNotNull, col("sig")).as("sigma"))
-        .observe(obs, sum(when(col("dist") === r, 1L).otherwise(0L)).as("assigned"))
-        .iterCheckpoint()
-      growing = obs.get("assigned").asInstanceOf[Long] > 0L
-      if (growing) maxDist = r
-      r += 1
     }
+    val st = fwd.state
+    // the last round that assigned a level (a converged run's last round
+    // assigned none)
+    val maxDist = if (fwd.converged) fwd.rounds - 1 else fwd.rounds
     // backward: δq per (seed, node), deepest reached level first (levels
     // beyond maxDist are empty — no-ops the oracle still unrolls)
     var dq = st.filter(col("dist").isNotNull)

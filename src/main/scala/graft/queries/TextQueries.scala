@@ -1549,7 +1549,6 @@ object TextQueries {
   private val TrTopK = 20
 
   def qTextrank(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.IterCheckpoint.IterCheckpointOps
     val adj = Tables.documents(s, d)
       .select(tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
@@ -1572,8 +1571,8 @@ object TextQueries {
     // bounded graph)
     val ew = e.join(wdeg, Seq("u"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var pr = wdeg.select(col("u").as("word"), lit(1000000L).as("pr"))
-    for (_ <- 1 to TrIters) {
+    val pr0 = wdeg.select(col("u").as("word"), lit(1000000L).as("pr"))
+    val pr = graft.operators.Fixpoint.run(pr0, TrIters, 1) { (pr, _) =>
       // per-edge product in DECIMAL(38,0): the oracle runs this chain in
       // HUGEINT, so a LongType w·850·pr that wraps past 2⁶³ would diverge
       // silently instead of erroring; decimal `div` truncates identically
@@ -1583,12 +1582,11 @@ object TextQueries {
           "(CAST(w AS DECIMAL(38,0)) * 850 * CAST(pr AS DECIMAL(38,0)))" +
             " div (1000 * wd)").as("c"))
         .groupBy(col("v")).agg(sum(col("c")).as("sc"))
-      pr = wdeg.select(col("u").as("word"))
+      wdeg.select(col("u").as("word"))
         .join(contrib.withColumnRenamed("v", "word"), Seq("word"), "left")
         .select(col("word"),
           (lit(150000L) + coalesce(col("sc"), lit(0L))).as("pr"))
-        .iterCheckpoint()
-    }
+    }.state
     val out = pr.orderBy(col("pr").desc, col("word").asc).limit(TrTopK)
       .withColumn("rnk", row_number().over(
         org.apache.spark.sql.expressions.Window

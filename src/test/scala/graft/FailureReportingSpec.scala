@@ -18,7 +18,7 @@ import graft.streaming.EventStreams.Event
 
 /** Nothing fails silently: bad settings name their key, failed queries
   * and streams are reported and clean up after themselves, and a capped
-  * k-truss says so. */
+  * k-truss, connected components or SCC min-reach says so. */
 class FailureReportingSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
@@ -49,14 +49,30 @@ class FailureReportingSpec extends AnyFunSuite {
       assert(StreamQueries.statePartitions(spark, Map(key -> "2")) === 2))
   }
 
-  test("graft.mr.combine.maxBuffered must be a positive integer") {
-    val key = "graft.mr.combine.maxBuffered"
-    val sum = (k: String, vs: Seq[Int]) => Iterator.single((k, vs.sum))
-    for (bad <- Seq("lots", "0", "-1"))
-      withConf(key, bad)(assertNamesKey(key)(
+  // (key, what it must be, bad values, good values, a parse of one value)
+  private val parsedKeys: Seq[(String, String, Seq[String], Seq[String], String => Any)] = Seq(
+    ("graft.mr.combine.maxBuffered", "a positive integer", Seq("lots", "0", "-1"), Nil, { (v: String) =>
+      val sum = (k: String, vs: Seq[Int]) => Iterator.single((k, vs.sum))
+      withConf("graft.mr.combine.maxBuffered", v)(
         mr.MRPipeline.fromPairs(spark, spark.sparkContext.parallelize(Seq("a" -> 1, "b" -> 2)))
-          .combineReduce(sum, sum, 2)))
-  }
+          .combineReduce(sum, sum, 2))
+    }),
+    (Tuning.CpusEnv, "a positive integer", Seq("", "four", "0", "-4"), Seq("1", " 8 "),
+      (v: String) => Tuning.localSession(Map(Tuning.CpusEnv -> v))),
+    ("SPARK_GRAFT_BENCH_RUNS", "a positive integer", Seq("three", "0", "2.5"), Seq("3"),
+      ConfValue.positiveInt("SPARK_GRAFT_BENCH_RUNS", _)),
+    ("SPARK_GRAFT_STREAM_FILES_PER_TRIGGER", "a positive integer", Seq("x", "0"), Seq("16"),
+      ConfValue.positiveInt("SPARK_GRAFT_STREAM_FILES_PER_TRIGGER", _)),
+    ("SPARK_GRAFT_STREAM_PAD_BYTES", "a non-negative integer", Seq("-1", "1k", ""), Seq("0", "1024"),
+      ConfValue.nonNegativeLong("SPARK_GRAFT_STREAM_PAD_BYTES", _)),
+    ("SPARK_GRAFT_STREAM_CHANGELOG", "true or false", Seq("yes", "1", ""), Seq("TRUE", "false"),
+      ConfValue.boolean("SPARK_GRAFT_STREAM_CHANGELOG", _)))
+
+  for ((key, what, bad, good, parse) <- parsedKeys)
+    test(s"$key must be $what") {
+      for (v <- bad) assertNamesKey(key)(parse(v))
+      good.foreach(parse)
+    }
 
   private def ckptDirs(): Set[String] =
     Option(Paths.get(System.getProperty("java.io.tmpdir")).toFile.list()).toSet.flatten
@@ -102,29 +118,54 @@ class FailureReportingSpec extends AnyFunSuite {
       Seq("q_fatal" -> ((_, _) => throw new LinkageError("fatal")))))
   }
 
-  test("k-truss logs a not-converged warning when the round cap is hit") {
-    val name = operators.KTruss.getClass.getName
-    val logger = LogManager.getContext(false).asInstanceOf[LoggerContext].getLogger(name)
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val appender = new AbstractAppender("ktruss-capture", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
-    }
-    appender.start()
-    logger.addAppender(appender)
-    try {
-      // K4: every edge has support 2, so k = 4 keeps all six edges; one
-      // round cannot tell that from a still-shrinking set
-      val k4 = for (a <- 0L to 3L; b <- (a + 1) to 3L) yield (a, b)
-      val edges = k4.toDF("src", "dst")
-      assert(operators.KTruss.trussEdges(edges, 4, maxIterations = 1).count() === 6)
-      assert(seen.stream().anyMatch(_.contains("k-truss did not converge in 1 rounds")))
-      seen.clear()
-      assert(operators.KTruss.trussEdges(edges, 4).count() === 6)
-      assert(!seen.stream().anyMatch(_.contains("did not converge")))
-    } finally {
-      logger.removeAppender(appender)
-      appender.stop()
-    }
+  // (label, operator, full warning of the capped run, a capped run, an uncapped run)
+  private val cappedRuns: Seq[(String, AnyRef, String, () => Unit, () => Unit)] = {
+    // K4: every edge has support 2, so k = 4 keeps all six edges; one
+    // round cannot tell that from a still-shrinking set
+    val k4 = (for (a <- 0L to 3L; b <- (a + 1) to 3L) yield (a, b)).toDF("src", "dst")
+    val chain = (0L until 12L).map(i => (i, i + 1)).toDF("src", "dst")
+    val cycle = (0L until 6L).map(i => (i, (i + 1) % 6)).toDF("src", "dst")
+    // 1-byte advisory partitions: CC takes its distributed loop
+    def distributedCc(cap: Int): Unit =
+      withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")(
+        assert(operators.ConnectedComponents.components(chain, cap).count() === 13))
+    Seq(
+      ("k-truss", operators.KTruss, "k-truss did not converge in 1 rounds " +
+          "— the peel depth exceeds the cap; edges are partial",
+        () => assert(operators.KTruss.trussEdges(k4, 4, maxIterations = 1).count() === 6),
+        () => assert(operators.KTruss.trussEdges(k4, 4).count() === 6)),
+      ("connected components", operators.ConnectedComponents,
+        "connected components did not converge in 1 rounds " +
+          "— some cluster's diameter exceeds the cap; labels are partial",
+        () => distributedCc(1), () => distributedCc(10)),
+      ("scc min-reach", operators.StronglyConnectedComponents,
+        "scc min-reach did not converge in 1 rounds; labels partial",
+        () => operators.StronglyConnectedComponents.components(cycle, maxPropRounds = 1).count(),
+        () => assert(operators.StronglyConnectedComponents.components(cycle)
+          .filter($"scc" === 0L).count() === 6)))
   }
+
+  for ((label, owner, message, capped, uncapped) <- cappedRuns)
+    test(s"$label logs a not-converged warning when the round cap is hit") {
+      val name = owner.getClass.getName
+      val logger = LogManager.getContext(false).asInstanceOf[LoggerContext].getLogger(name)
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+      val appender = new AbstractAppender(s"$label-capture", null, null, true,
+          Property.EMPTY_ARRAY) {
+        override def append(e: LogEvent): Unit =
+          seen.add(e.getLoggerName -> e.getMessage.getFormattedMessage)
+      }
+      appender.start()
+      logger.addAppender(appender)
+      try {
+        capped()
+        assert(seen.contains(name -> message), seen)
+        seen.clear()
+        uncapped()
+        assert(!seen.stream().anyMatch(_._2.contains("did not converge")), seen)
+      } finally {
+        logger.removeAppender(appender)
+        appender.stop()
+      }
+    }
 }
