@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{DotProduct, Md5Bits}
@@ -14,10 +14,13 @@ import graft.functions.{DotProduct, Md5Bits}
   * vectors in one top-k pass, then greedy farthest-point selection over
   * that driver-sized oversample — reproducible across runs and
   * executors, seeds spread across the data's extent, no global sort.
-  * Then `iterations` rounds of assign (one broadcast of k centroids, one
-  * codegen'd distance scan) + recompute (posexplode → one grouped
-  * aggregation per (cluster, dim)). Iterative-plan discipline:
-  * localCheckpoint per round, same as PageRank/ConnectedComponents.
+  * Then `iterations` rounds of assign (k centroids as plan-time
+  * literals, one codegen'd distance scan) + recompute (posexplode → one
+  * grouped aggregation per (cluster, dim)). The centroid table (k·dim
+  * doubles) stays on the driver between rounds, so every round plans
+  * fresh literals over the raw corpus: no per-round localCheckpoint,
+  * unlike PageRank/ConnectedComponents, whose per-round state is
+  * corpus-sized.
   *
   * Search (ivfSearch): corpus rows are bucketed by nearest centroid (the
   * inverted file); a query probes only its `nProbe` nearest cells, so the
@@ -33,13 +36,13 @@ object KMeans {
     * Each entry is `struct(score, cluster)`, so struct ordering = score
     * asc, tie-break cluster asc. */
   private[graft] def centroidScores(centroids: DataFrame,
-      v: org.apache.spark.sql.Column): Seq[org.apache.spark.sql.Column] =
+      v: Column): Seq[Column] =
     centroidScoresOf(
       centroids.select(col("cluster"), col("c")).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq, v)
 
-  private def centroidScoresOf(cents: Seq[(Long, Seq[Double])],
-      v: org.apache.spark.sql.Column): Seq[org.apache.spark.sql.Column] =
+  private[graft] def centroidScoresOf(cents: Seq[(Long, Seq[Double])],
+      v: Column): Seq[Column] =
     cents.sortBy(_._1)
       .map { case (cl, cv) =>
         // same left-to-right fold as DotProduct.dot → bit-identical c·c
@@ -48,12 +51,85 @@ object KMeans {
           lit(cl).as("cluster"))
       }
 
-  private def argminOf(cents: Seq[(Long, Seq[Double])],
-      v: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val scored = centroidScoresOf(cents, v)
-    (if (scored.size == 1) scored.head else least(scored: _*))
-      .getField("cluster")
+  /** The winning `struct(d, cluster)` of a literal score list: score
+    * asc, tie-break cluster asc (`least` needs two or more inputs). */
+  private[graft] def nearest(scored: Seq[Column]): Column =
+    if (scored.size == 1) scored.head else least(scored: _*)
+
+  /** |a-b|² spelled as a·a - 2·a·b + b·b with three left folds — the
+    * same operation sequence as `list_dot_product`-based SQL, so the
+    * DuckDB oracle's farthest-point comparisons are bit-identical. */
+  private def d2(a: Array[Double], b: Array[Double]): Double = {
+    var aa = 0.0; var ab = 0.0; var bb = 0.0
+    var i = 0
+    while (i < a.length) { aa += a(i) * a(i); i += 1 }
+    i = 0
+    while (i < a.length) { ab += a(i) * b(i); i += 1 }
+    i = 0
+    while (i < b.length) { bb += b(i) * b(i); i += 1 }
+    aa - 2 * ab + bb
   }
+
+  /** Deterministic seeding, shared by k-means, PQ codebooks and the
+    * k-center coreset.
+    *
+    * Stage 1 — oversample: the 4k rows with the smallest md5-derived
+    * hash60(id). A seed-free uniform pseudo-random sample, reproducible
+    * everywhere AND on the DuckDB oracle side (md5 of the same decimal id
+    * string); orderBy+limit compiles to TakeOrderedAndProject
+    * (per-partition heap of 4k + driver merge), never a full global sort.
+    *
+    * Stage 2 — greedy farthest-point over the oversample, once per
+    * `view` of the sampled vectors (fitProduct: one slice per subspace;
+    * ids do not depend on the view, so one sample serves all). Driver
+    * work, O(4k·k·dim): a plain uniform k-sample can seed two centroids
+    * in one dense cluster and Lloyd's never recovers; farthest-point
+    * guarantees spread. Deterministic: start at the min-hash row, pick
+    * the argmax of the min-distance, tie-break on id.
+    *
+    * @return per view, the min(k, sample) chosen (id, vector) pairs in
+    *         pick order */
+  private[graft] def seed(vecs: DataFrame, k: Int,
+      views: Seq[Array[Double] => Array[Double]] = Seq(identity))
+      : Seq[Seq[(Long, Array[Double])]] = {
+    val s = vecs.sparkSession
+    import s.implicits._
+    val sample = vecs
+      .select(Md5Bits.hash60(col("id")).as("h"), col("id"), col("v"))
+      .orderBy(col("h"), col("id")).limit(4 * k)
+      .as[(Long, Long, Seq[Double])].collect()
+      .sortBy(t => (t._1, t._2)) // driver-side re-sort: order is contractual
+      .map(t => (t._2, t._3.toArray))
+    require(sample.nonEmpty, "kmeans needs a non-empty corpus")
+    views.map { view =>
+      val sub = sample.map { case (id, v) => (id, view(v)) }
+      val chosen = scala.collection.mutable.ArrayBuffer(sub.head)
+      val minD = Array.fill(sub.length)(Double.MaxValue)
+      while (chosen.length < math.min(k, sub.length)) {
+        val last = chosen.last._2
+        var bi = -1
+        for (i <- sub.indices) {
+          val d = d2(sub(i)._2, last)
+          if (d < minD(i)) minD(i) = d
+          if (bi < 0 || minD(i) > minD(bi) ||
+            (minD(i) == minD(bi) && sub(i)._1 < sub(bi)._1)) bi = i
+        }
+        chosen += sub(bi)
+      }
+      chosen.toSeq
+    }
+  }
+
+  /** Seeds numbered 0..k-1 as the starting centroid table. */
+  private def numbered(seeds: Seq[(Long, Array[Double])]): Seq[(Long, Seq[Double])] =
+    seeds.zipWithIndex.map { case ((_, v), c) => (c.toLong, v.toSeq) }
+
+  /** Per-cell mean of `x`: decimal-sum mean rounded to 6 decimals —
+    * exact and ORDER-INDEPENDENT (a double avg would vary with partition
+    * order), and the identical spelling as the oracle-proven q_centroids,
+    * so every Lloyd round is reproducible on both engines bit-for-bit. */
+  private def decimalMean(x: Column): Column =
+    round(sum(x.cast("decimal(28,12)")).cast("double") / count(x), 6)
 
   /** @param vecs (id, v: array<double>) frame
     * @return (cluster, centroid: array<double>) — k rows */
@@ -61,61 +137,8 @@ object KMeans {
     val s = vecs.sparkSession
     DotProduct.register(s)
     import s.implicits._
-    // Init, stage 1 — oversample: the 4k rows with the smallest
-    // md5-derived hash60(id). A seed-free uniform pseudo-random sample,
-    // reproducible everywhere AND on the DuckDB oracle side (md5 of the
-    // same decimal id string); orderBy+limit compiles to
-    // TakeOrderedAndProject (per-partition heap of 4k + driver merge),
-    // NOT the full global sort the old stride init paid — the one
-    // avoidable full-sort stage in the suite at 100 TB.
-    val m = 4 * k
-    val sample = vecs
-      .select(Md5Bits.hash60(col("id")).as("h"), col("id"), col("v"))
-      .orderBy(col("h"), col("id")).limit(m)
-      .as[(Long, Long, Seq[Double])].collect()
-      .sortBy(t => (t._1, t._2)) // driver-side re-sort: order is contractual
-      .map(t => (t._2, t._3.toArray))
-    require(sample.nonEmpty, "kmeans needs a non-empty corpus")
-    // Init, stage 2 — greedy farthest-point over the oversample (driver
-    // work, O(m·k·dim) on 4k rows — same driver-sized regime as the k-row
-    // centroid table): a plain uniform k-sample can seed two centroids in
-    // one dense cluster and Lloyd's never recovers; farthest-point
-    // guarantees spread. Deterministic: start at the min-hash row,
-    // tie-break on id.
-    // |a-b|² spelled as a·a - 2·a·b + b·b with three left folds — the
-    // same operation sequence as `list_dot_product`-based SQL, so the
-    // DuckDB oracle's farthest-point comparisons are bit-identical
-    def d2(a: Array[Double], b: Array[Double]): Double = {
-      var aa = 0.0; var ab = 0.0; var bb = 0.0
-      var i = 0
-      while (i < a.length) { aa += a(i) * a(i); i += 1 }
-      i = 0
-      while (i < a.length) { ab += a(i) * b(i); i += 1 }
-      i = 0
-      while (i < b.length) { bb += b(i) * b(i); i += 1 }
-      aa - 2 * ab + bb
-    }
-    val kEff = math.min(k, sample.length)
-    val chosen = scala.collection.mutable.ArrayBuffer(sample.head)
-    val minD = Array.fill(sample.length)(Double.MaxValue)
-    while (chosen.length < kEff) {
-      val last = chosen.last._2
-      var bi = -1
-      for (i <- sample.indices) {
-        val d = d2(sample(i)._2, last)
-        if (d < minD(i)) minD(i) = d
-        if (bi < 0 || minD(i) > minD(bi) ||
-          (minD(i) == minD(bi) && sample(i)._1 < sample(bi)._1)) bi = i
-      }
-      chosen += sample(bi)
-    }
-    var cents: Seq[(Long, Seq[Double])] = chosen.toSeq.zipWithIndex
-      .map { case ((_, v), c) => (c.toLong, v.toSeq) }
+    var cents = numbered(seed(vecs, k).head)
     for (_ <- 1 to iterations) {
-      // decimal-sum mean rounded to 6 decimals: exact and ORDER-
-      // INDEPENDENT (a double avg would vary with partition order), and
-      // the identical spelling as the oracle-proven q_centroids — so
-      // every Lloyd round is reproducible on both engines bit-for-bit.
       // Means land on the driver (k·dim doubles — the centroid table is
       // driver-sized by definition, same regime as fitProduct), so each
       // round's plan is fresh literals over the raw corpus: no per-round
@@ -123,8 +146,7 @@ object KMeans {
       val means = assign(vecs, cents.toDF("cluster", "c"))
         .select(col("cluster"), posexplode(col("v")).as(Seq("dim", "x")))
         .groupBy(col("cluster"), col("dim"))
-        .agg(round(sum(col("x").cast("decimal(28,12)")).cast("double") /
-          count(col("x")), 6).as("m"))
+        .agg(decimalMean(col("x")).as("m"))
         .collect()
         .groupBy(_.getLong(0))
         .map { case (cl, rows) =>
@@ -161,54 +183,19 @@ object KMeans {
     val s = vecs.sparkSession
     DotProduct.register(s)
     import s.implicits._
-    val over = 4 * k
-    val sample = vecs
-      .select(Md5Bits.hash60(col("id")).as("h"), col("id"), col("v"))
-      .orderBy(col("h"), col("id")).limit(over)
-      .as[(Long, Long, Seq[Double])].collect()
-      .sortBy(t => (t._1, t._2))
-      .map(t => (t._2, t._3.toArray))
-    require(sample.nonEmpty, "kmeans needs a non-empty corpus")
-    def d2(a: Array[Double], b: Array[Double]): Double = {
-      var aa = 0.0; var ab = 0.0; var bb = 0.0
-      var i = 0
-      while (i < a.length) { aa += a(i) * a(i); i += 1 }
-      i = 0
-      while (i < a.length) { ab += a(i) * b(i); i += 1 }
-      i = 0
-      while (i < b.length) { bb += b(i) * b(i); i += 1 }
-      aa - 2 * ab + bb
-    }
-    // greedy farthest-point per subspace over the SLICED shared sample —
-    // the identical selection loop as fit (start at min-hash row, argmax
-    // of min-distance, tie on id)
-    def greedy(sub: Array[(Long, Array[Double])]): Seq[(Long, Seq[Double])] = {
-      val kEff = math.min(k, sub.length)
-      val chosen = scala.collection.mutable.ArrayBuffer(sub.head)
-      val minD = Array.fill(sub.length)(Double.MaxValue)
-      while (chosen.length < kEff) {
-        val last = chosen.last._2
-        var bi = -1
-        for (i <- sub.indices) {
-          val d = d2(sub(i)._2, last)
-          if (d < minD(i)) minD(i) = d
-          if (bi < 0 || minD(i) > minD(bi) ||
-            (minD(i) == minD(bi) && sub(i)._1 < sub(bi)._1)) bi = i
-        }
-        chosen += sub(bi)
-      }
-      chosen.toSeq.zipWithIndex.map { case ((_, v), c) => (c.toLong, v.toSeq) }
-    }
-    var books: Seq[Seq[(Long, Seq[Double])]] = (0 until m).map { j =>
-      greedy(sample.map { case (id, v) =>
-        (id, v.slice(j * subDim, (j + 1) * subDim)) })
-    }
+    // per-subspace seeds from the ONE shared oversample, each subspace
+    // selecting over its own slice (same d² spelling and tie rule as fit)
+    var books: Seq[Seq[(Long, Seq[Double])]] =
+      seed(vecs, k, (0 until m).map(j =>
+        (v: Array[Double]) => v.slice(j * subDim, (j + 1) * subDim)))
+        .map(numbered)
     for (_ <- 1 to iterations) {
       // one scan: all m subspace assignments as literal argmins, explode
       // to (sub, cluster, dim, x), one decimal-mean aggregation
       val entries = (0 until m).map { j =>
         val sv = slice(col("v"), j * subDim + 1, subDim)
-        struct(lit(j).as("sub"), argminOf(books(j), sv).as("cluster"),
+        struct(lit(j).as("sub"),
+          nearest(centroidScoresOf(books(j), sv)).getField("cluster").as("cluster"),
           sv.as("sv"))
       }
       val means = vecs
@@ -216,8 +203,7 @@ object KMeans {
         .select(col("e.sub").as("sub"), col("e.cluster").as("cluster"),
           posexplode(col("e.sv")).as(Seq("dim", "x")))
         .groupBy(col("sub"), col("cluster"), col("dim"))
-        .agg(round(sum(col("x").cast("decimal(28,12)")).cast("double") /
-          count(col("x")), 6).as("mv"))
+        .agg(decimalMean(col("x")).as("mv"))
         .collect() // m·k·subDim rows — the codebook itself, driver-sized
         .groupBy(r => (r.getInt(0), r.getLong(1)))
         .map { case ((sub, cl), rows) =>
@@ -250,11 +236,8 @@ object KMeans {
     DotProduct.register(vecs.sparkSession)
     val scored = centroidScores(centroids, col("v"))
     if (scored.size > MaxLiteralCentroids) assignBroadcast(vecs, centroids)
-    else {
-      val best =
-        if (scored.size == 1) scored.head else least(scored: _*)
-      vecs.select(col("id"), col("v"), best.getField("cluster").as("cluster"))
-    }
+    else vecs.select(col("id"), col("v"),
+      nearest(scored).getField("cluster").as("cluster"))
   }
 
   /** Argmin cluster of an arbitrary vector EXPRESSION against a trained
@@ -263,14 +246,13 @@ object KMeans {
     * Exchange), each over its own `slice(v, …)`. Same argmin rule as
     * [[assign]] (score asc, cluster asc) so the DuckDB replay of PQ
     * encoding agrees bit-for-bit. */
-  def argminCluster(v: org.apache.spark.sql.Column,
-      centroids: DataFrame): org.apache.spark.sql.Column = {
+  def argminCluster(v: Column,
+      centroids: DataFrame): Column = {
     val scored = centroidScores(centroids, v)
     require(scored.size <= MaxLiteralCentroids,
       s"argminCluster is the literal plan; ${scored.size} centroids exceed " +
         s"$MaxLiteralCentroids — use assign's broadcast fallback instead")
-    (if (scored.size == 1) scored.head else least(scored: _*))
-      .getField("cluster")
+    nearest(scored).getField("cluster")
   }
 
   /** Large-k fallback: broadcast the centroid table, score corpus×k pairs

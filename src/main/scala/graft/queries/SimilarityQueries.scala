@@ -38,6 +38,11 @@ object SimilarityQueries {
   private def cosOrNull(dotv: Column, denom: Column): Column =
     cosineOrNull(dotv, denom) // shared ANSI-safe guard — VectorFunctions
 
+  /** Exact squared L2 distance spelled (a·a − 2·a·b) + b·b — the fold
+    * and association order of the oracle's `list_dot_product` chain. */
+  private def sqL2(a: Column, b: Column): Column =
+    DotProduct.dot(a, a) - lit(2.0) * DotProduct.dot(a, b) + DotProduct.dot(b, b)
+
   /** Vectors with their norm precomputed ONCE per row (the pairwise join
     * then does a single codegen'd dot per pair instead of three
     * interpreted folds — ~4× on the all-pairs bench). */
@@ -482,12 +487,17 @@ object SimilarityQueries {
   // exact scan), the intersection is an equi-join on (query, neighbor),
   // and every reported figure is a ratio of integers — mean recall =
   // Σhits/(|queries|·k) — so nothing floats until one division.
-  def qIvfRecall(s: SparkSession, d: String): DataFrame = {
-    val ivf = qAnnIvf(s, d).select(col("qid"), col("nid"))
-    val brute = qKnnBrute(s, d).select(col("qid"), col("nid"))
-      .localCheckpoint(true)
+  def qIvfRecall(s: SparkSession, d: String): DataFrame =
+    recallSummary(qAnnIvf(s, d), qKnnBrute(s, d))
+
+  /** recall@K of `ann` against the exact top-K `truth` (both carrying
+    * qid, nid): one row of integer counts and their two ratios. The
+    * truth side is checkpointed once, since both joins read it. */
+  private def recallSummary(ann: DataFrame, truth: DataFrame): DataFrame = {
+    val found = ann.select(col("qid"), col("nid"))
+    val brute = truth.select(col("qid"), col("nid")).localCheckpoint(true)
     val hits = brute.select(col("qid")).distinct()
-      .join(ivf.join(brute, Seq("qid", "nid"), "left_semi")
+      .join(found.join(brute, Seq("qid", "nid"), "left_semi")
         .groupBy(col("qid")).agg(count(lit(1)).as("h")), Seq("qid"), "left")
       .select(col("qid"), coalesce(col("h"), lit(0L)).as("h"))
     hits.agg(count(lit(1)).as("n_queries"),
@@ -520,7 +530,7 @@ object SimilarityQueries {
   // share ~unit scale on this fixture (the spec asserts the measured
   // recall itself, so any metric mismatch would surface as a low number).
   def qIvfPqRecall(s: SparkSession, d: String): DataFrame = {
-    val ann = qAnnIvfPq(s, d).select(col("qid"), col("nid"))
+    val ann = qAnnIvfPq(s, d)
     // exact SQUARED-L2 ground truth (the metric IVF-PQ ranks by — the
     // cosine brute would count metric disagreement as index loss)
     val v = vecs(s, d).select(col("vec_id").as("id"), col("v"))
@@ -530,23 +540,10 @@ object SimilarityQueries {
     val brute = v.crossJoin(broadcast(q))
       .filter(col("id") =!= col("qid"))
       .select(col("qid"), col("id").as("nid"),
-        (DotProduct.dot(col("qv"), col("qv")) -
-          lit(2.0) * DotProduct.dot(col("qv"), col("v")) +
-          DotProduct.dot(col("v"), col("v"))).as("d2"))
+        sqL2(col("qv"), col("v")).as("d2"))
       .withColumn("rnk", row_number().over(wB))
       .filter(col("rnk") <= K)
-      .select(col("qid"), col("nid"))
-      .localCheckpoint(true)
-    val hits = brute.select(col("qid")).distinct()
-      .join(ann.join(brute, Seq("qid", "nid"), "left_semi")
-        .groupBy(col("qid")).agg(count(lit(1)).as("h")), Seq("qid"), "left")
-      .select(col("qid"), coalesce(col("h"), lit(0L)).as("h"))
-    hits.agg(count(lit(1)).as("n_queries"),
-      sum(col("h")).as("total_hits"), min(col("h")).as("min_h"))
-      .select(col("n_queries"), col("total_hits"),
-        round(col("total_hits").cast("double") /
-          (col("n_queries").cast("double") * K), 6).as("mean_recall"),
-        round(col("min_h").cast("double") / K, 6).as("min_recall"))
+    recallSummary(ann, brute)
   }
 
   lazy val qIvfPqRecallSql: String =
@@ -628,7 +625,7 @@ object SimilarityQueries {
 
   /** The SemDeDup replay at an explicit k — the registered oracle is the
     * k=IvfK instance (exact wherever the corpus ≤ MaxExactRows); larger
-    * tiers regenerate the spelling at semK(n) via `graft.OracleGen`. */
+    * tiers register the spelling at semK(n) via [[fixtureOracles]]. */
   def qSemdedupSqlFor(k: Int): String =
     kmeansCellsSql(k, IvfIters) + ", " +
       "dom AS (SELECT DISTINCT b.id AS id FROM cells a JOIN cells b " +
@@ -661,9 +658,7 @@ object SimilarityQueries {
       .join(broadcast(centroids.select(col("cluster"), col("c"))), Seq("cluster"))
       .withColumn("nrm", sqrt(DotProduct.dot(col("v"), col("v"))))
       // full squared distance — v·v does NOT cancel across different rows
-      .withColumn("score", DotProduct.dot(col("c"), col("c")) -
-        lit(2.0) * DotProduct.dot(col("v"), col("c")) +
-        DotProduct.dot(col("v"), col("v")))
+      .withColumn("score", sqL2(col("c"), col("v")))
       .drop("c")
     val right = a.select(col("cluster"), col("id").as("id2"),
       col("v").as("v2"), col("nrm").as("nrm2"), col("score").as("score2"))
@@ -700,7 +695,7 @@ object SimilarityQueries {
     * is a function of the corpus (SemDeDup runs at k = semK(n), so its
     * replay must too). Verify folds these over the static map when it
     * writes oracle_sql.json, making every tier's registered oracle the
-    * exact engine spelling with no manual OracleGen swap. At any tier
+    * exact engine spelling with no manual oracle swap. At any tier
     * with n ≤ MaxExactRows (every gate tier through sf3) the returned
     * strings are byte-identical to the static k=IvfK registrations. */
   def fixtureOracles(s: SparkSession, d: String): Map[String, String] = {
@@ -786,16 +781,17 @@ object SimilarityQueries {
   // ── PQ-ADC ANN: product quantization + asymmetric distance ─────────────
   // The third standard ANN family (FAISS's IVF-PQ compression half): the
   // 64-dim vector splits into PqM=4 subspaces of 16 dims; each subspace
-  // trains its own PqK=8-centroid codebook (the SAME deterministic
-  // KMeans.fit the IVF query proved — md5 oversample, farthest-point
-  // init, decimal-mean Lloyd rounds), and every corpus vector compresses
-  // to 4 code bytes. A query never touches raw corpus vectors again:
+  // trains its own PqK=16-centroid codebook (KMeans.fitProduct: per
+  // subspace bit-identical to the KMeans.fit the IVF query proved — md5
+  // oversample, farthest-point init, decimal-mean Lloyd rounds — with
+  // all four trained in one corpus scan per round), and every corpus
+  // vector compresses to 4 code bytes. A query never touches raw corpus vectors again:
   // it builds a (subspace, code) → partial-squared-distance lookup table
   // against the codebooks and scores candidates by summing 4 table hits
   // (asymmetric distance computation). At 100 TB this is THE scan-
   // compression story: the corpus scan reads 4 bytes + id per vector
-  // (16× less than the raw floats), the LUTs broadcast (queries×32
-  // rows), encoding is ONE projection of literal argmins (zero
+  // (16× less than the raw floats), the LUTs broadcast (queries×PqK
+  // rows each), encoding is ONE projection of literal argmins (zero
   // Exchange), and the per-query cost is 4 broadcast-hash probes + a
   // partial-aggregated top-k. Fold orders and the argmin tie rule are
   // the oracle-proven ones, so DuckDB replays training, encoding, and
@@ -813,49 +809,63 @@ object SimilarityQueries {
     // result is identical (spec-pinned) while the corpus-sized training
     // scans drop out of the per-query plan. The PQ-only variant ignores
     // the coarse `cluster` column — every code row is a candidate.
-    val (v, codesFull, _, books) = annIndex(s, d)
-    pqServe(v, codesFull.drop("cluster"), books)
+    val (v, codes, _, books) = annIndex(s, d)
+    pqServe(v, codes.drop("cluster"), books)
   }
 
   /** The in-query-training spelling of [[qAnnPq]] (train + encode + serve
     * in one plan) — spec-only, pinning persisted-serve == fresh-train. */
   def qAnnPqTrained(s: SparkSession, d: String): DataFrame = {
     val v = vecs(s, d).select(col("vec_id").as("id"), col("v"))
-    // all four codebooks train together: one corpus scan per Lloyd round
-    // (fitProduct), not one per (round, subspace)
-    val books = graft.operators.KMeans.fitProduct(
-      v, m = PqM, subDim = PqSub, k = PqK, iterations = PqIters)
-    // Encode: all four subspace argmins in ONE literal projection.
-    val codes = v.select(
-      col("id") +: (0 until PqM).map(j =>
-        graft.operators.KMeans.argminCluster(
-          slice(col("v"), j * PqSub + 1, PqSub), books(j)).as(s"c$j")): _*)
-    pqServe(v, codes, books)
+    val (_, books, codes) = trainAnnIndex(v)
+    pqServe(v, codes.drop("cluster"), books)
   }
 
-  /** The PQ-ADC SERVING path (LUT build → candidate join → ADC shortlist
-    * → exact refine) over an already-encoded corpus `codes(id, c0..c3)` —
-    * shared by [[qAnnPq]] (persisted index) and [[qAnnPqTrained]]. */
-  private def pqServe(v: DataFrame, codes: DataFrame,
-      books: Seq[DataFrame]): DataFrame = {
-    // Per-subspace LUT: (qid, code) → cc − 2·q·c + q·q, the full partial
+  /** Subspace `j`'s slice of a vector column (1-based, PqSub long). */
+  private def pqSlice(v: Column, j: Int): Column = slice(v, j * PqSub + 1, PqSub)
+
+  /** PQ encode: code columns c0..c3 of `col("v")`, all four subspace
+    * argmins in ONE literal projection (zero Exchange). */
+  private def pqCodes(books: Seq[DataFrame]): Seq[Column] =
+    (0 until PqM).map(j => graft.operators.KMeans.argminCluster(
+      pqSlice(col("v"), j), books(j)).as(s"c$j"))
+
+  /** The PQ-ADC SERVING path over an encoded corpus `codes(id, c0..c3)`:
+    * LUT build → candidate join → ADC shortlist → exact refine. With
+    * coarse `centroids` (IVF-PQ; `codes` then also carries `cluster`),
+    * each query first probes its IvfProbe nearest cells and only codes in
+    * those cells are candidates. Every PQ and IVF-PQ query serves through
+    * here, persisted index and fresh training alike, so their results are
+    * hash-equal by construction. `v` doubles as query source
+    * (id < NumQueries) and refine store (raw vectors touched only for
+    * shortlisted ids). */
+  private def pqServe(v: DataFrame, codes: DataFrame, books: Seq[DataFrame],
+      centroids: Option[DataFrame] = None): DataFrame = {
+    val q = v.filter(col("id") < NumQueries)
+    // Per-subspace LUT: (qid, code) → cc − 2·c·q + q·q, the full partial
     // squared distance (the q·q term is rank-neutral but keeps the
     // reported ADC value a true squared-distance estimate).
-    val q = v.filter(col("id") < NumQueries)
-    def lut(j: Int): DataFrame = {
-      val qs = slice(col("v"), j * PqSub + 1, PqSub)
-      q.select(col("id").as("qid"), qs.as("qs"))
+    def lut(j: Int): DataFrame =
+      q.select(col("id").as("qid"), pqSlice(col("v"), j).as("qs"))
         .crossJoin(broadcast(books(j)
           .select(col("cluster").as(s"c$j"), col("c"))))
-        .select(col("qid"), col(s"c$j"),
-          (DotProduct.dot(col("c"), col("c")) -
-            lit(2.0) * DotProduct.dot(col("qs"), col("c")) +
-            DotProduct.dot(col("qs"), col("qs"))).as(s"pd$j"))
+        .select(col("qid"), col(s"c$j"), sqL2(col("c"), col("qs")).as(s"pd$j"))
+    // IVF-PQ: the probe join (top-IvfProbe coarse cells per query,
+    // shuffle-free as in ivfSearch) introduces qid, so every LUT join is
+    // (qid, code) 1:1. PQ alone: the first LUT join fans each code row
+    // out per query. All joins broadcast — the corpus side never
+    // shuffles before the bounded top-k.
+    val (probed, lut0Key) = centroids match {
+      case Some(cents) =>
+        val qScored = graft.operators.KMeans.centroidScores(cents, col("qv"))
+        val probes = q.select(col("id").as("qid"), col("v").as("qv"))
+          .select(col("qid"),
+            explode(slice(array_sort(array(qScored: _*)), 1, IvfProbe)).as("pc"))
+          .select(col("qid"), col("pc.cluster").as("cluster"))
+        (codes.join(broadcast(probes), Seq("cluster")), Seq("qid", "c0"))
+      case None => (codes, Seq("c0"))
     }
-    // First LUT join fans each corpus code row out per query; the next
-    // three join on (qid, code) 1:1. All four broadcast — the corpus
-    // side never shuffles before the bounded top-k.
-    var cur = codes.join(broadcast(lut(0)), Seq("c0"))
+    var cur = probed.join(broadcast(lut(0)), lut0Key)
     for (j <- 1 until PqM)
       cur = cur.join(broadcast(lut(j)), Seq("qid", s"c$j"))
     // Fixed left-to-right association ((pd0+pd1)+pd2)+pd3 — the exact
@@ -875,22 +885,13 @@ object SimilarityQueries {
     // and the exact re-rank is what turns it into a usable top-k.
     val exact = v.join(broadcast(shortlist), col("id") === col("nid"))
       .join(broadcast(q.select(col("id").as("qid"), col("v").as("qv"))), Seq("qid"))
-      .select(col("qid"), col("nid"),
-        (DotProduct.dot(col("qv"), col("qv")) -
-          lit(2.0) * DotProduct.dot(col("qv"), col("v")) +
-          DotProduct.dot(col("v"), col("v"))).as("d2"))
+      .select(col("qid"), col("nid"), sqL2(col("qv"), col("v")).as("d2"))
     val w = Window.partitionBy(col("qid")).orderBy(col("d2").asc, col("nid").asc)
     exact.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= K)
       .select(col("qid"), col("nid"), col("rnk"), round(col("d2"), 6).as("dist_r"))
   }
 
-  /** DuckDB oracle for qAnnPq — four independent codebook trainings
-    * (each the qAnnIvfSql machinery over a 16-dim slice: shared md5
-    * oversample, greedy farthest-point init, decimal-mean Lloyd rounds,
-    * empty-cell coalesce), then encode + LUT joins + the left-assoc ADC
-    * sum. Slices are 1-based inclusive on both engines
-    * (Spark `slice(v, lo, len)` ↔ DuckDB `v[lo:hi]`). */
   /** The PQ trainer + encoder + LUT CTE block (everything between the
     * shared `vs`/`smp` prefix and the candidate generation), reused
     * verbatim by the standalone PQ oracle and the composed IVF-PQ
@@ -957,6 +958,12 @@ object SimilarityQueries {
     sb.toString
   }
 
+  /** DuckDB oracle for qAnnPq — four independent codebook trainings
+    * (each the qAnnIvfSql machinery over a 16-dim slice: shared md5
+    * oversample, greedy farthest-point init, decimal-mean Lloyd rounds,
+    * empty-cell coalesce), then encode + LUT joins + the left-assoc ADC
+    * sum. Slices are 1-based inclusive on both engines
+    * (Spark `slice(v, lo, len)` ↔ DuckDB `v[lo:hi]`). */
   val qAnnPqSql: String = {
     def dot(a: String, b: String) = s"list_dot_product($a, $b)"
     val sb = new StringBuilder
@@ -1007,7 +1014,7 @@ object SimilarityQueries {
     // in-query-training spelling below is retained as the spec's
     // bit-for-bit cross-check of the persisted path.
     val (v, codes, centroids, books) = annIndex(s, d)
-    ivfPqServe(v, codes, centroids, books)
+    pqServe(v, codes, books, Some(centroids))
   }
 
   /** The in-query-training spelling of [[qAnnIvfPq]] — trains the coarse
@@ -1016,64 +1023,8 @@ object SimilarityQueries {
     * path equals a fresh train+serve bit-for-bit. */
   def qAnnIvfPqTrained(s: SparkSession, d: String): DataFrame = {
     val v = vecs(s, d).select(col("vec_id").as("id"), col("v"))
-    val centroids = graft.operators.KMeans.fit(v, k = IvfK, iterations = IvfIters)
-    val cells = graft.operators.KMeans.assign(v, centroids)
-    val books = graft.operators.KMeans.fitProduct(
-      v, m = PqM, subDim = PqSub, k = PqK, iterations = PqIters)
-    // inverted file with PQ codes: (id, cluster, c0..c3) — one projection
-    val codes = cells.select(
-      col("id") +: col("cluster") +: (0 until PqM).map(j =>
-        graft.operators.KMeans.argminCluster(
-          slice(col("v"), j * PqSub + 1, PqSub), books(j)).as(s"c$j")): _*)
-    ivfPqServe(v, codes, centroids, books)
-  }
-
-  /** The IVF-PQ SERVING path — probes, LUT joins, ADC shortlist, exact
-    * refine — shared verbatim by [[qAnnIvfPq]] (in-query training) and
-    * [[qAnnServe]] (persisted index), so the two are hash-equal by
-    * construction. `v` doubles as query source (id < NumQueries) and
-    * refine store (raw vectors touched only for shortlisted ids). */
-  private def ivfPqServe(v: DataFrame, codes: DataFrame,
-      centroids: DataFrame, books: Seq[DataFrame]): DataFrame = {
-    val q = v.filter(col("id") < NumQueries)
-    // top-nProbe coarse cells per query, shuffle-free (ivfSearch probe)
-    val qScored = graft.operators.KMeans.centroidScores(centroids, col("qv"))
-    val probes = q.select(col("id").as("qid"), col("v").as("qv"))
-      .select(col("qid"),
-        explode(slice(array_sort(array(qScored: _*)), 1, IvfProbe)).as("pc"))
-      .select(col("qid"), col("pc.cluster").as("cluster"))
-    def lut(j: Int): DataFrame = {
-      val qs = slice(col("v"), j * PqSub + 1, PqSub)
-      q.select(col("id").as("qid"), qs.as("qs"))
-        .crossJoin(broadcast(books(j)
-          .select(col("cluster").as(s"c$j"), col("c"))))
-        .select(col("qid"), col(s"c$j"),
-          (DotProduct.dot(col("c"), col("c")) -
-            lit(2.0) * DotProduct.dot(col("qs"), col("c")) +
-            DotProduct.dot(col("qs"), col("qs"))).as(s"pd$j"))
-    }
-    // the probe join introduces qid and restricts candidates to probed
-    // cells; the 4 LUT joins are then (qid, code) 1:1 — all broadcast
-    var cur = codes.join(broadcast(probes), Seq("cluster"))
-    for (j <- 0 until PqM)
-      cur = cur.join(broadcast(lut(j)), Seq("qid", s"c$j"))
-    val adist = (0 until PqM).map(j => col(s"pd$j")).reduce(_ + _)
-    val wAdc = Window.partitionBy(col("qid")).orderBy(col("adist").asc, col("nid").asc)
-    val shortlist = cur.filter(col("id") =!= col("qid"))
-      .select(col("qid"), col("id").as("nid"), adist.as("adist"))
-      .withColumn("crk", row_number().over(wAdc))
-      .filter(col("crk") <= PqC)
-      .select(col("qid"), col("nid"))
-    val exact = v.join(broadcast(shortlist), col("id") === col("nid"))
-      .join(broadcast(q.select(col("id").as("qid"), col("v").as("qv"))), Seq("qid"))
-      .select(col("qid"), col("nid"),
-        (DotProduct.dot(col("qv"), col("qv")) -
-          lit(2.0) * DotProduct.dot(col("qv"), col("v")) +
-          DotProduct.dot(col("v"), col("v"))).as("d2"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("d2").asc, col("nid").asc)
-    exact.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= K)
-      .select(col("qid"), col("nid"), col("rnk"), round(col("d2"), 6).as("dist_r"))
+    val (centroids, books, codes) = trainAnnIndex(v)
+    pqServe(v, codes, books, Some(centroids))
   }
 
   /** The IVF-PQ serve-path SQL tail (probes → LUT candidate join → ADC
@@ -1127,7 +1078,7 @@ object SimilarityQueries {
   // raw-vector refine store — exactly FAISS IndexRefineFlat's layout);
   // qAnnServe answers the same probes reading ONLY those tables. Doubles
   // round-trip parquet exactly, and the serving plan is the shared
-  // ivfPqServe, so the result is hash-identical to qAnnIvfPq and the
+  // pqServe, so the result is hash-identical to qAnnIvfPq and the
   // SAME oracle replay proves it. The index dir is keyed by a fingerprint
   // of the source file (path+size+mtime), so a regenerated corpus refits
   // instead of serving stale artifacts. At 100 TB the serve-side scan
@@ -1161,14 +1112,7 @@ object SimilarityQueries {
   /** The same fit + persist over any (id, v) frame — the upsert path
     * trains on the BASE slice only. */
   private def fitAnnIndexOn(v: DataFrame, dir: String): Unit = {
-    val centroids = graft.operators.KMeans.fit(v, k = IvfK, iterations = IvfIters)
-    val cells = graft.operators.KMeans.assign(v, centroids)
-    val books = graft.operators.KMeans.fitProduct(
-      v, m = PqM, subDim = PqSub, k = PqK, iterations = PqIters)
-    val codes = cells.select(
-      col("id") +: col("cluster") +: (0 until PqM).map(j =>
-        graft.operators.KMeans.argminCluster(
-          slice(col("v"), j * PqSub + 1, PqSub), books(j)).as(s"c$j")): _*)
+    val (centroids, books, codes) = trainAnnIndex(v)
     centroids.write.mode("overwrite").parquet(s"$dir/centroids")
     (0 until PqM).foreach(j =>
       books(j).write.mode("overwrite").parquet(s"$dir/book$j"))
@@ -1176,11 +1120,24 @@ object SimilarityQueries {
     v.write.mode("overwrite").parquet(s"$dir/vectors")
   }
 
+  /** Train the IVF-PQ index over an (id, v) frame: the coarse quantizer
+    * (KMeans.fit), the PqM codebooks (KMeans.fitProduct, one corpus scan
+    * per Lloyd round) and the encoded inverted file
+    * `codes(id, cluster, c0..c3)` — one projection over the assignment. */
+  private def trainAnnIndex(v: DataFrame): (DataFrame, Seq[DataFrame], DataFrame) = {
+    val centroids = graft.operators.KMeans.fit(v, k = IvfK, iterations = IvfIters)
+    val books = graft.operators.KMeans.fitProduct(
+      v, m = PqM, subDim = PqSub, k = PqK, iterations = PqIters)
+    val codes = graft.operators.KMeans.assign(v, centroids)
+      .select(col("id") +: col("cluster") +: pqCodes(books): _*)
+    (centroids, books, codes)
+  }
+
   def qAnnServe(s: SparkSession, d: String): DataFrame = {
     // the RETURNED plan reads only the persisted index tables — no
     // embeddings scan, no training stage (PlanSpec pins this)
     val (v, codes, centroids, books) = annIndex(s, d)
-    ivfPqServe(v, codes, centroids, books)
+    pqServe(v, codes, books, Some(centroids))
   }
 
   /** Hash-equal to qAnnIvfPq by construction, so the oracle is the same
@@ -1226,12 +1183,10 @@ object SimilarityQueries {
     // with the range predicate pushed down to the parquet reader
     val delta = Tables.embeddings(s, d).filter(col("vec_id") >= split)
       .select(col("vec_id").as("id"), asDouble(col("embedding")).as("v"))
-    val deltaCodes = graft.operators.KMeans.assign(delta, centroids).select(
-      col("id") +: col("cluster") +: (0 until PqM).map(j =>
-        graft.operators.KMeans.argminCluster(
-          slice(col("v"), j * PqSub + 1, PqSub), books(j)).as(s"c$j")): _*)
-    ivfPqServe(baseVecs.union(delta), baseCodes.union(deltaCodes),
-      centroids, books)
+    val deltaCodes = graft.operators.KMeans.assign(delta, centroids)
+      .select(col("id") +: col("cluster") +: pqCodes(books): _*)
+    pqServe(baseVecs.union(delta), baseCodes.union(deltaCodes), books,
+      Some(centroids))
   }
 
   /** The upsert replay: train on the base subset (`baseWhere`), encode +
@@ -1819,56 +1774,20 @@ object SimilarityQueries {
   // radius on both engines; the oracle replays oversample, all 32
   // greedy selections, assignment, and census as CTEs.
   private val CoresetK = 32
-  private val CoresetPool = 128
+  private val CoresetPool = 4 * CoresetK // KMeans.seed's oversample size
 
   def qCoreset(s: SparkSession, d: String): DataFrame = {
     DotProduct.register(s)
     import s.implicits._
     val v = vecs(s, d).select(col("vec_id").as("id"), col("v"))
-    val sample = v
-      .select(graft.functions.Md5Bits.hash60(col("id")).as("h"),
-        col("id"), col("v"))
-      .orderBy(col("h"), col("id")).limit(CoresetPool)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Double](2).toArray))
-      .sortBy(t => (t._1, t._2)).map(t => (t._2, t._3))
-    require(sample.nonEmpty, "coreset needs a non-empty corpus")
-    // |a-b|² with the same three left folds as the SQL spelling
-    def d2(a: Array[Double], b: Array[Double]): Double = {
-      var aa = 0.0; var ab = 0.0; var bb = 0.0
-      var i = 0
-      while (i < a.length) { aa += a(i) * a(i); i += 1 }
-      i = 0
-      while (i < a.length) { ab += a(i) * b(i); i += 1 }
-      i = 0
-      while (i < b.length) { bb += b(i) * b(i); i += 1 }
-      aa - 2 * ab + bb
-    }
-    val kEff = math.min(CoresetK, sample.length)
-    val chosen = scala.collection.mutable.ArrayBuffer(sample.head)
-    val minD = Array.fill(sample.length)(Double.MaxValue)
-    while (chosen.length < kEff) {
-      val last = chosen.last._2
-      var bi = -1
-      for (i <- sample.indices) {
-        val dd = d2(sample(i)._2, last)
-        if (dd < minD(i)) minD(i) = dd
-        if (bi < 0 || minD(i) > minD(bi) ||
-          (minD(i) == minD(bi) && sample(i)._1 < sample(bi)._1)) bi = i
-      }
-      chosen += sample(bi)
-    }
-    val centers = chosen.toSeq.zipWithIndex
-      .map { case ((id, cv), j) => (j.toLong, id, cv) }
-    val scoredC = centers.map { case (j, _, cv) =>
-      val cc = cv.foldLeft(0.0)((a, x) => a + x * x)
-      struct((lit(cc) - lit(2.0) *
-        DotProduct.dot(col("v"), typedlit(cv.toSeq))).as("d"),
-        lit(j).as("c"))
-    }
-    val best = least(scoredC: _*)
+    // CoresetPool = 4·CoresetK: exactly KMeans's seeding oversample, so
+    // the centers are its first CoresetK picks, with their ids kept
+    val centers = graft.operators.KMeans.seed(v, CoresetK).head.zipWithIndex
+      .map { case ((id, cv), j) => (j.toLong, id, cv.toSeq) }
+    val best = graft.operators.KMeans.nearest(graft.operators.KMeans
+      .centroidScoresOf(centers.map { case (j, _, cv) => (j, cv) }, col("v")))
     v.select(col("id"),
-        best.getField("c").as("center"),
+        best.getField("cluster").as("center"),
         (DotProduct.dot(col("v"), col("v")) + best.getField("d")).as("dd"))
       .groupBy(col("center"))
       .agg(count(lit(1)).as("n_assigned"), max(col("dd")).as("maxd2"))

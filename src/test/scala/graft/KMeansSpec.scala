@@ -63,4 +63,23 @@ class KMeansSpec extends AnyFunSuite {
     } yield (q, n, i + 1)).toSet
     assert(full === brute)
   }
+
+  test("fitProduct codebook j equals fit on slice j bit for bit") {
+    val (m, subDim, k, iters) = (4, 4, 3, 3)
+    val books = KMeans.fitProduct(vecs, m = m, subDim = subDim, k = k,
+      iterations = iters)
+    assert(books.size === m)
+    def rows(c: org.apache.spark.sql.DataFrame) =
+      c.select($"cluster", $"c").as[(Long, Seq[Double])].collect().sortBy(_._1)
+        .map { case (cl, cv) => (cl, cv.map(java.lang.Double.doubleToRawLongBits)) }
+        .toSeq
+    for (j <- 0 until m) {
+      val sliced = vecs.select($"id",
+        org.apache.spark.sql.functions.slice($"v", j * subDim + 1, subDim).as("v"))
+      val single = KMeans.fit(sliced, k = k, iterations = iters)
+      val got = rows(books(j))
+      assert(got.size === k)
+      assert(got === rows(single), s"subspace $j codebook differs from fit on its slice")
+    }
+  }
 }

@@ -42,6 +42,18 @@ class PageRankSpec extends AnyFunSuite {
     assert(got(2L) > got(1L))
   }
 
+  test("pagerank equals personalized pagerank seeded with every node") {
+    // a cycle, a fan-in, a dangling sink and a source with no in-links
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 3L), (4L, 5L),
+      (1L, 5L), (6L, 1L)).toDF("src", "dst")
+    val all = Seq(1L, 2L, 3L, 4L, 5L, 6L)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Double)].collect().sortBy(_._1).toSeq
+    val uniform = rows(PageRank.pagerank(edges, iterations = 7))
+    assert(uniform.map(_._1) === all)
+    assert(uniform === rows(PageRank.personalized(edges, all, iterations = 7)))
+  }
+
   test("fib expression matches closed computation and handles edge cases") {
     graft.functions.Fib.register(spark)
     val out = spark.range(0, 93)
