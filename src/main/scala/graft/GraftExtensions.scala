@@ -8,14 +8,17 @@ import graft.functions._
 
 /** Session-extension wiring for every native graft Expression, so the
   * functions are available in SQL text and in every new session without
-  * per-query registration:
+  * per-query registration. `GraftFunctions.all` is the one function
+  * table; each column builder (`SimHash.simhash`, `Shingles.shingles`, …)
+  * only calls its function by name. Wired by any of:
   *
   *   - `spark.sql.extensions=graft.GraftExtensions` (config / submit), or
   *   - `SparkSession.builder().withExtensions(new GraftExtensions)`, or
   *   - `GraftFunctions.registerAll(spark)` on a live session.
   *
   * Extension tiers in use: custom Catalyst Expressions (scalar/array
-  * kernels — simhash, winnow, shingles, dot, fib), an optimizer Rule
+  * kernels — simhash, dot, shingles, shingles_all, winnow, fib,
+  * jaro_winkler, zorder, ulm_segment), an optimizer Rule
   * (RewriteDotProduct kernel selection), and one planner Strategy
   * (KvLookupJoinStrategy — key-equality joins against the graft-kv store
   * plan as index point lookups instead of scans; the one place built-in
@@ -41,13 +44,14 @@ object GraftFunctions {
 
   // integral literals only: NULL or a fractional/string literal gets the
   // same descriptive error as a non-literal, not an NPE/NumberFormat
-  private[graft] def litInt(e: Expression, fn: String = "graft function"): Int =
+  private[graft] def litInt(e: Expression, fn: String = "graft function",
+      arg: String = "n"): Int =
     e match {
       case Literal(v: Number, _) if v.longValue == v.intValue => v.intValue
       case Literal(v, _) => throw new IllegalArgumentException(
-        s"$fn n must be a non-null integer literal, got ${if (v == null) "NULL" else v}")
+        s"$fn $arg must be a non-null integer literal, got ${if (v == null) "NULL" else v}")
       case other => throw new IllegalArgumentException(
-        s"$fn n must be a literal, got $other")
+        s"$fn $arg must be a literal, got $other")
     }
 
   /** (name, usage, builder) for every native expression. */
@@ -58,6 +62,10 @@ object GraftFunctions {
       (es: Seq[Expression]) => DotProductExpression(es(0), es(1))),
     ("graft_shingles", "graft_shingles(text, n) - distinct word n-grams",
       (es: Seq[Expression]) => ShinglesExpression(es.head, litInt(es(1), "graft_shingles"))),
+    ("graft_shingles_all",
+      "graft_shingles_all(text, n) - every word n-gram, in order, with multiplicity",
+      (es: Seq[Expression]) =>
+        ShinglesExpression(es.head, litInt(es(1), "graft_shingles_all"), distinct = false)),
     ("graft_winnow", "graft_winnow(text, k, w) - winnowing fingerprints",
       (es: Seq[Expression]) =>
         WinnowExpression(es.head, litInt(es(1), "graft_winnow"), litInt(es(2), "graft_winnow"))),
@@ -70,6 +78,10 @@ object GraftFunctions {
       "graft_zorder(x, y, bits) - Morton/Z-order interleave of two keys",
       (es: Seq[Expression]) =>
         ZOrderExpression(es(0), es(1), litInt(es(2), "graft_zorder"))),
+    ("graft_ulm_segment",
+      "graft_ulm_segment(word, vocab, maxPiece) - unigram-LM Viterbi segmentation",
+      (es: Seq[Expression]) => UnigramSegmentExpression(es(0), es(1),
+        litInt(es(2), "graft_ulm_segment", "maxPiece"))),
   )
 
   /** Imperative registration on a live session (idempotent) — equivalent

@@ -8,18 +8,15 @@ import scala.util.control.NonFatal
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Dev-only subset (SPARK_GRAFT_ONLY=q_a,q_b): the driver never sets
+    // it, so its runs always dump the full suite.
+    val selected = SparkEntry.selected()
     val spark = Tuning.localSession().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Dev-only subset filter (SPARK_GRAFT_ONLY=q_a,q_b): the driver never
-    // sets it, so its runs always dump the full suite.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None        => SparkEntry.queries
-    }
-    val failures = dump(spark, sfDir, outDir, selected.toSeq)
+    val names = selected.map(_._1).toSet
+    val failures = dump(spark, sfDir, outDir, selected)
     val json = jsonObject(SparkEntry.oracleSqlFor(spark, sfDir)
-      .filter(kv => only.forall(_(kv._1))))
+      .filter(kv => names(kv._1)))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
     if (failures.nonEmpty) {

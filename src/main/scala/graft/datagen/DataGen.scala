@@ -3,6 +3,8 @@ package graft.datagen
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.{ConfValue, Tuning}
+
 /** Deterministic synthetic-fixture generator for scale factors the driver
   * does not ship (TESTDATA.md tops out at sf0.1) — the tool that turns the
   * repo's "100 TB-safe" plan audits into measured scale curves (sf0.01 →
@@ -305,10 +307,10 @@ object DataGen {
     * `DataGen 1.0 bench-data/sf1` or `DataGen 3.0 bench-data/sf3 documents`. */
   def main(args: Array[String]): Unit = {
     val (Array(sf, outDir), only) = (args.take(2), args.drop(2))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = ConfValue.positiveInt(Tuning.CpusEnv, sys.env.getOrElse(Tuning.CpusEnv, "8"))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.ui.enabled", "false")
       .appName("graft-datagen")
       .getOrCreate()

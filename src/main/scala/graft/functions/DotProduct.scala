@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
@@ -79,12 +79,6 @@ object DotProductExpression {
 }
 
 object DotProduct {
-  /** Register the expression in the session function registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProductExpression(exprs(0), exprs(1)), "built-in")
-
-  /** Column builder; requires `register(spark)` once per session (or the
-    * GraftExtensions session wiring). */
+  /** Column builder; resolves through the GraftExtensions session wiring. */
   def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 }

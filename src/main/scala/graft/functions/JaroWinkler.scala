@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -94,11 +94,6 @@ object JaroWinklerExpression {
 }
 
 object JaroWinkler {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaro_winkler",
-      exprs => JaroWinklerExpression(exprs(0), exprs(1)), "built-in")
-
   def jw(a: Column, b: Column): Column =
     call_function("graft_jaro_winkler", a, b)
 }

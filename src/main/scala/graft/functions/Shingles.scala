@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -78,33 +78,7 @@ object ShinglesExpression {
 }
 
 object Shingles {
-  private def literalN(e: Expression, fn: String): Int = e match {
-    // integral literals only: NULL or a fractional/string literal gets the
-    // same descriptive error as a non-literal, not an NPE/NumberFormat
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Number, _)
-        if v.longValue == v.intValue =>
-      v.intValue
-    case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
-      throw new IllegalArgumentException(
-        s"$fn n must be a non-null integer literal, got ${if (v == null) "NULL" else v}")
-    case other => throw new IllegalArgumentException(
-      s"$fn n must be a literal, got $other")
-  }
-
-  /** Register in the session function registry (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles", exprs =>
-        ShinglesExpression(exprs.head, literalN(exprs(1), "graft_shingles")),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles_all", exprs =>
-        ShinglesExpression(exprs.head,
-          literalN(exprs(1), "graft_shingles_all"), distinct = false),
-      "built-in")
-  }
-
-  /** Column builder; requires `register(spark)` once per session. */
+  /** Column builder; resolves through the GraftExtensions session wiring. */
   def shingles(text: Column, n: Int): Column =
     call_function("graft_shingles", text, org.apache.spark.sql.functions.lit(n))
 

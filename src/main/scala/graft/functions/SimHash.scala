@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
@@ -89,14 +89,8 @@ object SimHash {
     out
   }
 
-  /** Register the native expression in the session's function registry
-    * (idempotent) — the public route to a custom `Expression` now that
-    * Column no longer exposes `expr` directly. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash", exprs => SimHashExpression(exprs.head), "built-in")
-
-  /** Column builder; requires `register(spark)` once per session (query
-    * entry points call it). */
+  /** Column builder; resolves through the GraftExtensions session wiring
+    * (a function name is the public route to a custom `Expression` now
+    * that Column no longer exposes `expr` directly). */
   def simhash(c: Column): Column = call_function("graft_simhash", c)
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, MapData}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{call_function, typedlit}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -169,18 +169,9 @@ object UnigramSegmentExpression {
 
 object UnigramSegment {
 
-  /** Register in the session function registry (idempotent). The vocab and
-    * maxPiece arrive as literal arguments baked into the resolved plan. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ulm_segment", exprs => exprs(2) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Number, _) =>
-          UnigramSegmentExpression(exprs.head, exprs(1), v.intValue)
-        case other => throw new IllegalArgumentException(
-          s"graft_ulm_segment maxPiece must be an integer literal, got $other")
-      }, "built-in")
-
-  /** Column builder; requires `register(spark)` once per session. */
+  /** Column builder; resolves through the GraftExtensions session wiring.
+    * The vocab and maxPiece arrive as literal arguments baked into the
+    * resolved plan. */
   def segment(word: Column, vocab: Map[String, Long], maxPiece: Int): Column =
     call_function("graft_ulm_segment", word, typedlit(vocab),
       org.apache.spark.sql.functions.lit(maxPiece))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -108,16 +108,7 @@ object WinnowExpression {
 }
 
 object Winnow {
-  /** Register in the session function registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnow", exprs =>
-        WinnowExpression(exprs.head,
-          graft.GraftFunctions.litInt(exprs(1), "graft_winnow"),
-          graft.GraftFunctions.litInt(exprs(2), "graft_winnow")),
-      "built-in")
-
-  /** Column builder; requires `register(spark)` once per session. */
+  /** Column builder; resolves through the GraftExtensions session wiring. */
   def winnow(text: Column, k: Int = 5, w: Int = 4): Column =
     call_function("graft_winnow", text,
       org.apache.spark.sql.functions.lit(k),

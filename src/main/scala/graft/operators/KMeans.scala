@@ -135,7 +135,6 @@ object KMeans {
     * @return (cluster, centroid: array<double>) — k rows */
   def fit(vecs: DataFrame, k: Int, iterations: Int = 5): DataFrame = {
     val s = vecs.sparkSession
-    DotProduct.register(s)
     import s.implicits._
     var cents = numbered(seed(vecs, k).head)
     for (_ <- 1 to iterations) {
@@ -181,7 +180,6 @@ object KMeans {
   def fitProduct(vecs: DataFrame, m: Int, subDim: Int, k: Int,
       iterations: Int = 5): Seq[DataFrame] = {
     val s = vecs.sparkSession
-    DotProduct.register(s)
     import s.implicits._
     // per-subspace seeds from the ONE shared oversample, each subspace
     // selecting over its own slice (same d² spelling and tie rule as fit)
@@ -233,7 +231,6 @@ object KMeans {
     * (production IVF k reaches the thousands) the literals themselves
     * become the problem, so the broadcast-join argmin takes over. */
   def assign(vecs: DataFrame, centroids: DataFrame): DataFrame = {
-    DotProduct.register(vecs.sparkSession)
     val scored = centroidScores(centroids, col("v"))
     if (scored.size > MaxLiteralCentroids) assignBroadcast(vecs, centroids)
     else vecs.select(col("id"), col("v"),
@@ -279,8 +276,6 @@ object KMeans {
     *        discarded. */
   def ivfSearch(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
       k: Int, nProbe: Int, excludeSelf: Boolean = true): DataFrame = {
-    val s = corpus.sparkSession
-    DotProduct.register(s)
     val cells = assign(corpus, centroids) // inverted file: (id, v, cluster)
       .withColumn("nrm", sqrt(DotProduct.dot(col("v"), col("v"))))
     // top-nProbe cells per query, shuffle-free: sort the k literal score

@@ -42,7 +42,6 @@ object DedupQueries {
   // graft_shingles emits first-occurrence-distinct shingles in ONE codegen
   // pass (the column-algebra spelling re-tokenizes per position — O(len²)).
   private def shingleIndex(s: SparkSession, d: String): DataFrame = {
-    Shingles.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"), explode(Shingles.shingles(col("text"), 3)).as("sh"))
   }
@@ -172,7 +171,6 @@ object DedupQueries {
 
   def qJaccardPartEnum(s: SparkSession, d: String): DataFrame = {
     import graft.operators.IterCheckpoint.IterCheckpointOps
-    Shingles.register(s)
     val smp = Tables.documents(s, d)
       .select(Md5Bits.hash60(col("doc_id")).as("h"), col("doc_id"), col("text"))
       .orderBy(col("h"), col("doc_id")).limit(PartEnumSample)
@@ -480,7 +478,6 @@ object DedupQueries {
       threshold: Double): DataFrame = {
     val rowsPerBand = numHashes / bands
     require(bands * rowsPerBand == numHashes, "bands must divide numHashes")
-    Shingles.register(docs.sparkSession)
     val sh = docs
       .select(col("doc_id"), explode(Shingles.shingles(col("text"), 3)).as("sh"))
       // ONE md5 per shingle, reduced into the prime field before the agg
@@ -525,7 +522,6 @@ object DedupQueries {
   // quadratic (0.75 s → 30 s for 10× docs) exactly as that formula
   // predicts, while triples keep the candidate stage output-bound.
   def qSimhashPairs(s: SparkSession, d: String): DataFrame = {
-    SimHash.register(s)
     val fp = Tables.documents(s, d)
       .select(col("doc_id"), SimHash.simhash(col("text")).as("fp"))
     def block(b: Int) =
@@ -574,7 +570,6 @@ object DedupQueries {
   // anchor and the emitted (doc_a < doc_b by id) rows match the naive
   // spelling row-for-row (spec-asserted).
   def qWinnowOverlap(s: SparkSession, d: String): DataFrame = {
-    Winnow.register(s)
     val fp = Tables.documents(s, d)
       .select(col("doc_id"), explode(Winnow.winnow(col("text"), 12, 8)).as("h"))
     winnowOverlapPrefix(fp, num = 1, den = 2)
@@ -747,7 +742,6 @@ object DedupQueries {
   // scan, 128 registers, ~9% error (spec-asserted vs exact distinct).
   def qHllDistinct(s: SparkSession, d: String): DataFrame = {
     import graft.functions.Sketches
-    Shingles.register(s)
     Tables.documents(s, d)
       .select(explode(Shingles.shingles(col("text"), 3)).as("v"))
       .select(Sketches.hllRegister(col("v")), Sketches.hllRank(col("v")))
@@ -778,7 +772,6 @@ object DedupQueries {
   // count; both sides are one aggregation each.
   def qHllError(s: SparkSession, d: String): DataFrame = {
     import graft.functions.Sketches
-    Shingles.register(s)
     val vals = Tables.documents(s, d)
       .select(explode(Shingles.shingles(col("text"), 3)).as("v"))
       .localCheckpoint(true)
@@ -871,7 +864,6 @@ object DedupQueries {
   // contaminated eval doc with its collision count and contamination
   // fraction (integer counts, one rounded division).
   def qDecontaminate(s: SparkSession, d: String): DataFrame = {
-    Shingles.register(s)
     val side = Md5Bits.hash60(concat(lit("dc:"), col("doc_id").cast("string"))) % 2
     val sh = Tables.documents(s, d)
       .withColumn("side", side)
@@ -950,7 +942,6 @@ object DedupQueries {
   private val JwThreshold = 0.85
 
   def qJaroWinkler(s: SparkSession, d: String): DataFrame = {
-    graft.functions.JaroWinkler.register(s)
     val names = Tables.part(s, d).select(col("p_name").as("name")).distinct()
     val blocks = names.select(col("name"),
       explode(array(
@@ -1066,7 +1057,6 @@ object DedupQueries {
   def dupSpans(docs: DataFrame): DataFrame = {
     // codegen positional shingles: the column-algebra spelling re-runs
     // the tokenizer per span position (O(len²)/doc, interpreted HOFs)
-    Shingles.register(docs.sparkSession)
     val spans = docs.select(col("doc_id"),
       explode(Shingles.shinglesAll(col("text"), SpanW)).as("sh"))
     val global = spans.groupBy(col("sh")).agg(count(lit(1)).as("g"))
@@ -1123,7 +1113,6 @@ object DedupQueries {
 
   /** The same plan over any (doc_id, text) frame — spec entry point. */
   def dedupSpansApply(docs: DataFrame): DataFrame = {
-    Shingles.register(docs.sparkSession)
     val spans = docs.select(col("doc_id"),
       posexplode(Shingles.shinglesAll(col("text"), SpanW)).as(Seq("p0", "sh")))
       .select(col("doc_id"), (col("p0") + 1).as("pos"), col("sh"))
@@ -1296,51 +1285,29 @@ object DedupQueries {
       "round(CAST(max(err_u) AS DOUBLE) / 1e6, 6) AS max_abs_err " +
       "FROM stats"
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_containment"   -> qContainment _,
-    "q_minhash_error" -> qMinhashError _,
-    "q_hll_error"     -> qHllError _,
-    "q_dedup_canonical" -> qDedupCanonical _,
-    "q_dup_spans"     -> qDupSpans _,
-    "q_dedup_spans_apply" -> qDedupSpansApply _,
-    "q_entity_resolution" -> qEntityResolution _,
-    "q_fuzzy_match"   -> qFuzzyMatch _,
-    "q_jaro_winkler"  -> qJaroWinkler _,
-    "q_decontaminate" -> qDecontaminate _,
-    "q_dedup_incremental" -> qDedupIncremental _,
-    "q_winnow_overlap" -> qWinnowOverlap _,
-    "q_dedup_exact"   -> qDedupExact _,
-    "q_ngram_jaccard" -> qNgramJaccard _,
-    "q_jaccard_partenum" -> qJaccardPartEnum _,
-    "q_minhash_lsh"   -> qMinhashLsh _,
-    "q_dedup_report"  -> qDedupReport _,
-    "q_simhash_pairs" -> qSimhashPairs _,
-    "q_hll_distinct"  -> qHllDistinct _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_containment"   -> qContainmentSql,
-    "q_minhash_error" -> qMinhashErrorSql,
-    "q_hll_error"     -> qHllErrorSql,
-    "q_dedup_canonical" -> qDedupCanonicalSql,
-    "q_dup_spans"      -> qDupSpansSql,
-    "q_dedup_spans_apply" -> qDedupSpansApplySql,
-    "q_entity_resolution" -> qEntityResolutionSql,
-    "q_fuzzy_match"    -> qFuzzyMatchSql,
-    "q_jaro_winkler"   -> qJaroWinklerSql,
-    "q_decontaminate"  -> qDecontaminateSql,
-    "q_dedup_incremental" -> qDedupIncrementalSql,
-    "q_dedup_exact"    -> qDedupExactSql,
-    "q_ngram_jaccard"  -> qNgramJaccardSql,
+  val queries: Seq[(String, Query)] = Seq(
+    "q_containment"       -> Query(qContainment, qContainmentSql),
+    "q_minhash_error"     -> Query(qMinhashError, qMinhashErrorSql),
+    "q_hll_error"         -> Query(qHllError, qHllErrorSql),
+    "q_dedup_canonical"   -> Query(qDedupCanonical, qDedupCanonicalSql),
+    "q_dup_spans"         -> Query(qDupSpans, qDupSpansSql),
+    "q_dedup_spans_apply" -> Query(qDedupSpansApply, qDedupSpansApplySql),
+    "q_entity_resolution" -> Query(qEntityResolution, qEntityResolutionSql),
+    "q_fuzzy_match"       -> Query(qFuzzyMatch, qFuzzyMatchSql),
+    "q_jaro_winkler"      -> Query(qJaroWinkler, qJaroWinklerSql),
+    "q_decontaminate"     -> Query(qDecontaminate, qDecontaminateSql),
+    "q_dedup_incremental" -> Query(qDedupIncremental, qDedupIncrementalSql),
+    "q_winnow_overlap"    -> Query(qWinnowOverlap, qWinnowOverlapSql),
+    "q_dedup_exact"       -> Query(qDedupExact, qDedupExactSql),
+    "q_ngram_jaccard"     -> Query(qNgramJaccard, qNgramJaccardSql),
     // PartEnum is result-identical to the prefix-filtered join BY
     // CONSTRUCTION (lossless candidate generation, same verification),
     // so the naive-join oracle replays it over the same deterministic
     // md5 doc sample (non-binding at the gate SFs)
-    "q_jaccard_partenum" -> qJaccardPartEnumSql,
-    "q_minhash_lsh"    -> qMinhashLshSql,
-    "q_dedup_report"   -> qDedupReportSql,
-    "q_simhash_pairs"  -> qSimhashPairsSql,
-    "q_winnow_overlap" -> qWinnowOverlapSql,
-    "q_hll_distinct"   -> qHllDistinctSql,
+    "q_jaccard_partenum"  -> Query(qJaccardPartEnum, qJaccardPartEnumSql),
+    "q_minhash_lsh"       -> Query(qMinhashLsh, qMinhashLshSql),
+    "q_dedup_report"      -> Query(qDedupReport, qDedupReportSql),
+    "q_simhash_pairs"     -> Query(qSimhashPairs, qSimhashPairsSql),
+    "q_hll_distinct"      -> Query(qHllDistinct, qHllDistinctSql),
   )
 }

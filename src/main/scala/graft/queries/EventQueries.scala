@@ -2432,127 +2432,65 @@ object EventQueries {
       "FROM rems, trem"
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_attribution_markov" -> qAttributionMarkov _,
-    "q_seq_patterns"     -> qSeqPatterns _,
-    "q_conversion_lag"   -> qConversionLag _,
-    "q_decompose"        -> qDecompose _,
-    "q_quantile_norm"    -> qQuantileNorm _,
-    "q_ks_test"          -> qKsTest _,
-    "q_burstiness"       -> qBurstiness _,
-    "q_mutual_info"      -> qMutualInfo _,
-    "q_rolling_slope"    -> qRollingSlope _,
-    "q_theil_sen"        -> qTheilSen _,
-    "q_kendall"          -> qKendall _,
-    "q_did"              -> qDid _,
-    "q_streaks"          -> qStreaks _,
-    "q_running_distinct" -> qRunningDistinct _,
-    "q_activity_bitmap"  -> qActivityBitmap _,
-    "q_concurrency"      -> qConcurrency _,
-    "q_ab_test"          -> qAbTest _,
-    "q_chi_square"       -> qChiSquare _,
-    "q_interarrival"     -> qInterarrival _,
-    "q_kaplan_meier"     -> qKaplanMeier _,
-    "q_entropy"          -> qEntropy _,
-    "q_psi"              -> qPsi _,
-    "q_rolling_distinct" -> qRollingDistinct _,
-    "q_attribution"      -> qAttribution _,
-    "q_topk_heap_groups" -> qTopkHeapGroups _,
-    "q_window_dedup"     -> qWindowDedup _,
-    "q_out_of_order"     -> qOutOfOrder _,
-    "q_session_paths"    -> qSessionPaths _,
-    "q_user_overlap"     -> qUserOverlap _,
-    "q_gini"             -> qGini _,
-    "q_new_vs_returning" -> qNewVsReturning _,
-    "q_rfm"              -> qRfm _,
-    "q_ewma"             -> qEwma _,
-    "q_holt_winters"     -> qHoltWinters _,
-    "q_transitions"      -> qTransitions _,
-    "q_seasonal_dow"     -> qSeasonalDow _,
-    "q_value_ranks"      -> qValueRanks _,
-    "q_mad_outliers"     -> qMadOutliers _,
-    "q_cohort"           -> qCohort _,
-    "q_mode"             -> qMode _,
-    "q_rolling_range"    -> qRollingRange _,
-    "q_twap"             -> qTwap _,
-    "q_argmax"           -> qArgmax _,
-    "q_deciles"          -> qDeciles _,
-    "q_gap_fill"         -> qGapFill _,
-    "q_outliers"         -> qOutliers _,
-    "q_sliding_window"   -> qSlidingWindow _,
-    "q_range_join"       -> qRangeJoin _,
-    "q_interval_join"    -> qIntervalJoin _,
-    "q_asof_nearest"     -> qAsofNearest _,
-    "q_cuped"            -> qCuped _,
-    "q_asof_join"        -> qAsofJoin _,
-    "q_session_window"   -> qSessionWindow _,
-    "q_tumbling_hourly"  -> qTumblingHourly _,
-    "q_sessionize"       -> qSessionize _,
-    "q_activity_windows" -> qUserActivityWindows _,
-    "q_top_users"        -> qTopUsersPerType _,
-    "q_json_extract"     -> qJsonExtract _,
-    "q_funnel"           -> qFunnel _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_attribution_markov" -> qAttributionMarkovSql,
-    "q_seq_patterns"     -> qSeqPatternsSql,
-    "q_conversion_lag"   -> qConversionLagSql,
-    "q_decompose"        -> qDecomposeSql,
-    "q_quantile_norm"    -> qQuantileNormSql,
-    "q_ks_test"          -> qKsTestSql,
-    "q_burstiness"       -> qBurstinessSql,
-    "q_mutual_info"      -> qMutualInfoSql,
-    "q_rolling_slope"    -> qRollingSlopeSql,
-    "q_theil_sen"        -> qTheilSenSql,
-    "q_kendall"          -> qKendallSql,
-    "q_did"              -> qDidSql,
-    "q_streaks"          -> qStreaksSql,
-    "q_running_distinct" -> qRunningDistinctSql,
-    "q_activity_bitmap"  -> qActivityBitmapSql,
-    "q_concurrency"      -> qConcurrencySql,
-    "q_ab_test"          -> qAbTestSql,
-    "q_chi_square"       -> qChiSquareSql,
-    "q_interarrival"     -> qInterarrivalSql,
-    "q_kaplan_meier"     -> qKaplanMeierSql,
-    "q_entropy"          -> qEntropySql,
-    "q_psi"              -> qPsiSql,
-    "q_rolling_distinct" -> qRollingDistinctSql,
-    "q_attribution"      -> qAttributionSql,
-    "q_topk_heap_groups" -> qTopkHeapGroupsSql,
-    "q_window_dedup"     -> qWindowDedupSql,
-    "q_out_of_order"     -> qOutOfOrderSql,
-    "q_session_paths"    -> qSessionPathsSql,
-    "q_user_overlap"     -> qUserOverlapSql,
-    "q_gini"             -> qGiniSql,
-    "q_new_vs_returning" -> qNewVsReturningSql,
-    "q_rfm"              -> qRfmSql,
-    "q_ewma"             -> qEwmaSql,
-    "q_holt_winters"     -> qHoltWintersSql,
-    "q_transitions"      -> qTransitionsSql,
-    "q_seasonal_dow"     -> qSeasonalDowSql,
-    "q_value_ranks"      -> qValueRanksSql,
-    "q_mad_outliers"     -> qMadOutliersSql,
-    "q_cohort"           -> qCohortSql,
-    "q_mode"             -> qModeSql,
-    "q_rolling_range"    -> qRollingRangeSql,
-    "q_twap"             -> qTwapSql,
-    "q_argmax"           -> qArgmaxSql,
-    "q_deciles"          -> qDecilesSql,
-    "q_gap_fill"         -> qGapFillSql,
-    "q_outliers"         -> qOutliersSql,
-    "q_sliding_window"   -> qSlidingWindowSql,
-    "q_range_join"       -> qRangeJoinSql,
-    "q_interval_join"    -> qIntervalJoinSql,
-    "q_asof_nearest"     -> qAsofNearestSql,
-    "q_cuped"            -> qCupedSql,
-    "q_asof_join"        -> qAsofJoinSql,
-    "q_session_window"   -> qSessionWindowSql,
-    "q_tumbling_hourly"  -> qTumblingHourlySql,
-    "q_sessionize"       -> qSessionizeSql,
-    "q_activity_windows" -> qUserActivityWindowsSql,
-    "q_top_users"        -> qTopUsersPerTypeSql,
-    "q_json_extract"     -> qJsonExtractSql,
-    "q_funnel"           -> qFunnelSql,
+  val queries: Seq[(String, Query)] = Seq(
+    "q_attribution_markov" -> Query(qAttributionMarkov, qAttributionMarkovSql),
+    "q_seq_patterns"       -> Query(qSeqPatterns, qSeqPatternsSql),
+    "q_conversion_lag"     -> Query(qConversionLag, qConversionLagSql),
+    "q_decompose"          -> Query(qDecompose, qDecomposeSql),
+    "q_quantile_norm"      -> Query(qQuantileNorm, qQuantileNormSql),
+    "q_ks_test"            -> Query(qKsTest, qKsTestSql),
+    "q_burstiness"         -> Query(qBurstiness, qBurstinessSql),
+    "q_mutual_info"        -> Query(qMutualInfo, qMutualInfoSql),
+    "q_rolling_slope"      -> Query(qRollingSlope, qRollingSlopeSql),
+    "q_theil_sen"          -> Query(qTheilSen, qTheilSenSql),
+    "q_kendall"            -> Query(qKendall, qKendallSql),
+    "q_did"                -> Query(qDid, qDidSql),
+    "q_streaks"            -> Query(qStreaks, qStreaksSql),
+    "q_running_distinct"   -> Query(qRunningDistinct, qRunningDistinctSql),
+    "q_activity_bitmap"    -> Query(qActivityBitmap, qActivityBitmapSql),
+    "q_concurrency"        -> Query(qConcurrency, qConcurrencySql),
+    "q_ab_test"            -> Query(qAbTest, qAbTestSql),
+    "q_chi_square"         -> Query(qChiSquare, qChiSquareSql),
+    "q_interarrival"       -> Query(qInterarrival, qInterarrivalSql),
+    "q_kaplan_meier"       -> Query(qKaplanMeier, qKaplanMeierSql),
+    "q_entropy"            -> Query(qEntropy, qEntropySql),
+    "q_psi"                -> Query(qPsi, qPsiSql),
+    "q_rolling_distinct"   -> Query(qRollingDistinct, qRollingDistinctSql),
+    "q_attribution"        -> Query(qAttribution, qAttributionSql),
+    "q_topk_heap_groups"   -> Query(qTopkHeapGroups, qTopkHeapGroupsSql),
+    "q_window_dedup"       -> Query(qWindowDedup, qWindowDedupSql),
+    "q_out_of_order"       -> Query(qOutOfOrder, qOutOfOrderSql),
+    "q_session_paths"      -> Query(qSessionPaths, qSessionPathsSql),
+    "q_user_overlap"       -> Query(qUserOverlap, qUserOverlapSql),
+    "q_gini"               -> Query(qGini, qGiniSql),
+    "q_new_vs_returning"   -> Query(qNewVsReturning, qNewVsReturningSql),
+    "q_rfm"                -> Query(qRfm, qRfmSql),
+    "q_ewma"               -> Query(qEwma, qEwmaSql),
+    "q_holt_winters"       -> Query(qHoltWinters, qHoltWintersSql),
+    "q_transitions"        -> Query(qTransitions, qTransitionsSql),
+    "q_seasonal_dow"       -> Query(qSeasonalDow, qSeasonalDowSql),
+    "q_value_ranks"        -> Query(qValueRanks, qValueRanksSql),
+    "q_mad_outliers"       -> Query(qMadOutliers, qMadOutliersSql),
+    "q_cohort"             -> Query(qCohort, qCohortSql),
+    "q_mode"               -> Query(qMode, qModeSql),
+    "q_rolling_range"      -> Query(qRollingRange, qRollingRangeSql),
+    "q_twap"               -> Query(qTwap, qTwapSql),
+    "q_argmax"             -> Query(qArgmax, qArgmaxSql),
+    "q_deciles"            -> Query(qDeciles, qDecilesSql),
+    "q_gap_fill"           -> Query(qGapFill, qGapFillSql),
+    "q_outliers"           -> Query(qOutliers, qOutliersSql),
+    "q_sliding_window"     -> Query(qSlidingWindow, qSlidingWindowSql),
+    "q_range_join"         -> Query(qRangeJoin, qRangeJoinSql),
+    "q_interval_join"      -> Query(qIntervalJoin, qIntervalJoinSql),
+    "q_asof_nearest"       -> Query(qAsofNearest, qAsofNearestSql),
+    "q_cuped"              -> Query(qCuped, qCupedSql),
+    "q_asof_join"          -> Query(qAsofJoin, qAsofJoinSql),
+    "q_session_window"     -> Query(qSessionWindow, qSessionWindowSql),
+    "q_tumbling_hourly"    -> Query(qTumblingHourly, qTumblingHourlySql),
+    "q_sessionize"         -> Query(qSessionize, qSessionizeSql),
+    "q_activity_windows"   -> Query(qUserActivityWindows, qUserActivityWindowsSql),
+    "q_top_users"          -> Query(qTopUsersPerType, qTopUsersPerTypeSql),
+    "q_json_extract"       -> Query(qJsonExtract, qJsonExtractSql),
+    "q_funnel"             -> Query(qFunnel, qFunnelSql),
   )
 }

@@ -1862,61 +1862,32 @@ object GraphQueries {
       s"SELECT comm AS community, count(*) AS n_nodes FROM $fin GROUP BY 1"
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_hits"         -> qHits _,
-    "q_random_walks" -> qRandomWalks _,
-    "q_communities"  -> qCommunities _,
-    "q_communities_leiden" -> qCommunitiesLeiden _,
-    "q_betweenness"  -> qBetweenness _,
-    "q_eff_diameter" -> qEffDiameter _,
-    "q_link_predict" -> qLinkPredict _,
-    "q_closeness"    -> qCloseness _,
-    "q_scc"        -> qScc _,
-    "q_item_cf"    -> qItemCf _,
-    "q_reciprocity" -> qReciprocity _,
-    "q_assortativity" -> qAssortativity _,
-    "q_clustering_coef" -> qClusteringCoef _,
-    "q_edge_novelty" -> qEdgeNovelty _,
-    "q_cf_hitrate" -> qCfHitrate _,
-    "q_sssp"       -> qSssp _,
-    "q_sssp_path"  -> qSsspPath _,
-    "q_modularity" -> qModularity _,
-    "q_bfs"        -> qBfs _,
-    "q_triangles"  -> qTriangles _,
-    "q_components" -> qComponents _,
-    "q_kcore"      -> qKcore _,
-    "q_degree_dist" -> qDegreeDist _,
-    "q_label_prop" -> qLabelProp _,
-    "q_ktruss"     -> qKtruss _,
-    "q_itemsets"   -> qItemsets _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_hits"         -> qHitsSql,
-    "q_random_walks" -> qRandomWalksSql,
-    "q_communities"  -> qCommunitiesSql,
-    "q_communities_leiden" -> qCommunitiesLeidenSql,
-    "q_betweenness"  -> qBetweennessSql,
-    "q_eff_diameter" -> qEffDiameterSql,
-    "q_link_predict" -> qLinkPredictSql,
-    "q_closeness"    -> qClosenessSql,
-    "q_scc"        -> qSccSql,
-    "q_item_cf"    -> qItemCfSql,
-    "q_reciprocity" -> qReciprocitySql,
-    "q_assortativity" -> qAssortativitySql,
-    "q_clustering_coef" -> qClusteringCoefSql,
-    "q_edge_novelty" -> qEdgeNoveltySql,
-    "q_cf_hitrate" -> qCfHitrateSql,
-    "q_sssp"       -> qSsspSql,
-    "q_sssp_path"  -> qSsspPathSql,
-    "q_modularity" -> qModularitySql,
-    "q_bfs"        -> qBfsSql,
-    "q_triangles"  -> qTrianglesSql,
-    "q_components" -> qComponentsSql,
-    "q_kcore"      -> qKcoreSql,
-    "q_degree_dist" -> qDegreeDistSql,
-    "q_label_prop" -> qLabelPropSql,
-    "q_ktruss"     -> qKtrussSql,
-    "q_itemsets"   -> qItemsetsSql,
+  val queries: Seq[(String, Query)] = Seq(
+    "q_hits"               -> Query(qHits, qHitsSql),
+    "q_random_walks"       -> Query(qRandomWalks, qRandomWalksSql),
+    "q_communities"        -> Query(qCommunities, qCommunitiesSql),
+    "q_communities_leiden" -> Query(qCommunitiesLeiden, qCommunitiesLeidenSql),
+    "q_betweenness"        -> Query(qBetweenness, qBetweennessSql),
+    "q_eff_diameter"       -> Query(qEffDiameter, qEffDiameterSql),
+    "q_link_predict"       -> Query(qLinkPredict, qLinkPredictSql),
+    "q_closeness"          -> Query(qCloseness, qClosenessSql),
+    "q_scc"                -> Query(qScc, qSccSql),
+    "q_item_cf"            -> Query(qItemCf, qItemCfSql),
+    "q_reciprocity"        -> Query(qReciprocity, qReciprocitySql),
+    "q_assortativity"      -> Query(qAssortativity, qAssortativitySql),
+    "q_clustering_coef"    -> Query(qClusteringCoef, qClusteringCoefSql),
+    "q_edge_novelty"       -> Query(qEdgeNovelty, qEdgeNoveltySql),
+    "q_cf_hitrate"         -> Query(qCfHitrate, qCfHitrateSql),
+    "q_sssp"               -> Query(qSssp, qSsspSql),
+    "q_sssp_path"          -> Query(qSsspPath, qSsspPathSql),
+    "q_modularity"         -> Query(qModularity, qModularitySql),
+    "q_bfs"                -> Query(qBfs, qBfsSql),
+    "q_triangles"          -> Query(qTriangles, qTrianglesSql),
+    "q_components"         -> Query(qComponents, qComponentsSql),
+    "q_kcore"              -> Query(qKcore, qKcoreSql),
+    "q_degree_dist"        -> Query(qDegreeDist, qDegreeDistSql),
+    "q_label_prop"         -> Query(qLabelProp, qLabelPropSql),
+    "q_ktruss"             -> Query(qKtruss, qKtrussSql),
+    "q_itemsets"           -> Query(qItemsets, qItemsetsSql),
   )
 }

@@ -329,31 +329,17 @@ object KvQueries {
       "CAST(max(n_nationkey) AS BIGINT) AS max_key, max(n_name) AS max_name, " +
       "count(n_regionkey) AS n_regions FROM nation"
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_kv_agg_pushdown" -> qKvAggPushdown _,
-    "q_partition_prune" -> qPartitionPrune _,
-    "q_kv_scan"        -> qKvScan _,
-    "q_kv_lookup_join" -> qKvLookupJoin _,
-    "q_kv_roundtrip"   -> qKvRoundtrip _,
-    "q_csv_roundtrip"  -> qCsvRoundtrip _,
-    "q_text_roundtrip" -> qTextRoundtrip _,
-    "q_json_roundtrip" -> qJsonRoundtrip _,
-    "q_orc_roundtrip"  -> qOrcRoundtrip _,
-    "q_compact"        -> qCompact _,
-    "q_schema_evolution" -> qSchemaEvolution _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_kv_agg_pushdown" -> qKvAggPushdownSql,
-    "q_partition_prune" -> qPartitionPruneSql,
-    "q_kv_scan"        -> qKvScanSql,
-    "q_kv_lookup_join" -> qKvLookupJoinSql,
-    "q_kv_roundtrip"   -> qKvRoundtripSql,
-    "q_csv_roundtrip"  -> qCsvRoundtripSql,
-    "q_text_roundtrip" -> qTextRoundtripSql,
-    "q_json_roundtrip" -> qJsonRoundtripSql,
-    "q_orc_roundtrip"  -> qOrcRoundtripSql,
-    "q_compact"        -> qCompactSql,
-    "q_schema_evolution" -> qSchemaEvolutionSql,
+  val queries: Seq[(String, Query)] = Seq(
+    "q_kv_agg_pushdown"  -> Query(qKvAggPushdown, qKvAggPushdownSql),
+    "q_partition_prune"  -> Query(qPartitionPrune, qPartitionPruneSql),
+    "q_kv_scan"          -> Query(qKvScan, qKvScanSql),
+    "q_kv_lookup_join"   -> Query(qKvLookupJoin, qKvLookupJoinSql),
+    "q_kv_roundtrip"     -> Query(qKvRoundtrip, qKvRoundtripSql),
+    "q_csv_roundtrip"    -> Query(qCsvRoundtrip, qCsvRoundtripSql),
+    "q_text_roundtrip"   -> Query(qTextRoundtrip, qTextRoundtripSql),
+    "q_json_roundtrip"   -> Query(qJsonRoundtrip, qJsonRoundtripSql),
+    "q_orc_roundtrip"    -> Query(qOrcRoundtrip, qOrcRoundtripSql),
+    "q_compact"          -> Query(qCompact, qCompactSql),
+    "q_schema_evolution" -> Query(qSchemaEvolution, qSchemaEvolutionSql),
   )
 }

@@ -413,27 +413,15 @@ object LakehouseQueries {
 
   // ── Registration ───────────────────────────────────────────────────────
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_zorder"        -> qZorder _,
-    "q_merge_upsert"  -> qMergeUpsert _,
-    "q_incr_agg"      -> qIncrAgg _,
-    "q_ref_integrity" -> qRefIntegrity _,
-    "q_attr_history"  -> qAttrHistory _,
-    "q_compaction_plan" -> qCompactionPlan _,
-    "q_zone_pruning"  -> qZonePruning _,
-    "q_incr_join"     -> qIncrJoin _,
-    "q_skew_metrics"  -> qSkewMetrics _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_zorder"        -> qZorderSql,
-    "q_merge_upsert"  -> qMergeUpsertSql,
-    "q_incr_agg"      -> qIncrAggSql,
-    "q_ref_integrity" -> qRefIntegritySql,
-    "q_attr_history"  -> qAttrHistorySql,
-    "q_compaction_plan" -> qCompactionPlanSql,
-    "q_zone_pruning"  -> qZonePruningSql,
-    "q_incr_join"     -> qIncrJoinSql,
-    "q_skew_metrics"  -> qSkewMetricsSql,
+  val queries: Seq[(String, Query)] = Seq(
+    "q_zorder"          -> Query(qZorder, qZorderSql),
+    "q_merge_upsert"    -> Query(qMergeUpsert, qMergeUpsertSql),
+    "q_incr_agg"        -> Query(qIncrAgg, qIncrAggSql),
+    "q_ref_integrity"   -> Query(qRefIntegrity, qRefIntegritySql),
+    "q_attr_history"    -> Query(qAttrHistory, qAttrHistorySql),
+    "q_compaction_plan" -> Query(qCompactionPlan, qCompactionPlanSql),
+    "q_zone_pruning"    -> Query(qZonePruning, qZonePruningSql),
+    "q_incr_join"       -> Query(qIncrJoin, qIncrJoinSql),
+    "q_skew_metrics"    -> Query(qSkewMetrics, qSkewMetricsSql),
   )
 }

@@ -154,17 +154,10 @@ object MRQueries {
     "SELECT CAST(n_regionkey AS VARCHAR) AS region, count(*) AS n_nations " +
       "FROM nation GROUP BY 1"
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_mr_wordcount"  -> qMrWordCount _,
-    "q_mr_substr_agg" -> qMrSubstrAgg _,
-    "q_mr_config"     -> qMrConfig _,
-    "q_mr_q3"         -> qMrQ3 _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_mr_wordcount"  -> qMrWordCountSql,
-    "q_mr_substr_agg" -> qMrSubstrAggSql,
-    "q_mr_config"     -> qMrConfigSql,
-    "q_mr_q3"         -> qMrQ3Sql,
+  val queries: Seq[(String, Query)] = Seq(
+    "q_mr_wordcount"  -> Query(qMrWordCount, qMrWordCountSql),
+    "q_mr_substr_agg" -> Query(qMrSubstrAgg, qMrSubstrAggSql),
+    "q_mr_config"     -> Query(qMrConfig, qMrConfigSql),
+    "q_mr_q3"         -> Query(qMrQ3, qMrQ3Sql),
   )
 }

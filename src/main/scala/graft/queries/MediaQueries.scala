@@ -837,27 +837,15 @@ object MediaQueries {
       "octet_length(encode(text)) AS n_bytes, FALSE AS real_resize " +
       "FROM documents WHERE doc_id % 3 = 0"
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_media_thumbs"   -> qMediaThumbs _,
-    "q_media_scenes"   -> qMediaScenes _,
-    "q_media_energy"   -> qMediaEnergy _,
-    "q_audio_bands"    -> qAudioBands _,
-    "q_media_meta"     -> qMediaMeta _,
-    "q_media_features" -> qMediaFeatures _,
-    "q_media_by_kind"  -> qMediaByKind _,
-    "q_media_frames"   -> qMediaFrames _,
-    "q_media_audio"    -> qMediaAudio _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_media_thumbs"   -> qMediaThumbsSql,
-    "q_media_scenes"   -> qMediaScenesSql,
-    "q_media_energy"   -> qMediaEnergySql,
-    "q_audio_bands"    -> qAudioBandsSql,
-    "q_media_meta"     -> qMediaMetaSql,
-    "q_media_features" -> qMediaFeaturesSql,
-    "q_media_by_kind"  -> qMediaByKindSql,
-    "q_media_frames"   -> qMediaFramesSql,
-    "q_media_audio"    -> qMediaAudioSql,
+  val queries: Seq[(String, Query)] = Seq(
+    "q_media_thumbs"   -> Query(qMediaThumbs, qMediaThumbsSql),
+    "q_media_scenes"   -> Query(qMediaScenes, qMediaScenesSql),
+    "q_media_energy"   -> Query(qMediaEnergy, qMediaEnergySql),
+    "q_audio_bands"    -> Query(qAudioBands, qAudioBandsSql),
+    "q_media_meta"     -> Query(qMediaMeta, qMediaMetaSql),
+    "q_media_features" -> Query(qMediaFeatures, qMediaFeaturesSql),
+    "q_media_by_kind"  -> Query(qMediaByKind, qMediaByKindSql),
+    "q_media_frames"   -> Query(qMediaFrames, qMediaFramesSql),
+    "q_media_audio"    -> Query(qMediaAudio, qMediaAudioSql),
   )
 }

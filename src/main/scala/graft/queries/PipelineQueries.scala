@@ -370,23 +370,13 @@ object PipelineQueries {
       s"CAST(sum(CASE WHEN tvd_r > $TClosenessT THEN n_g ELSE 0 END) AS BIGINT) AS rows_at_risk " +
       "FROM tvd"
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_dp_counts"     -> qDpCounts _,
-    "q_t_closeness"   -> qTCloseness _,
-    "q_k_anonymity"   -> qKAnonymity _,
-    "q_l_diversity"   -> qLDiversity _,
-    "q_pipeline_exact" -> qPipelineExact _,
-    "q_gate_attrition" -> qGateAttrition _,
-    "q_pipeline_full"  -> qPipelineFull _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_dp_counts"     -> qDpCountsSql,
-    "q_t_closeness"   -> qTClosenessSql,
-    "q_k_anonymity"   -> qKAnonymitySql,
-    "q_l_diversity"   -> qLDiversitySql,
-    "q_gate_attrition" -> qGateAttritionSql,
-    "q_pipeline_exact" -> qPipelineExactSql,
-    "q_pipeline_full"  -> qPipelineFullSql,
+  val queries: Seq[(String, Query)] = Seq(
+    "q_dp_counts"      -> Query(qDpCounts, qDpCountsSql),
+    "q_t_closeness"    -> Query(qTCloseness, qTClosenessSql),
+    "q_k_anonymity"    -> Query(qKAnonymity, qKAnonymitySql),
+    "q_l_diversity"    -> Query(qLDiversity, qLDiversitySql),
+    "q_pipeline_exact" -> Query(qPipelineExact, qPipelineExactSql),
+    "q_gate_attrition" -> Query(qGateAttrition, qGateAttritionSql),
+    "q_pipeline_full"  -> Query(qPipelineFull, qPipelineFullSql),
   )
 }

@@ -47,7 +47,6 @@ object SimilarityQueries {
     * then does a single codegen'd dot per pair instead of three
     * interpreted folds — ~4× on the all-pairs bench). */
   private def vecs(s: SparkSession, d: String): DataFrame = {
-    DotProduct.register(s)
     Tables.embeddings(s, d)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("nrm", sqrt(DotProduct.dot(col("v"), col("v"))))
@@ -204,7 +203,6 @@ object SimilarityQueries {
   def annLsh(vecFrame: DataFrame, nBits: Int, bands: Int, k: Int,
       queryFilter: Column, dims: Int): DataFrame = {
     require(nBits % bands == 0, "bands must divide nBits")
-    DotProduct.register(vecFrame.sparkSession)
     val bandBits = nBits / bands
     val mask = (1L << bandBits) - 1
     val sketched = vecFrame.select(col("vec_id"), col("v"),
@@ -1167,7 +1165,6 @@ object SimilarityQueries {
     }
 
   def qAnnUpsert(s: SparkSession, d: String): DataFrame = {
-    DotProduct.register(s)
     val split = upsertSplit(s, d)
     val dir = annIndexDir(d, suffix = s"_base$split")
     if (!graft.ArtifactCache.ready(dir, "codes"))
@@ -1777,7 +1774,6 @@ object SimilarityQueries {
   private val CoresetPool = 4 * CoresetK // KMeans.seed's oversample size
 
   def qCoreset(s: SparkSession, d: String): DataFrame = {
-    DotProduct.register(s)
     import s.implicits._
     val v = vecs(s, d).select(col("vec_id").as("id"), col("v"))
     // CoresetPool = 4·CoresetK: exactly KMeans's seeding oversample, so
@@ -1966,63 +1962,33 @@ object SimilarityQueries {
       "CAST(0 AS BIGINT), CAST(0 AS BIGINT), n FROM noise"
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_pca"           -> qPca _,
-    "q_pca_project"   -> qPcaProject _,
-    "q_dbscan_grid"   -> qDbscanGrid _,
-    "q_embed_outliers" -> qEmbedOutliers _,
-    "q_coreset"       -> qCoreset _,
-    "q_feature_scale" -> qFeatureScale _,
-    "q_rrf"           -> qRrf _,
-    "q_spatial_join"  -> qSpatialJoin _,
-    "q_mmr"           -> qMmr _,
-    "q_quantize"    -> qQuantize _,
-    "q_ann_ivf"     -> qAnnIvf _,
-    "q_semdedup"    -> qSemdedup _,
-    "q_semdedup_keep" -> qSemdedupKeep _,
-    "q_cluster_purity" -> qClusterPurity _,
-    "q_knn_classify" -> qKnnClassify _,
-    "q_ann_ivfpq"      -> qAnnIvfPq _,
-    "q_ann_serve"      -> qAnnServe _,
-    "q_ann_upsert"     -> qAnnUpsert _,
-    "q_ivfpq_recall"   -> qIvfPqRecall _,
-    "q_ann_pq"      -> qAnnPq _,
-    "q_centroids"   -> qCentroids _,
-    "q_knn_brute"   -> qKnnBrute _,
-    "q_knn_heap"    -> qKnnHeap _,
-    "q_cos_neardup" -> qCosNearDup _,
-    "q_ann_lsh"     -> qAnnLsh _,
-    "q_srp_error"   -> qSrpError _,
-    "q_ivf_recall"  -> qIvfRecall _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_pca"            -> qPcaSql,
-    "q_pca_project"    -> qPcaProjectSql,
-    "q_dbscan_grid"    -> qDbscanGridSql,
-    "q_embed_outliers" -> qEmbedOutliersSql,
-    "q_coreset"        -> qCoresetSql,
-    "q_feature_scale"  -> qFeatureScaleSql,
-    "q_rrf"            -> qRrfSql,
-    "q_spatial_join"   -> qSpatialJoinSql,
-    "q_mmr"            -> qMmrSql,
-    "q_quantize"    -> qQuantizeSql,
-    "q_centroids"   -> qCentroidsSql,
-    "q_knn_brute"   -> qKnnBruteSql,
-    "q_knn_heap"    -> qKnnHeapSql,
-    "q_cos_neardup" -> qCosNearDupSql,
-    "q_ann_lsh"     -> qAnnLshSql,
-    "q_srp_error"   -> qSrpErrorSql,
-    "q_ivf_recall"  -> qIvfRecallSql,
-    "q_ann_ivf"     -> qAnnIvfSql,
-    "q_semdedup"    -> qSemdedupSql,
-    "q_semdedup_keep" -> qSemdedupKeepSql,
-    "q_cluster_purity" -> qClusterPuritySql,
-    "q_knn_classify" -> qKnnClassifySql,
-    "q_ann_ivfpq"      -> qAnnIvfPqSql,
-    "q_ann_serve"      -> qAnnServeSql,
-    "q_ann_upsert"     -> qAnnUpsertSql,
-    "q_ivfpq_recall"   -> qIvfPqRecallSql,
-    "q_ann_pq"      -> qAnnPqSql,
+  val queries: Seq[(String, Query)] = Seq(
+    "q_pca"            -> Query(qPca, qPcaSql),
+    "q_pca_project"    -> Query(qPcaProject, qPcaProjectSql),
+    "q_dbscan_grid"    -> Query(qDbscanGrid, qDbscanGridSql),
+    "q_embed_outliers" -> Query(qEmbedOutliers, qEmbedOutliersSql),
+    "q_coreset"        -> Query(qCoreset, qCoresetSql),
+    "q_feature_scale"  -> Query(qFeatureScale, qFeatureScaleSql),
+    "q_rrf"            -> Query(qRrf, qRrfSql),
+    "q_spatial_join"   -> Query(qSpatialJoin, qSpatialJoinSql),
+    "q_mmr"            -> Query(qMmr, qMmrSql),
+    "q_quantize"       -> Query(qQuantize, qQuantizeSql),
+    "q_ann_ivf"        -> Query(qAnnIvf, qAnnIvfSql),
+    "q_semdedup"       -> Query(qSemdedup, qSemdedupSql),
+    "q_semdedup_keep"  -> Query(qSemdedupKeep, qSemdedupKeepSql),
+    "q_cluster_purity" -> Query(qClusterPurity, qClusterPuritySql),
+    "q_knn_classify"   -> Query(qKnnClassify, qKnnClassifySql),
+    "q_ann_ivfpq"      -> Query(qAnnIvfPq, qAnnIvfPqSql),
+    "q_ann_serve"      -> Query(qAnnServe, qAnnServeSql),
+    "q_ann_upsert"     -> Query(qAnnUpsert, qAnnUpsertSql),
+    "q_ivfpq_recall"   -> Query(qIvfPqRecall, qIvfPqRecallSql),
+    "q_ann_pq"         -> Query(qAnnPq, qAnnPqSql),
+    "q_centroids"      -> Query(qCentroids, qCentroidsSql),
+    "q_knn_brute"      -> Query(qKnnBrute, qKnnBruteSql),
+    "q_knn_heap"       -> Query(qKnnHeap, qKnnHeapSql),
+    "q_cos_neardup"    -> Query(qCosNearDup, qCosNearDupSql),
+    "q_ann_lsh"        -> Query(qAnnLsh, qAnnLshSql),
+    "q_srp_error"      -> Query(qSrpError, qSrpErrorSql),
+    "q_ivf_recall"     -> Query(qIvfRecall, qIvfRecallSql),
   )
 }

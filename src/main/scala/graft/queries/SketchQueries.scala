@@ -574,27 +574,15 @@ object SketchQueries {
       "round(est_a + est_b - est_union, 4) AS est_intersect FROM piv"
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_hll_intersect"   -> qHllIntersect _,
-    "q_join_size_est"   -> qJoinSizeEst _,
-    "q_hll_groups"      -> qHllGroups _,
-    "q_quantile_sketch" -> qQuantileSketch _,
-    "q_qsketch_error"   -> qQsketchError _,
-    "q_hll_rolling"     -> qHllRolling _,
-    "q_heavy_hitters" -> qHeavyHitters _,
-    "q_cms_error"     -> qCmsError _,
-    "q_bloom_prune"   -> qBloomPrune _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_hll_intersect"   -> qHllIntersectSql,
-    "q_join_size_est"   -> qJoinSizeEstSql,
-    "q_hll_groups"      -> qHllGroupsSql,
-    "q_quantile_sketch" -> qQuantileSketchSql,
-    "q_qsketch_error"   -> qQsketchErrorSql,
-    "q_hll_rolling"     -> qHllRollingSql,
-    "q_heavy_hitters" -> qHeavyHittersSql,
-    "q_cms_error"     -> qCmsErrorSql,
-    "q_bloom_prune"   -> qBloomPruneSql,
+  val queries: Seq[(String, Query)] = Seq(
+    "q_hll_intersect"   -> Query(qHllIntersect, qHllIntersectSql),
+    "q_join_size_est"   -> Query(qJoinSizeEst, qJoinSizeEstSql),
+    "q_hll_groups"      -> Query(qHllGroups, qHllGroupsSql),
+    "q_quantile_sketch" -> Query(qQuantileSketch, qQuantileSketchSql),
+    "q_qsketch_error"   -> Query(qQsketchError, qQsketchErrorSql),
+    "q_hll_rolling"     -> Query(qHllRolling, qHllRollingSql),
+    "q_heavy_hitters"   -> Query(qHeavyHitters, qHeavyHittersSql),
+    "q_cms_error"       -> Query(qCmsError, qCmsErrorSql),
+    "q_bloom_prune"     -> Query(qBloomPrune, qBloomPruneSql),
   )
 }

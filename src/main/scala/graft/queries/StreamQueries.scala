@@ -499,42 +499,24 @@ object StreamQueries {
         col("version_no"), col("m.valid_to").isNull.as("is_current"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_stream_scd"      -> qStreamScd _,
-    "q_stream_upsert"   -> qStreamUpsert _,
-    "q_stream_enrich"   -> qStreamEnrich _,
-    "q_stream_sliding"  -> qStreamSliding _,
-    "q_stream_dedup"    -> qStreamDedup _,
-    "q_stream_tumbling" -> qStreamTumbling _,
-    "q_stream_sessions" -> qStreamSessions _,
-    "q_stream_running"  -> qStreamRunning _,
-    "q_stream_join"     -> qStreamJoin _,
-    "q_stream_semi_join" -> qStreamSemiJoin _,
-    "q_stream_left_join" -> qStreamLeftJoin _,
-    "q_stream_full_join" -> qStreamFullJoin _,
-    "q_stream_right_join" -> qStreamRightJoin _,
-    "q_stream_chain"    -> qStreamChain _,
-    "q_stream_topk"     -> qStreamTopk _,
-    "q_kv_changefeed"   -> qKvChangefeed _,
-  )
-
-  /** Same ground truth as the batch forms — that is the point. */
-  val oracles: Map[String, String] = Map(
-    "q_stream_scd"      -> LakehouseQueries.qAttrHistorySql,
-    "q_stream_upsert"   -> qStreamUpsertSql,
-    "q_stream_enrich"   -> qStreamEnrichSql,
-    "q_stream_sliding"  -> EventQueries.qSlidingWindowSql,
-    "q_stream_dedup"    -> qStreamDedupSql,
-    "q_stream_tumbling" -> EventQueries.qTumblingHourlySql,
-    "q_stream_sessions" -> EventQueries.qSessionWindowSql,
-    "q_stream_running"  -> qStreamRunningSql,
-    "q_stream_topk"     -> qStreamTopkSql,
-    "q_stream_join"     -> qStreamJoinSql,
-    "q_stream_semi_join" -> qStreamSemiJoinSql,
-    "q_stream_left_join" -> qStreamLeftJoinSql,
-    "q_stream_full_join" -> qStreamFullJoinSql,
-    "q_stream_right_join" -> qStreamRightJoinSql,
-    "q_stream_chain"    -> qStreamChainSql,
-    "q_kv_changefeed"   -> qKvChangefeedSql,
+  /** Each stream form replays its batch twin's oracle: same ground truth
+    * as the batch forms — that is the point. */
+  val queries: Seq[(String, Query)] = Seq(
+    "q_stream_scd"        -> Query(qStreamScd, LakehouseQueries.qAttrHistorySql),
+    "q_stream_upsert"     -> Query(qStreamUpsert, qStreamUpsertSql),
+    "q_stream_enrich"     -> Query(qStreamEnrich, qStreamEnrichSql),
+    "q_stream_sliding"    -> Query(qStreamSliding, EventQueries.qSlidingWindowSql),
+    "q_stream_dedup"      -> Query(qStreamDedup, qStreamDedupSql),
+    "q_stream_tumbling"   -> Query(qStreamTumbling, EventQueries.qTumblingHourlySql),
+    "q_stream_sessions"   -> Query(qStreamSessions, EventQueries.qSessionWindowSql),
+    "q_stream_running"    -> Query(qStreamRunning, qStreamRunningSql),
+    "q_stream_join"       -> Query(qStreamJoin, qStreamJoinSql),
+    "q_stream_semi_join"  -> Query(qStreamSemiJoin, qStreamSemiJoinSql),
+    "q_stream_left_join"  -> Query(qStreamLeftJoin, qStreamLeftJoinSql),
+    "q_stream_full_join"  -> Query(qStreamFullJoin, qStreamFullJoinSql),
+    "q_stream_right_join" -> Query(qStreamRightJoin, qStreamRightJoinSql),
+    "q_stream_chain"      -> Query(qStreamChain, qStreamChainSql),
+    "q_stream_topk"       -> Query(qStreamTopk, qStreamTopkSql),
+    "q_kv_changefeed"     -> Query(qKvChangefeed, qKvChangefeedSql),
   )
 }

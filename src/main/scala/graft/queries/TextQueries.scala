@@ -809,7 +809,6 @@ object TextQueries {
   def qBoilerplate(s: SparkSession, d: String): DataFrame = {
     // codegen positional shingles — the column-algebra spelling costs
     // O(len²) interpreted work per doc (measured 17× on this query)
-    graft.functions.Shingles.register(s)
     val spans = Tables.documents(s, d)
       .select(col("source"),
         explode(graft.functions.Shingles.shinglesAll(col("text"), BoilerW)).as("sh"))
@@ -1084,7 +1083,6 @@ object TextQueries {
     * expression's scaladoc. The oracle SQL below still replays the
     * identical DP (same costs, same ·16+s tie-break). */
   private def ulmEStep(words: DataFrame, vocab: Map[String, Long]): DataFrame = {
-    graft.functions.UnigramSegment.register(words.sparkSession)
     words
       .select(col("wfreq"), explode(
         graft.functions.UnigramSegment.segment(col("word"), vocab, UlmMaxPiece))
@@ -1664,77 +1662,40 @@ object TextQueries {
       s"FROM (SELECT * FROM keyed ORDER BY k DESC, doc_id ASC LIMIT $EsK) x"
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_sample_es"       -> qSampleEs _,
-    "q_topic_terms"     -> qTopicTerms _,
-    "q_textrank"        -> qTextrank _,
-    "q_mix_temperature" -> qMixTemperature _,
-    "q_split"          -> qSplit _,
-    "q_bm25"           -> qBm25 _,
-    "q_zipf"           -> qZipf _,
-    "q_vocab"          -> qVocab _,
-    "q_pmi"            -> qPmi _,
-    "q_lm_score"       -> qLmScore _,
-    "q_sample_weighted" -> qSampleWeighted _,
-    "q_chunk"          -> qChunk _,
-    "q_inverted_index" -> qInvertedIndex _,
-    "q_sample_hash"   -> qSampleHash _,
-    "q_sample_stratified" -> qSampleStratified _,
-    "q_tfidf"         -> qTfIdf _,
-    "q_redact"        -> qRedact _,
-    "q_pack_bins"     -> qPackBins _,
-    "q_mixture"       -> qMixture _,
-    "q_sample_group"  -> qSampleGroup _,
-    "q_token_bpe"     -> qTokenBpe _,
-    "q_bpe_merges"    -> qBpeMerges _,
-    "q_bpe_train"     -> qBpeTrain _,
-    "q_unigram_lm"    -> qUnigramLm _,
-    "q_bpe_apply"     -> qBpeApply _,
-    "q_source_overlap" -> qSourceOverlap _,
-    "q_boilerplate"   -> qBoilerplate _,
-    "q_lang_confusion" -> qLangConfusion _,
-    "q_gate_auc" -> qGateAuc _,
-    "q_token_count"   -> qTokenCount _,
-    "q_quality_score" -> qQualityScore _,
-    "q_lang_id"       -> qLangId _,
-    "q_fingerprint"   -> qFingerprint _,
-    "q_repetition"    -> qRepetition _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_sample_es"       -> qSampleEsSql,
-    "q_topic_terms"     -> qTopicTermsSql,
-    "q_textrank"        -> qTextrankSql,
-    "q_mix_temperature" -> qMixTemperatureSql,
-    "q_split"           -> qSplitSql,
-    "q_bm25"            -> qBm25Sql,
-    "q_zipf"            -> qZipfSql,
-    "q_vocab"          -> qVocabSql,
-    "q_pmi"            -> qPmiSql,
-    "q_lm_score"       -> qLmScoreSql,
-    "q_sample_weighted" -> qSampleWeightedSql,
-    "q_chunk"          -> qChunkSql,
-    "q_inverted_index" -> qInvertedIndexSql,
-    "q_sample_hash"   -> qSampleHashSql,
-    "q_sample_stratified" -> qSampleStratifiedSql,
-    "q_tfidf"         -> qTfIdfSql,
-    "q_redact"        -> qRedactSql,
-    "q_pack_bins"     -> qPackBinsSql,
-    "q_mixture"       -> qMixtureSql,
-    "q_sample_group"  -> qSampleGroupSql,
-    "q_token_bpe"     -> qTokenBpeSql,
-    "q_bpe_merges"    -> qBpeMergesSql,
-    "q_bpe_train"     -> qBpeTrainSql,
-    "q_unigram_lm"    -> qUnigramLmSql,
-    "q_bpe_apply"     -> qBpeApplySql,
-    "q_source_overlap" -> qSourceOverlapSql,
-    "q_boilerplate"   -> qBoilerplateSql,
-    "q_lang_confusion" -> qLangConfusionSql,
-    "q_gate_auc" -> qGateAucSql,
-    "q_token_count"   -> qTokenCountSql,
-    "q_quality_score" -> qQualityScoreSql,
-    "q_lang_id"       -> qLangIdSql,
-    "q_fingerprint"   -> qFingerprintSql,
-    "q_repetition"    -> qRepetitionSql,
+  val queries: Seq[(String, Query)] = Seq(
+    "q_sample_es"         -> Query(qSampleEs, qSampleEsSql),
+    "q_topic_terms"       -> Query(qTopicTerms, qTopicTermsSql),
+    "q_textrank"          -> Query(qTextrank, qTextrankSql),
+    "q_mix_temperature"   -> Query(qMixTemperature, qMixTemperatureSql),
+    "q_split"             -> Query(qSplit, qSplitSql),
+    "q_bm25"              -> Query(qBm25, qBm25Sql),
+    "q_zipf"              -> Query(qZipf, qZipfSql),
+    "q_vocab"             -> Query(qVocab, qVocabSql),
+    "q_pmi"               -> Query(qPmi, qPmiSql),
+    "q_lm_score"          -> Query(qLmScore, qLmScoreSql),
+    "q_sample_weighted"   -> Query(qSampleWeighted, qSampleWeightedSql),
+    "q_chunk"             -> Query(qChunk, qChunkSql),
+    "q_inverted_index"    -> Query(qInvertedIndex, qInvertedIndexSql),
+    "q_sample_hash"       -> Query(qSampleHash, qSampleHashSql),
+    "q_sample_stratified" -> Query(qSampleStratified, qSampleStratifiedSql),
+    "q_tfidf"             -> Query(qTfIdf, qTfIdfSql),
+    "q_redact"            -> Query(qRedact, qRedactSql),
+    "q_pack_bins"         -> Query(qPackBins, qPackBinsSql),
+    "q_mixture"           -> Query(qMixture, qMixtureSql),
+    "q_sample_group"      -> Query(qSampleGroup, qSampleGroupSql),
+    "q_token_bpe"         -> Query(qTokenBpe, qTokenBpeSql),
+    "q_bpe_merges"        -> Query(qBpeMerges, qBpeMergesSql),
+    "q_bpe_train"         -> Query(qBpeTrain, qBpeTrainSql),
+    "q_unigram_lm"        -> Query(qUnigramLm, qUnigramLmSql),
+    "q_bpe_apply"         -> Query(qBpeApply, qBpeApplySql),
+    "q_source_overlap"    -> Query(qSourceOverlap, qSourceOverlapSql),
+    "q_boilerplate"       -> Query(qBoilerplate, qBoilerplateSql),
+    "q_lang_confusion"    -> Query(qLangConfusion, qLangConfusionSql),
+    "q_gate_auc"          -> Query(qGateAuc, qGateAucSql),
+    "q_token_count"       -> Query(qTokenCount, qTokenCountSql),
+    "q_quality_score"     -> Query(qQualityScore, qQualityScoreSql),
+    "q_lang_id"           -> Query(qLangId, qLangIdSql),
+    "q_fingerprint"       -> Query(qFingerprint, qFingerprintSql),
+    "q_repetition"        -> Query(qRepetition, qRepetitionSql),
   )
 }

@@ -492,29 +492,17 @@ object TpchBulkQueries {
       "OR (p_brand = 'Brand#2' AND p_size BETWEEN 11 AND 25 AND l_quantity BETWEEN 10 AND 25) " +
       "OR (p_brand = 'Brand#3' AND p_size BETWEEN 26 AND 50 AND l_quantity BETWEEN 20 AND 35)"
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_tpch_q7"  -> qTpchQ7 _,
-    "q_tpch_q8"  -> qTpchQ8 _,
-    "q_tpch_q9"  -> qTpchQ9 _,
-    "q_tpch_q10" -> qTpchQ10 _,
-    "q_tpch_q11" -> qTpchQ11 _,
-    "q_tpch_q12" -> qTpchQ12 _,
-    "q_tpch_q13" -> qTpchQ13 _,
-    "q_tpch_q14" -> qTpchQ14 _,
-    "q_tpch_q15" -> qTpchQ15 _,
-    "q_tpch_q16" -> qTpchQ16 _,
-    "q_tpch_q19" -> qTpchQ19 _)
-
-  val oracles: Map[String, String] = Map(
-    "q_tpch_q7"  -> qTpchQ7Sql,
-    "q_tpch_q8"  -> qTpchQ8Sql,
-    "q_tpch_q9"  -> qTpchQ9Sql,
-    "q_tpch_q10" -> qTpchQ10Sql,
-    "q_tpch_q11" -> qTpchQ11Sql,
-    "q_tpch_q12" -> qTpchQ12Sql,
-    "q_tpch_q13" -> qTpchQ13Sql,
-    "q_tpch_q14" -> qTpchQ14Sql,
-    "q_tpch_q15" -> qTpchQ15Sql,
-    "q_tpch_q16" -> qTpchQ16Sql,
-    "q_tpch_q19" -> qTpchQ19Sql)
+  val queries: Seq[(String, Query)] = Seq(
+    "q_tpch_q7"  -> Query(qTpchQ7, qTpchQ7Sql),
+    "q_tpch_q8"  -> Query(qTpchQ8, qTpchQ8Sql),
+    "q_tpch_q9"  -> Query(qTpchQ9, qTpchQ9Sql),
+    "q_tpch_q10" -> Query(qTpchQ10, qTpchQ10Sql),
+    "q_tpch_q11" -> Query(qTpchQ11, qTpchQ11Sql),
+    "q_tpch_q12" -> Query(qTpchQ12, qTpchQ12Sql),
+    "q_tpch_q13" -> Query(qTpchQ13, qTpchQ13Sql),
+    "q_tpch_q14" -> Query(qTpchQ14, qTpchQ14Sql),
+    "q_tpch_q15" -> Query(qTpchQ15, qTpchQ15Sql),
+    "q_tpch_q16" -> Query(qTpchQ16, qTpchQ16Sql),
+    "q_tpch_q19" -> Query(qTpchQ19, qTpchQ19Sql),
+  )
 }

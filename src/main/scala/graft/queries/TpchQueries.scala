@@ -269,19 +269,12 @@ object TpchQueries {
       "WHERE e2.l_partkey = p_partkey) " +
       "ORDER BY s_acctbal DESC, n_name, s_name, p_partkey"
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_tpch_q2"  -> qTpchQ2 _,
-    "q_tpch_q4"  -> qTpchQ4 _,
-    "q_tpch_q17" -> qTpchQ17 _,
-    "q_tpch_q20" -> qTpchQ20 _,
-    "q_tpch_q21" -> qTpchQ21 _,
-    "q_tpch_q22" -> qTpchQ22 _)
-
-  val oracles: Map[String, String] = Map(
-    "q_tpch_q2"  -> qTpchQ2Sql,
-    "q_tpch_q4"  -> qTpchQ4Sql,
-    "q_tpch_q17" -> qTpchQ17Sql,
-    "q_tpch_q20" -> qTpchQ20Sql,
-    "q_tpch_q21" -> qTpchQ21Sql,
-    "q_tpch_q22" -> qTpchQ22Sql)
+  val queries: Seq[(String, Query)] = Seq(
+    "q_tpch_q2"  -> Query(qTpchQ2, qTpchQ2Sql),
+    "q_tpch_q4"  -> Query(qTpchQ4, qTpchQ4Sql),
+    "q_tpch_q17" -> Query(qTpchQ17, qTpchQ17Sql),
+    "q_tpch_q20" -> Query(qTpchQ20, qTpchQ20Sql),
+    "q_tpch_q21" -> Query(qTpchQ21, qTpchQ21Sql),
+    "q_tpch_q22" -> Query(qTpchQ22, qTpchQ22Sql),
+  )
 }

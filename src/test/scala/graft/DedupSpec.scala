@@ -73,7 +73,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("prefix-filtered jaccard equals the naive all-pairs join exactly") {
-    graft.functions.Shingles.register(spark)
     val sh = Tables.documents(spark, sf)
       .select($"doc_id",
         explode(graft.functions.Shingles.shingles($"text", 3)).as("sh"))
@@ -90,7 +89,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("PartEnum jaccard equals the prefix-filtered and naive joins exactly") {
-    graft.functions.Shingles.register(spark)
     val sh = Tables.documents(spark, sf)
       .select($"doc_id",
         explode(graft.functions.Shingles.shingles($"text", 3)).as("sh"))
@@ -130,7 +128,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("codegen shingles equal the column-algebra spelling") {
-    graft.functions.Shingles.register(spark)
     val both = docs.select(
       graft.functions.Shingles.shingles($"text", 3).as("fast"),
       array_distinct(graft.functions.TextFunctions.shingles($"text", 3)).as("slow"))
@@ -153,7 +150,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("winnowing: shared passage guarantees shared fingerprints") {
-    graft.functions.Winnow.register(spark)
     val passage = "the quick brown fox jumps over the lazy dog near the river bank"
     val docA = passage + " and then some completely different trailing content here"
     val docB = "unrelated preamble text about query engines first " + passage
@@ -182,7 +178,6 @@ class DedupSpec extends AnyFunSuite {
   test("prefix-filtered winnow overlap equals the naive print self-join") {
     // the naive spelling the oracle replays: count shared prints per
     // ordered pair, threshold on the smaller doc's print count
-    graft.functions.Winnow.register(spark)
     val fp = Tables.documents(spark, sf)
       .select($"doc_id",
         explode(graft.functions.Winnow.winnow($"text", 12, 8)).as("h"))
@@ -204,7 +199,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("simhash: deterministic, near-dup-stable, codegen-evaluable") {
-    SimHash.register(spark)
     val fp = docs.select($"doc_id", SimHash.simhash($"text").as("fp"))
       .as[(Long, Long)].collect().toMap
     assert(fp(0L) === SimHash.compute(base)) // expression == direct call
@@ -214,7 +208,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("portable HLL estimate is within 15% of exact distinct shingles") {
-    graft.functions.Shingles.register(spark)
     val exact = Tables.documents(spark, sf)
       .select(explode(graft.functions.Shingles.shingles($"text", 3)).as("v"))
       .select(countDistinct($"v")).head().getLong(0)

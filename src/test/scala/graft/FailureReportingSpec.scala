@@ -61,6 +61,8 @@ class FailureReportingSpec extends AnyFunSuite {
       (v: String) => Tuning.localSession(Map(Tuning.CpusEnv -> v))),
     ("SPARK_GRAFT_BENCH_RUNS", "a positive integer", Seq("three", "0", "2.5"), Seq("3"),
       ConfValue.positiveInt("SPARK_GRAFT_BENCH_RUNS", _)),
+    (SparkEntry.OnlyEnv, "a list of registered query names", Seq("q_sccc", "q_scc,q_sccc", ""),
+      Seq("q_scc", "q_bfs,q_scc"), (v: String) => SparkEntry.selected(Map(SparkEntry.OnlyEnv -> v))),
     ("SPARK_GRAFT_STREAM_FILES_PER_TRIGGER", "a positive integer", Seq("x", "0"), Seq("16"),
       ConfValue.positiveInt("SPARK_GRAFT_STREAM_FILES_PER_TRIGGER", _)),
     ("SPARK_GRAFT_STREAM_PAD_BYTES", "a non-negative integer", Seq("-1", "1k", ""), Seq("0", "1024"),

@@ -288,7 +288,6 @@ class MiningSpec extends AnyFunSuite {
 
   test("containment prefix filter is lossless vs the naive ordered join") {
     import graft.queries.DedupQueries
-    graft.functions.Shingles.register(spark)
     val sh = Tables.documents(spark, sf).select(col("doc_id"),
       explode(graft.functions.Shingles.shingles(col("text"), 3)).as("sh"))
     val fast = DedupQueries.containmentPrefix(sh, 0.9).collect()

@@ -55,7 +55,6 @@ class PageRankSpec extends AnyFunSuite {
   }
 
   test("fib expression matches closed computation and handles edge cases") {
-    graft.functions.Fib.register(spark)
     val out = spark.range(0, 93)
       .select($"id", graft.functions.Fib.fib($"id").as("f"))
       .as[(Long, Long)].collect().toMap

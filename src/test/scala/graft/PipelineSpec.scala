@@ -343,7 +343,6 @@ class PipelineSpec extends AnyFunSuite {
       "bc" -> 12L, "abc" -> 40L)
     val words = Seq("abcabc", "aabbcc", "cab", "", "abcdefghijklmnopqrst")
       .toDF("word")
-    UnigramSegment.register(spark)
     val viaPlan = words
       .select($"word", UnigramSegment.segment($"word", vocab, 3).as("p"))
       .as[(String, Seq[String])].collect().toMap

@@ -176,7 +176,6 @@ class PropertySpec extends AnyFunSuite {
       val docs = (0L until (4 + r.nextInt(6)).toLong).map { i =>
         (i, List.fill(5 + r.nextInt(25))(vocab(r.nextInt(vocab.size))).mkString(" "))
       }.toDF("doc_id", "text")
-      graft.functions.Shingles.register(spark)
       val sh = docs.select(col("doc_id"),
         explode(graft.functions.Shingles.shingles(col("text"), 3)).as("sh"))
       for (t <- Seq(0.3, 0.6, 0.9)) {
@@ -931,7 +930,6 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("jaro-winkler expression matches known values and a driver reference") {
-    graft.functions.JaroWinkler.register(spark)
     // canonical published values (Winkler 1990 examples, DuckDB-verified)
     val cases = Seq(
       ("martha", "marhta", 0.9611111111111111),

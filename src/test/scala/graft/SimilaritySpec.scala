@@ -106,7 +106,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("codegen dot product equals interpreted fold bit-for-bit") {
-    graft.functions.DotProduct.register(spark)
     val df = Tables.embeddings(spark, sf).limit(100)
       .select(asDouble($"embedding").as("v"))
     val both = df.select(
@@ -128,7 +127,6 @@ class SimilaritySpec extends AnyFunSuite {
       .filter($"maxerr" > $"scale" * 0.5 + 1e-12).count()
     assert(bad === 0)
     // top-1 neighbor agreement between full and quantized similarity
-    graft.functions.DotProduct.register(spark)
     def top1(col1: String) = {
       val x = vd.select($"vec_id".as("id"), org.apache.spark.sql.functions.col(col1).as("w"))
       val q = x.filter($"id" < 20).select($"id".as("qid"), $"w".as("qw"))
@@ -358,7 +356,8 @@ class SimilaritySpec extends AnyFunSuite {
     assert(SimilarityQueries.semK(200000) === 32) // sf10's corpus
     assert(SimilarityQueries.semK(1000000) === 160)
     // the registered oracle SQL is exactly the demo-k instance of the
-    // parameterized generator OracleGen prints for larger tiers
+    // parameterized generator SimilarityQueries.fixtureOracles respells
+    // for larger tiers
     assert(SimilarityQueries.qSemdedupSql ===
       SimilarityQueries.qSemdedupSqlFor(16))
     assert(SimilarityQueries.qSemdedupKeepSql ===
@@ -517,7 +516,7 @@ class SimilaritySpec extends AnyFunSuite {
     // oracle replay exercises the round-11 hooks with NON-default args:
     // training on the base subset, encode + LUT + serve over vsall (the
     // encJ fix — a regression back to vs$j would silently drop deltas)
-    val sql = graft.queries.SimilarityQueries.oracles("q_ann_upsert")
+    val sql = SparkEntry.oracleSql("q_ann_upsert")
     assert(sql.contains("vsall AS MATERIALIZED"))
     assert(sql.contains("// 5"))
     assert(sql.contains("FROM va0 e") && sql.contains("FROM va3 q"),
