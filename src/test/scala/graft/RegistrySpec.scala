@@ -37,10 +37,30 @@ class RegistrySpec extends AnyFunSuite {
       .keySet === Set("q_x", "q_y"))
   }
 
-  test("queries and oracleSql come from the one module list with equal key sets") {
-    val names = SparkEntry.modules.flatMap(_._2.map(_._1)).toSet
-    assert(SparkEntry.queries.keySet === names)
-    assert(SparkEntry.oracleSql.keySet === names)
+  /** Queries DECLARED oracle-free. EMPTY since round 15, and since every
+    * registration is a `Query(builder, oracle)` pair it can only stay so. */
+  private val declaredRowsOnly = Set.empty[String]
+
+  test("queries without an oracle are exactly the declared rows-only set") {
+    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
+    assert(missing === declaredRowsOnly,
+      s"undeclared oracle-free queries: ${missing -- declaredRowsOnly}; " +
+        s"stale declarations: ${declaredRowsOnly -- missing}")
+    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    assert(orphans.isEmpty, s"oracles without a query: $orphans")
+  }
+
+  test("the spec's family list is the full SparkEntry merge chain") {
+    // a module dropped from SparkEntry.modules would silently shrink every
+    // run — pin the family list and the union of its keys
+    val families = Seq("Relational", "MRQueries", "TextQueries", "DedupQueries",
+      "SimilarityQueries", "EventQueries", "MediaQueries", "PipelineQueries",
+      "KvQueries", "StreamQueries", "SketchQueries", "GraphQueries", "TpchQueries",
+      "TpchBulkQueries", "LakehouseQueries")
+    assert(SparkEntry.modules.map(_._1) === families)
+    val unionKeys = SparkEntry.modules.iterator.flatMap(_._2.iterator.map(_._1)).toSet
+    assert(unionKeys === SparkEntry.queries.keySet)
+    assert(unionKeys === SparkEntry.oracleSql.keySet)
   }
 
   test("SPARK_GRAFT_ONLY selects registered queries in name order") {
