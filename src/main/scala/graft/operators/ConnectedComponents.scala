@@ -18,16 +18,17 @@ import graft.operators.IterCheckpoint.IterCheckpointOps
   * localCheckpoint truncating the logical plan (same iterative-plan
   * discipline as PageRank).
   *
-  * Size gate: the job that materializes the symmetrised edge frame also
-  * counts its rows. When rows × the planner's per-row size fit one
-  * advisory partition (`spark.sql.adaptive.advisoryPartitionSizeInBytes`)
-  * the rounds would each be a one-task job of a few KB, so the operator
-  * returns a lazy single-task frame that replays them in memory instead
-  * ([[LocalGraph]]) — same rows, cap and warning included, one job in
-  * place of about 25. At 100 TB the gate fails on its first measurement
-  * and the distributed loop runs on the already-materialized frame: per
-  * round it shuffles only the V-sized label side against the keyed,
-  * cached edge set, with no driver-side materialization at any size.
+  * Size gate: the input is a [[Graph]], whose materializing job also
+  * counts its rows, and [[Graph.fitsLocally]] is the one gate. When rows ×
+  * the planner's per-row size fit one advisory partition
+  * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`) the rounds would
+  * each be a one-task job of a few KB, so the operator returns a lazy
+  * single-task frame that replays them in memory instead ([[LocalGraph]])
+  * — same rows, cap and warning included, one job in place of about 25.
+  * At 100 TB the gate fails on its first measurement and the distributed
+  * loop runs on the already-materialized frame: per round it shuffles
+  * only the V-sized label side against the keyed, cached edge set, with
+  * no driver-side materialization at any size.
   */
 object ConnectedComponents {
 
@@ -37,13 +38,10 @@ object ConnectedComponents {
     * `maxIterations` (possible only when some component's diameter
     * exceeds it — raise the cap for long chain-shaped clusters). */
   def components(edges: DataFrame, maxIterations: Int = 10): DataFrame = {
-    val e = edges.toDF("src", "dst")
-    // undirected: propagate both ways. The job that materializes the
-    // symmetrised frame also counts it — the local-finish gate
-    val sym = IterCheckpoint.measure(
-      e.union(e.select(col("dst"), col("src"))).toDF("a", "b"))
-    if (LocalGraph.fits(sym)) local(sym.df, maxIterations)
-    else distributed(sym, maxIterations)
+    // undirected: propagate both ways
+    val g = Graph(edges)
+    g.finishLocally(initLabels(g.edges).schema)(local(_, maxIterations))(
+      distributed(g, maxIterations))
   }
 
   // init fused with the first propagation round: every node starts at
@@ -55,33 +53,30 @@ object ConnectedComponents {
       .agg(least(col("a"), min(col("b"))).as("comp"))
       .withColumnRenamed("a", "node")
 
-  /** The rounds of [[distributed]] replayed in one task, typed as its
-    * output. */
-  private def local(sym: DataFrame, maxIterations: Int): DataFrame =
-    LocalGraph.finish(sym, initLabels(sym).schema) { g =>
-      val (a, b) = (g.a, g.b)
-      var label = Array.range(0, g.nodes)
-      for (e <- a.indices) if (b(e) < label(a(e))) label(a(e)) = b(e)
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIterations) {
-        val prop = label.clone()
-        for (e <- a.indices) if (label(b(e)) < prop(a(e))) prop(a(e)) = label(b(e))
-        val next = prop.map(c => math.min(c, prop(c)))
-        converged = java.util.Arrays.equals(next, label)
-        label = next
-        iter += 1
-      }
-      if (!converged) Fixpoint.warnCapHit(this, capMessage(maxIterations))
-      (Array.range(0, g.nodes), label)
+  /** The rounds of [[distributed]] replayed in one task. */
+  private def local(g: LocalGraph.Edges, maxIterations: Int): (Array[Int], Array[Int]) = {
+    val (a, b) = (g.a, g.b)
+    var label = Array.range(0, g.nodes)
+    for (e <- a.indices) if (b(e) < label(a(e))) label(a(e)) = b(e)
+    var converged = false
+    var iter = 0
+    while (!converged && iter < maxIterations) {
+      val prop = label.clone()
+      for (e <- a.indices) if (label(b(e)) < prop(a(e))) prop(a(e)) = label(b(e))
+      val next = prop.map(c => math.min(c, prop(c)))
+      converged = java.util.Arrays.equals(next, label)
+      label = next
+      iter += 1
     }
+    if (!converged) Fixpoint.warnCapHit(this, capMessage(maxIterations))
+    (Array.range(0, g.nodes), label)
+  }
 
-  private def distributed(measured: IterCheckpoint.Measured, maxIterations: Int): DataFrame = {
-    // hash-partitioned by the per-round join key ONCE — the cached layout
-    // is reused by every round's neighbor-min join, so only the V-sized
-    // label side ever shuffles (the E-sized per-round exchange is gone;
-    // guide §2.4)
-    val sym = IterCheckpoint.keyedForReuse(measured, col("b"))
+  // hash-partitioned by the per-round join key ONCE — the cached layout
+  // is reused by every round's neighbor-min join, so only the V-sized
+  // label side ever shuffles (the E-sized per-round exchange is gone;
+  // guide §2.4)
+  private def distributed(g: Graph, maxIterations: Int): DataFrame = g.withKeyed(col("b")) { sym =>
     val init = initLabels(sym).iterCheckpoint()
     // the convergence probe rides the checkpoint job as an observed
     // metric — no separate action per round
@@ -116,7 +111,6 @@ object ConnectedComponents {
           col("prev"))
     }
     if (!run.converged) Fixpoint.warnCapHit(this, capMessage(maxIterations))
-    sym.unpersist(false)
     run.state.select(col("node"), col("comp"))
   }
 

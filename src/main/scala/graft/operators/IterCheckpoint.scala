@@ -11,8 +11,10 @@ import org.apache.spark.sql.functions.{col, count, lit, when}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
 
-/** Per-round materialization for the iterative family (PageRank, connected
-  * components, BFS/SSSP, k-core, k-truss, label propagation, k-means).
+/** Per-round materialization for the iterative family (PageRank, HITS,
+  * TextRank, connected and strongly connected components, BFS/SSSP,
+  * closeness and betweenness, k-core, k-truss, label propagation and
+  * Louvain/Leiden), and the one materialization of each [[Graph]].
   *
   * Default: eager `localCheckpoint` — blocks live on executor local disk/
   * memory, which is the fastest way to truncate a growing iterative

@@ -19,10 +19,10 @@ import org.apache.spark.sql.functions._
   * depth (max core-shell chain), which is tiny on real graphs; the cap
   * is a safety net, and extra rounds past convergence are no-ops.
   *
-  * Size gate (shared with [[ConnectedComponents]]): the job that
-  * materializes the symmetrised edge frame also counts its rows; when it
-  * fits one advisory partition the peel rounds are replayed in one
-  * in-memory task ([[LocalGraph]]) instead of one eager job per three
+  * Size gate: the input is a [[Graph]], and [[Graph.fitsLocally]] is the
+  * one gate (shared with [[ConnectedComponents]]); when the symmetrised
+  * edge frame fits one advisory partition the peel rounds are replayed in
+  * one in-memory task ([[LocalGraph]]) instead of one eager job per three
   * peels — same rows, cap and warning included.
   *
   * At 100 TB the gate fails on its first measurement and the distributed
@@ -39,43 +39,38 @@ object KCore {
     *         if the peel did not reach its fixed point within
     *         `maxIterations` (the edges are then partial). */
   def coreEdges(edges: DataFrame, k: Int, maxIterations: Int = 20): DataFrame = {
-    val e = edges.toDF("src", "dst")
-    // the job that materializes the symmetrised frame also counts it —
-    // the local-finish gate
-    val sym = IterCheckpoint.measure(
-      e.union(e.select(col("dst"), col("src"))).toDF("a", "b"))
-    if (LocalGraph.fits(sym)) local(sym.df, k, maxIterations)
-    else distributed(sym.df, k, maxIterations)
+    val g = Graph(edges)
+    g.finishLocally(g.edges.schema)(local(_, k, maxIterations))(
+      distributed(g.edges, k, maxIterations))
   }
 
   /** The rounds of [[distributed]] replayed in one task over a multiset
     * edge list (duplicate edges and both halves of a self-loop count
     * toward degree, as in the distributed aggregation). */
-  private def local(sym: DataFrame, k: Int, maxIterations: Int): DataFrame =
-    LocalGraph.finish(sym, sym.schema) { g =>
-      val (a, b) = (g.a, g.b)
-      val alive = Array.fill(a.length)(true)
-      val deg = new Array[Int](g.nodes)
-      def peel(): Unit = {
-        java.util.Arrays.fill(deg, 0)
-        for (e <- a.indices) if (alive(e)) deg(a(e)) += 1
-        for (e <- a.indices) if (alive(e)) alive(e) = deg(a(e)) >= k && deg(b(e)) >= k
-      }
-      var prevCount = -1L
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIterations) {
-        val steps = math.min(3, maxIterations - iter)
-        (1 to steps).foreach(_ => peel())
-        val curCount = alive.count(identity).toLong
-        converged = curCount == prevCount || curCount == 0L
-        prevCount = curCount
-        iter += steps
-      }
-      if (!converged) Fixpoint.warnCapHit(this, capMessage(maxIterations))
-      val kept = a.indices.filter(alive(_)).toArray
-      (kept.map(a(_)), kept.map(b(_)))
+  private def local(g: LocalGraph.Edges, k: Int, maxIterations: Int): (Array[Int], Array[Int]) = {
+    val (a, b) = (g.a, g.b)
+    val alive = Array.fill(a.length)(true)
+    val deg = new Array[Int](g.nodes)
+    def peel(): Unit = {
+      java.util.Arrays.fill(deg, 0)
+      for (e <- a.indices) if (alive(e)) deg(a(e)) += 1
+      for (e <- a.indices) if (alive(e)) alive(e) = deg(a(e)) >= k && deg(b(e)) >= k
     }
+    var prevCount = -1L
+    var converged = false
+    var iter = 0
+    while (!converged && iter < maxIterations) {
+      val steps = math.min(3, maxIterations - iter)
+      (1 to steps).foreach(_ => peel())
+      val curCount = alive.count(identity).toLong
+      converged = curCount == prevCount || curCount == 0L
+      prevCount = curCount
+      iter += steps
+    }
+    if (!converged) Fixpoint.warnCapHit(this, capMessage(maxIterations))
+    val kept = a.indices.filter(alive(_)).toArray
+    (kept.map(a(_)), kept.map(b(_)))
+  }
 
   private def distributed(sym: DataFrame, k: Int, maxIterations: Int): DataFrame = {
     // One peel as a pure plan transform; THREE peels ride each checkpoint

@@ -23,43 +23,39 @@ object LabelPropagation {
     * @param rounds fixed synchronous round count
     * @return (node, lab) for every node of `edges`; lab null if no
     *         labeled node is within `rounds` hops. */
-  def spread(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
-    val e = edges.toDF("src", "dst")
+  def spread(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame =
     // partitioned once by the per-round message-join key (guide §2.4)
-    val sym = e.union(e.select(col("dst"), col("src"))).toDF("a", "b")
-      .transform(IterCheckpoint.keyedForReuse(_, col("b")))
-    val sd = seeds.toDF("node", "lab")
-    val init = sym.select(col("a").as("node")).distinct()
-      .join(sd, Seq("node"), "left")
-      .iterCheckpoint()
-    // One synchronous round as a pure plan transform; TWO rounds ride
-    // each localCheckpoint job (the BFS/SSSP double-step) — the round
-    // COUNT is exactly `rounds` either way, so the fixed-round oracle
-    // parity is untouched; only the materialization cadence changes.
-    // A 3-step cadence was measured at sf0.1 local[32]: 4.63 s → 6.02 s
-    // (the 3-deep unmaterialized join+window chain costs more than the
-    // saved checkpoint job), so 2 stays — same conclusion as the 4-step
-    // BFS/SSSP experiment recorded in GraphQueries.
-    def step(l: DataFrame): DataFrame = {
-      val votes = sym
-        .join(l.filter(col("lab").isNotNull)
-          .select(col("node").as("b"), col("lab")), Seq("b"))
-        .groupBy(col("a"), col("lab")).agg(count(lit(1)).as("c"))
-      // majority with (count desc, label asc) tiebreak as a partial-
-      // aggregated argmin over struct(−count, label) — same winner as a
-      // row_number window, without the per-round partition sort (and the
-      // min combines map-side, so only one candidate per label survives
-      // each partition)
-      val winner = votes
-        .select(col("a"),
-          struct((-col("c")).as("nc"), col("lab").as("l")).as("k"))
-        .groupBy(col("a")).agg(min(col("k")).as("k"))
-        .select(col("a").as("node"), col("k.l").as("wlab"))
-      l.join(winner, Seq("node"), "left")
-        .select(col("node"), coalesce(col("lab"), col("wlab")).as("lab"))
+    Graph(edges).withKeyed(col("b")) { sym =>
+      val sd = seeds.toDF("node", "lab")
+      val init = Graph.nodes(sym)
+        .join(sd, Seq("node"), "left")
+        .iterCheckpoint()
+      // One synchronous round as a pure plan transform; TWO rounds ride
+      // each localCheckpoint job (the BFS/SSSP double-step) — the round
+      // COUNT is exactly `rounds` either way, so the fixed-round oracle
+      // parity is untouched; only the materialization cadence changes.
+      // A 3-step cadence was measured at sf0.1 local[32]: 4.63 s → 6.02 s
+      // (the 3-deep unmaterialized join+window chain costs more than the
+      // saved checkpoint job), so 2 stays — same conclusion as the 4-step
+      // BFS/SSSP experiment recorded in Relax.
+      def step(l: DataFrame): DataFrame = {
+        val votes = sym
+          .join(l.filter(col("lab").isNotNull)
+            .select(col("node").as("b"), col("lab")), Seq("b"))
+          .groupBy(col("a"), col("lab")).agg(count(lit(1)).as("c"))
+        // majority with (count desc, label asc) tiebreak as a partial-
+        // aggregated argmin over struct(−count, label) — same winner as a
+        // row_number window, without the per-round partition sort (and the
+        // min combines map-side, so only one candidate per label survives
+        // each partition)
+        val winner = votes
+          .select(col("a"),
+            struct((-col("c")).as("nc"), col("lab").as("l")).as("k"))
+          .groupBy(col("a")).agg(min(col("k")).as("k"))
+          .select(col("a").as("node"), col("k.l").as("wlab"))
+        l.join(winner, Seq("node"), "left")
+          .select(col("node"), coalesce(col("lab"), col("wlab")).as("lab"))
+      }
+      Fixpoint.run(init, rounds, 2)((l, _) => step(l)).state
     }
-    val labels = Fixpoint.run(init, rounds, 2)((l, _) => step(l)).state
-    sym.unpersist(false)
-    labels
-  }
 }

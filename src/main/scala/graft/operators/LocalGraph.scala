@@ -6,8 +6,9 @@ import org.apache.spark.sql.types._
 /** Single-task finish for the iterative graph operators (connected
   * components, k-core). Below one advisory partition every distributed
   * round is a few-KB job that costs tens of milliseconds of scheduling,
-  * so an operator whose symmetrised edge frame [[fits]] returns a lazy
-  * `coalesce(1).mapPartitions` frame instead: the one task gathers the
+  * so an operator whose [[Graph]] passes the one gate,
+  * [[Graph.fitsLocally]], returns a lazy `coalesce(1).mapPartitions`
+  * frame instead ([[Graph.finishLocally]]): the one task gathers the
   * edges into primitive arrays over a dense node index and replays the
   * operator's own synchronous rounds in memory. The replay is round for
   * round — same init, same cap, same convergence test — so its rows equal
@@ -21,14 +22,6 @@ private[operators] object LocalGraph {
   final class Edges(val ids: Array[Long], val a: Array[Int], val b: Array[Int]) {
     def nodes: Int = ids.length
   }
-
-  /** True when `sym` (two id columns, symmetric) can finish in one task:
-    * it fits one advisory partition, its ids are LONG or INT, and no endpoint
-    * is null — the distributed joins drop null endpoints, which the replay
-    * does not model. */
-  def fits(sym: IterCheckpoint.Measured): Boolean =
-    sym.nullRows == 0 && sym.fitsOnePartition &&
-      sym.df.schema.fields.forall(f => toId(f.dataType).isDefined)
 
   /** The lazy one-task frame over `sym`, typed `schema` (two columns of
     * `sym`'s id type): `kernel` returns parallel (left, right) node-index
@@ -46,7 +39,7 @@ private[operators] object LocalGraph {
   }
 
   /** Long → the boxed value of a LONG or INT id column. */
-  private def toId(t: DataType): Option[Long => Any] = t match {
+  def toId(t: DataType): Option[Long => Any] = t match {
     case LongType    => Some(x => x)
     case IntegerType => Some(_.toInt)
     case _           => None

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Fixpoint, IterCheckpoint}
+import graft.operators.{Fixpoint, Graph, IterCheckpoint, Relax}
 import graft.operators.IterCheckpoint.IterCheckpointOps
 
 /** Graph analytics beyond the reference's simplified PageRank
@@ -115,25 +115,35 @@ object GraphQueries {
   private val MinSupport = 2
   private val CcRounds = 20
 
-  /** Co-purchase edges kept only when the pair co-occurs in ≥ minSupport
+  /** Co-purchase edges kept only when the pair co-occurs in ≥ MinSupport
     * DISTINCT orders — a part repeated inside one order must not inflate
     * its pairs' support past the threshold. */
-  private def supportedEdges(s: SparkSession, d: String, minSupport: Int): DataFrame =
+  private[graft] def supportedEdges(s: SparkSession, d: String): DataFrame =
     orderPairs(s, d)
       .groupBy(col("src"), col("dst"))
       .agg(count(lit(1)).as("n"))
-      .filter(col("n") >= minSupport)
+      .filter(col("n") >= MinSupport)
       .select(col("src"), col("dst"))
 
-  /** Spec-only accessor: the default-support co-purchase edge set, so
-    * LouvainSpec can rebuild the community queries' input graph when
-    * pinning the shared-L1 tails against the monolithic spellings. */
-  def supportedEdgesForSpec(s: SparkSession, d: String): DataFrame =
-    supportedEdges(s, d, MinSupport)
+  /** The oracle's spelling of [[supportedEdges]]: the materialized CTE
+    * `e`. */
+  private val SqlSupportedEdges: String =
+    "e AS MATERIALIZED (SELECT a.l_partkey AS src, b.l_partkey AS dst " +
+      "FROM lineitem a JOIN lineitem b " +
+      "ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey " +
+      s"GROUP BY 1, 2 HAVING count(DISTINCT a.l_orderkey) >= $MinSupport)"
+
+  /** `n` oracle rounds as a chain of materialized CTEs
+    * `<prefix>1 … <prefix>n`, round `i` being `iter(<prefix>{i−1}, i)`.
+    * AS MATERIALIZED: a round references its predecessor more than once,
+    * and DuckDB inlines plain CTEs per reference — 20 rounds would
+    * otherwise expand the plan 2^20-fold. */
+  private def unroll(prefix: String, n: Int)(iter: (String, Int) => String): String =
+    (1 to n).map(i => s"$prefix$i AS MATERIALIZED (${iter(s"$prefix${i - 1}", i)})").mkString(", ")
 
   def qComponents(s: SparkSession, d: String): DataFrame = {
     val labels = graft.operators.ConnectedComponents
-      .components(supportedEdges(s, d, MinSupport), maxIterations = CcRounds)
+      .components(supportedEdges(s, d), maxIterations = CcRounds)
     labels.groupBy(col("comp"))
       .agg(count(lit(1)).as("component_size"))
       .groupBy(col("component_size"))
@@ -145,16 +155,9 @@ object GraphQueries {
       s"LEFT JOIN (SELECT s.a AS node, min(x.comp) AS mn FROM sym s " +
       s"JOIN $prev x ON s.b = x.node GROUP BY 1) m USING (node)"
 
-  // AS MATERIALIZED: each round references its predecessor twice, and
-  // DuckDB inlines plain CTEs per-reference — 20 rounds would otherwise
-  // expand the plan 2^20-fold
   val qComponentsSql: String = {
-    val rounds = (1 to CcRounds)
-      .map(i => s"l$i AS MATERIALIZED (${ccIter(s"l${i - 1}")})").mkString(", ")
-    "WITH e AS MATERIALIZED (SELECT a.l_partkey AS src, b.l_partkey AS dst " +
-      "FROM lineitem a JOIN lineitem b " +
-      "ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey " +
-      s"GROUP BY 1, 2 HAVING count(DISTINCT a.l_orderkey) >= $MinSupport), " +
+    val rounds = unroll("l", CcRounds)((p, _) => ccIter(p))
+    s"WITH $SqlSupportedEdges, " +
       "sym AS MATERIALIZED (SELECT src AS a, dst AS b FROM e UNION SELECT dst, src FROM e), " +
       "l0 AS MATERIALIZED (SELECT DISTINCT a AS node, a AS comp FROM sym), " +
       rounds + " " +
@@ -176,7 +179,7 @@ object GraphQueries {
   def qModularity(s: SparkSession, d: String): DataFrame = {
     // materialized once: the CC fixpoint and the final scoring job both
     // re-derive the edge set otherwise (no exchange reuse across jobs)
-    val e = supportedEdges(s, d, MinSupport).iterCheckpoint()
+    val e = supportedEdges(s, d).iterCheckpoint()
     val labels = graft.operators.ConnectedComponents
       .components(e, maxIterations = CcRounds)
     // every edge is intra-component by construction; label via src
@@ -201,12 +204,8 @@ object GraphQueries {
   }
 
   val qModularitySql: String = {
-    val rounds = (1 to CcRounds)
-      .map(i => s"l$i AS MATERIALIZED (${ccIter(s"l${i - 1}")})").mkString(", ")
-    "WITH e AS MATERIALIZED (SELECT a.l_partkey AS src, b.l_partkey AS dst " +
-      "FROM lineitem a JOIN lineitem b " +
-      "ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey " +
-      s"GROUP BY 1, 2 HAVING count(DISTINCT a.l_orderkey) >= $MinSupport), " +
+    val rounds = unroll("l", CcRounds)((p, _) => ccIter(p))
+    s"WITH $SqlSupportedEdges, " +
       "sym AS MATERIALIZED (SELECT src AS a, dst AS b FROM e UNION SELECT dst, src FROM e), " +
       "l0 AS MATERIALIZED (SELECT DISTINCT a AS node, a AS comp FROM sym), " +
       rounds + ", " +
@@ -248,7 +247,7 @@ object GraphQueries {
   // onto every histogram row so the full result keeps the per-row hash
   // surface.
   def qDegreeDist(s: SparkSession, d: String): DataFrame = {
-    val e = supportedEdges(s, d, MinSupport)
+    val e = supportedEdges(s, d)
     val deg = e.select(col("src").as("node"))
       .unionAll(e.select(col("dst").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -308,7 +307,7 @@ object GraphQueries {
 
   def qKcore(s: SparkSession, d: String): DataFrame =
     graft.operators.KCore
-      .coreEdges(supportedEdges(s, d, MinSupport), CoreK)
+      .coreEdges(supportedEdges(s, d), CoreK)
       .groupBy(col("a").as("node"))
       .agg(count(lit(1)).as("core_deg"))
 
@@ -319,10 +318,7 @@ object GraphQueries {
 
   val qKcoreSql: String = {
     val rounds = (1 to KcoreRounds).map(i => kcoreIter(i, s"r${i - 1}")).mkString(", ")
-    "WITH e AS MATERIALIZED (SELECT a.l_partkey AS src, b.l_partkey AS dst " +
-      "FROM lineitem a JOIN lineitem b " +
-      "ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey " +
-      s"GROUP BY 1, 2 HAVING count(DISTINCT a.l_orderkey) >= $MinSupport), " +
+    s"WITH $SqlSupportedEdges, " +
       "r0 AS MATERIALIZED (SELECT src AS a, dst AS b FROM e " +
       "UNION ALL SELECT dst, src FROM e), " +
       rounds + " " +
@@ -348,7 +344,7 @@ object GraphQueries {
     val seeds = Tables.part(s, d).filter(seedPick)
       .select(col("p_partkey").as("node"), col("p_brand").as("lab"))
     graft.operators.LabelPropagation
-      .spread(supportedEdges(s, d, MinSupport), seeds, LpRounds)
+      .spread(supportedEdges(s, d), seeds, LpRounds)
   }
 
   private def lpIter(prev: String): String =
@@ -361,12 +357,8 @@ object GraphQueries {
 
   val qLabelPropSql: String = {
     val seed = graft.functions.Md5Bits.sqlHash60("'lp:' || CAST(p_partkey AS VARCHAR)") + " % 4 = 0"
-    val rounds = (1 to LpRounds)
-      .map(i => s"l$i AS MATERIALIZED (${lpIter(s"l${i - 1}")})").mkString(", ")
-    "WITH e AS MATERIALIZED (SELECT a.l_partkey AS src, b.l_partkey AS dst " +
-      "FROM lineitem a JOIN lineitem b " +
-      "ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey " +
-      s"GROUP BY 1, 2 HAVING count(DISTINCT a.l_orderkey) >= $MinSupport), " +
+    val rounds = unroll("l", LpRounds)((p, _) => lpIter(p))
+    s"WITH $SqlSupportedEdges, " +
       "sym AS MATERIALIZED (SELECT src AS a, dst AS b FROM e UNION ALL SELECT dst, src FROM e), " +
       "l0 AS MATERIALIZED (SELECT n.node, p.p_brand AS lab FROM " +
       "(SELECT DISTINCT a AS node FROM sym) n LEFT JOIN " +
@@ -389,7 +381,7 @@ object GraphQueries {
 
   def qKtruss(s: SparkSession, d: String): DataFrame =
     graft.operators.KTruss.trussEdges(
-      supportedEdges(s, d, MinSupport), TrussK)
+      supportedEdges(s, d), TrussK)
 
   private def ktIter(i: Int, prev: String): String =
     s"r$i AS MATERIALIZED (SELECT e.a, e.b FROM $prev e WHERE (" +
@@ -400,10 +392,7 @@ object GraphQueries {
 
   val qKtrussSql: String = {
     val rounds = (1 to TrussRounds).map(i => ktIter(i, s"r${i - 1}")).mkString(", ")
-    "WITH e AS MATERIALIZED (SELECT a.l_partkey AS src, b.l_partkey AS dst " +
-      "FROM lineitem a JOIN lineitem b " +
-      "ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey " +
-      s"GROUP BY 1, 2 HAVING count(DISTINCT a.l_orderkey) >= $MinSupport), " +
+    s"WITH $SqlSupportedEdges, " +
       "r0 AS MATERIALIZED (SELECT src AS a, dst AS b FROM e), " +
       "s0 AS MATERIALIZED (SELECT a AS n, b AS m FROM r0 UNION ALL SELECT b, a FROM r0), " +
       rounds + " " +
@@ -479,50 +468,32 @@ object GraphQueries {
   /** (node, dist) hop distances from `source` over undirected `edges`
     * (src/dst columns); unreached nodes are absent. Testable core of
     * qBfs. */
-  def bfsDistances(edges: DataFrame, source: Long, maxRounds: Int): DataFrame = {
+  def bfsDistances(edges: DataFrame, source: Long, maxRounds: Int): DataFrame =
     // cached hash-partitioned by the per-round join key: every round's
     // frontier join reuses the in-memory layout so only the V-sized
-    // frontier side ever shuffles — the E-sized exchange the old plan
-    // paid per round is gone (guide §2.4). Persist, not localCheckpoint:
-    // the checkpoint rebuild loses outputPartitioning under AQE
-    // (measured — see IterCheckpoint.keyedForReuse), and an invariant
-    // frame has static lineage anyway.
-    val sym = edges.select(col("src").as("a"), col("dst").as("b"))
-      .unionAll(edges.select(col("dst").as("a"), col("src").as("b")))
-      .keyedForReuse(col("a"))
-    val nodes = sym.select(col("a").as("node")).distinct()
-    val init = nodes.withColumn("dist",
+    // frontier side ever shuffles (guide §2.4; IterCheckpoint.keyedForReuse)
+    Graph(edges).withKeyed(col("a")) { sym =>
+      // reached is MONOTONE non-decreasing, so equality two rounds apart
+      // implies equality at the round between — a sound fixed-point test,
+      // and for BFS a non-growing frontier IS completion (the source alone
+      // is reached before the first pair)
+      val stalled = Fixpoint.Probe(Seq(reachedCount), (prev, cur) =>
+        cur.getAs[Long]("reached") <= prev.fold(1L)(_.getAs[Long]("reached")))
+      Relax(sym, fromSource(sym, source), Seq("node"), col("dist"), hop, stalled, maxRounds)
+        .filter(col("dist").isNotNull)
+    }
+
+  /** The materialized start of a single-source relaxation over `sym`:
+    * `source` at distance 0, every other node unreached (null). */
+  private def fromSource(sym: DataFrame, source: Long): DataFrame =
+    Graph.nodes(sym).withColumn("dist",
       when(col("node") === source, lit(0L)).otherwise(lit(null).cast("long")))
       .iterCheckpoint()
-    // One frontier expansion as a pure plan transform — TWO of these ride
-    // each checkpoint job (lazy composition), halving the per-round job
-    // overhead that dominates at toy scale without touching the 100 TB
-    // design cost (the shuffled rounds themselves). TWO is the measured
-    // optimum: a 4-step batch ran ~1.5-1.9× SLOWER here and in SSSP
-    // (sf0.1 bench) — the 8-join-deep plan costs more in optimizer and
-    // post-convergence redundant rounds than it saves in submissions.
-    def expand(d: DataFrame): DataFrame = {
-      val frontierMin = sym
-        .join(d.filter(col("dist").isNotNull)
-          .select(col("node").as("a"), col("dist")), Seq("a"))
-        .groupBy(col("b").as("node")).agg(min(col("dist")).as("mn"))
-      d.join(frontierMin, Seq("node"), "left")
-        .select(col("node"),
-          when(col("dist").isNotNull, col("dist"))
-            .otherwise(col("mn") + 1L).as("dist"))
-    }
-    // the reached-count probe rides the checkpoint job as an observed
-    // metric (the CC discipline) — no separate action per round pair.
-    // reached is MONOTONE non-decreasing, so equality two rounds apart
-    // implies equality at the round between: still a sound fixed-point
-    // test, and for BFS a non-growing frontier IS completion (the source
-    // alone is reached before the first pair).
-    val stalled = Fixpoint.Probe(Seq(reachedCount), (prev, cur) =>
-      cur.getAs[Long]("reached") <= prev.fold(1L)(_.getAs[Long]("reached")))
-    val dist = Fixpoint.run(init, maxRounds, 2, Some(stalled))((d, _) => expand(d)).state
-    sym.unpersist(false) // dist is checkpointed — the cache can go now
-    dist.filter(col("dist").isNotNull)
-  }
+
+  /** The hop merge: a reached node keeps its distance (the BFS layer
+    * property), an unreached one takes the frontier minimum plus one. */
+  private def hop(dist: Column, mn: Column): Column =
+    when(dist.isNotNull, dist).otherwise(mn + 1L)
 
   private def reachedCount: Column =
     sum(when(col("dist").isNotNull, 1L).otherwise(0L)).as("reached")
@@ -541,40 +512,25 @@ object GraphQueries {
   // ops; localCheckpoint truncates the growing lineage.
   private val SsspRounds = 25
 
-  def ssspDistances(edges: DataFrame, source: Long, maxRounds: Int): DataFrame = {
+  def ssspDistances(edges: DataFrame, source: Long, maxRounds: Int): DataFrame =
     // cached keyed to the relaxation join key — see bfsDistances
-    val sym = edges.select(col("src").as("a"), col("dst").as("b"), col("w"))
-      .unionAll(edges.select(col("dst").as("a"), col("src").as("b"), col("w")))
-      .keyedForReuse(col("a"))
-    val nodes = sym.select(col("a").as("node")).distinct()
-    val init = nodes.withColumn("dist",
-      when(col("node") === source, lit(0L)).otherwise(lit(null).cast("long")))
-      .iterCheckpoint()
-    // One relaxation round as a pure plan transform — TWO per checkpoint
-    // job (same double-step as BFS): reached is monotone non-decreasing
-    // and, once reached is stable, total is monotone non-increasing, so
-    // an unchanged (reached, total) two rounds apart pins the round in
-    // between too — the double-step probe is still a sound fixed point.
-    def relaxOnce(d: DataFrame): DataFrame = {
-      val relax = sym
-        .join(d.filter(col("dist").isNotNull)
-          .select(col("node").as("a"), col("dist")), Seq("a"))
-        .groupBy(col("b").as("node")).agg(min(col("dist") + col("w")).as("mn"))
-      d.join(relax, Seq("node"), "left")
-        .select(col("node"),
-          when(col("dist").isNull, col("mn"))
-            .when(col("mn").isNull, col("dist"))
-            .otherwise(least(col("dist"), col("mn"))).as("dist"))
-    }
-    // convergence probe (reached count, total distance) observed on the
-    // checkpoint job itself — no separate action per round pair
+    Graph(edges).withKeyed(col("a"))(ssspOn(_, source, maxRounds))
+
+  /** [[ssspDistances]] over `sym`, a keyed copy of the weighted graph. */
+  private def ssspOn(sym: DataFrame, source: Long, maxRounds: Int): DataFrame = {
+    // TWO relaxation rounds per checkpoint job (same double-step as BFS):
+    // reached is monotone non-decreasing and, once reached is stable,
+    // total is monotone non-increasing, so an unchanged (reached, total)
+    // two rounds apart pins the round in between too — the double-step
+    // probe is still a sound fixed point.
     def st(r: Row) = (r.getAs[Long]("reached"), r.getAs[Long]("total"))
     val fixed = Fixpoint.Probe(
       Seq(reachedCount, sum(coalesce(col("dist"), lit(0L))).as("total")),
       (prev, cur) => prev.exists(st(_) == st(cur)))
-    val dist = Fixpoint.run(init, maxRounds, 2, Some(fixed))((d, _) => relaxOnce(d)).state
-    sym.unpersist(false) // dist is checkpointed — the cache can go now
-    dist.filter(col("dist").isNotNull)
+    val shorter = (dist: Column, mn: Column) =>
+      when(dist.isNull, mn).when(mn.isNull, dist).otherwise(least(dist, mn))
+    Relax(sym, fromSource(sym, source), Seq("node"), col("dist") + col("w"), shorter,
+      fixed, maxRounds).filter(col("dist").isNotNull)
   }
 
   private def weightedEdges(s: SparkSession, d: String): DataFrame =
@@ -598,9 +554,10 @@ object GraphQueries {
       s"FROM sym s JOIN $prev x ON s.a = x.node WHERE x.dist IS NOT NULL GROUP BY 1) m " +
       "USING (node)"
 
-  val qSsspSql: String = {
-    val rounds = (1 to SsspRounds)
-      .map(i => s"s$i AS MATERIALIZED (${ssspIter(s"s${i - 1}")})").mkString(", ")
+  /** The oracle's [[ssspDistances]] from the hub over the weighted
+    * supported edges: the CTEs up to `s$SsspRounds`. Shared by qSsspSql
+    * and qSsspPathSql. */
+  private def ssspDistancesSql: String =
     "WITH e AS MATERIALIZED (SELECT a.l_partkey AS src, b.l_partkey AS dst, " +
       "CAST(GREATEST(1, 6 - count(DISTINCT a.l_orderkey)) AS BIGINT) AS w " +
       "FROM lineitem a JOIN lineitem b " +
@@ -611,9 +568,10 @@ object GraphQueries {
       s"s0 AS MATERIALIZED (SELECT node, CASE WHEN node = $SqlHub " +
       "THEN CAST(0 AS BIGINT) ELSE NULL END AS dist FROM " +
       "(SELECT DISTINCT a AS node FROM sym) n), " +
-      rounds + " " +
-      s"SELECT node, dist FROM s$SsspRounds WHERE dist IS NOT NULL"
-  }
+      unroll("s", SsspRounds)((p, _) => ssspIter(p))
+
+  val qSsspSql: String =
+    ssspDistancesSql + " " + s"SELECT node, dist FROM s$SsspRounds WHERE dist IS NOT NULL"
 
   /** Deterministic source that lands in a REAL component: the
     * max-degree node (min id tiebreak). The min-id node sits in a 2-node
@@ -648,21 +606,26 @@ object GraphQueries {
   private val PathDoubleRounds = 8 // 2^8 = depth 256 safety cap
 
   def ssspPaths(edges: DataFrame, source: Long, maxRounds: Int): DataFrame = {
-    val dist = ssspDistances(edges, source, maxRounds).iterCheckpoint()
-    val sym = edges.select(col("src").as("a"), col("dst").as("b"), col("w"))
-      .unionAll(edges.select(col("dst").as("a"), col("src").as("b"), col("w")))
-    val distA = dist.select(col("node").as("a"), col("dist").as("dist_a"))
-    val pred = dist.filter(col("node") =!= source)
-      .join(sym.select(col("a"), col("b").as("node"), col("w")), Seq("node"))
-      .join(distA, Seq("a"))
-      .filter(col("dist_a") + col("w") === col("dist"))
-      .groupBy(col("node")).agg(min(col("a")).as("pred"))
-    // state: seg = path over (anc, node] as "id->id->…"; rooted ⟺ anc=src
-    val init = dist.join(pred, Seq("node"), "left")
-      .select(col("node"), col("dist"),
-        coalesce(col("pred"), col("node")).as("anc"),
-        col("node").cast("string").as("seg"))
-      .iterCheckpoint()
+    // the distance loop's keyed edges also feed the predecessor join
+    val init = Graph(edges).withKeyed(col("a")) { sym =>
+      val dist = ssspOn(sym, source, maxRounds).iterCheckpoint()
+      val distA = dist.select(col("node").as("a"), col("dist").as("dist_a"))
+      val pred = dist
+        .join(sym.select(col("a"), col("b").as("node"), col("w")), Seq("node"))
+        .join(distA, Seq("a"))
+        .filter(col("dist_a") + col("w") === col("dist"))
+        .groupBy(col("node")).agg(min(col("a")).as("pred"))
+      // state: seg = path over (anc, node] as "id->id->…"; rooted ⟺ anc=src.
+      // The source's own pred (zero-weight edges) is dropped here: a
+      // `node =!= source` filter ahead of the join makes Spark plan a
+      // runtime bloom filter over the cached edges, three jobs more
+      dist.join(pred, Seq("node"), "left")
+        .select(col("node"), col("dist"),
+          when(col("node") === source, col("node"))
+            .otherwise(coalesce(col("pred"), col("node"))).as("anc"),
+          col("node").cast("string").as("seg"))
+        .iterCheckpoint()
+    }
     val rooted = Fixpoint.Probe(
       Seq(sum(when(col("anc") === source, 0L).otherwise(1L)).as("pending")),
       (_, cur) => cur.getAs[Long]("pending") == 0L)
@@ -695,8 +658,6 @@ object GraphQueries {
   private val SqlBacktrackSteps = 14
 
   val qSsspPathSql: String = {
-    val relax = (1 to SsspRounds)
-      .map(i => s"s$i AS MATERIALIZED (${ssspIter(s"s${i - 1}")})").mkString(", ")
     val walk = (1 to SqlBacktrackSteps).map { i =>
       s"p$i AS (SELECT p.node, p.dist, " +
         s"CASE WHEN p.cur = $SqlHub THEN p.cur ELSE pr.pred END AS cur, " +
@@ -704,17 +665,7 @@ object GraphQueries {
         "ELSE CAST(pr.pred AS VARCHAR) || '->' || p.path END AS path " +
         s"FROM p${i - 1} p LEFT JOIN pred pr ON pr.node = p.cur)"
     }.mkString(", ")
-    "WITH e AS MATERIALIZED (SELECT a.l_partkey AS src, b.l_partkey AS dst, " +
-      "CAST(GREATEST(1, 6 - count(DISTINCT a.l_orderkey)) AS BIGINT) AS w " +
-      "FROM lineitem a JOIN lineitem b " +
-      "ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey " +
-      s"GROUP BY 1, 2 HAVING count(DISTINCT a.l_orderkey) >= $MinSupport), " +
-      "sym AS MATERIALIZED (SELECT src AS a, dst AS b, w FROM e " +
-      "UNION ALL SELECT dst, src, w FROM e), " +
-      s"s0 AS MATERIALIZED (SELECT node, CASE WHEN node = $SqlHub " +
-      "THEN CAST(0 AS BIGINT) ELSE NULL END AS dist FROM " +
-      "(SELECT DISTINCT a AS node FROM sym) n), " +
-      relax + ", " +
+    ssspDistancesSql + ", " +
       s"fin AS MATERIALIZED (SELECT node, dist FROM s$SsspRounds " +
       "WHERE dist IS NOT NULL), " +
       "pred AS MATERIALIZED (SELECT s.b AS node, min(s.a) AS pred " +
@@ -730,7 +681,7 @@ object GraphQueries {
     // materialized once: hubNode's aggregation and the loop's sym job are
     // separate actions — without this each re-derives the edge set from
     // the fact table (no exchange reuse across jobs; guide §1.2 step 1)
-    val e = supportedEdges(s, d, MinSupport).iterCheckpoint()
+    val e = supportedEdges(s, d).iterCheckpoint()
     bfsDistances(e, hubNode(e), BfsRounds)
       .groupBy(col("dist")).agg(count(lit(1)).as("n_nodes"))
   }
@@ -741,12 +692,8 @@ object GraphQueries {
       s"JOIN $prev x ON s.a = x.node WHERE x.dist IS NOT NULL GROUP BY 1) m USING (node)"
 
   val qBfsSql: String = {
-    val rounds = (1 to BfsRounds)
-      .map(i => s"b$i AS MATERIALIZED (${bfsIter(s"b${i - 1}")})").mkString(", ")
-    "WITH e AS MATERIALIZED (SELECT a.l_partkey AS src, b.l_partkey AS dst " +
-      "FROM lineitem a JOIN lineitem b " +
-      "ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey " +
-      s"GROUP BY 1, 2 HAVING count(DISTINCT a.l_orderkey) >= $MinSupport), " +
+    val rounds = unroll("b", BfsRounds)((p, _) => bfsIter(p))
+    s"WITH $SqlSupportedEdges, " +
       "sym AS MATERIALIZED (SELECT src AS a, dst AS b FROM e UNION SELECT dst, src FROM e), " +
       s"b0 AS MATERIALIZED (SELECT node, CASE WHEN node = $SqlHub " +
       "THEN CAST(0 AS BIGINT) ELSE NULL END AS dist FROM " +
@@ -1224,7 +1171,7 @@ object GraphQueries {
   def qAssortativity(s: SparkSession, d: String): DataFrame = {
     // r17: eager materialization of e/deg measured neutral here (AQE
     // runtime exchange reuse; single action) — kept lazy
-    val e = supportedEdges(s, d, MinSupport)
+    val e = supportedEdges(s, d)
     val sym = e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
     val deg = sym.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))
@@ -1424,45 +1371,36 @@ object GraphQueries {
   private val CentralitySeeds = 4
   private val CentralityLcm = 232792560L // lcm(1..20); dists ≤ rounds = 20
 
-  /** The shared multi-source BFS fixpoint over the supported co-purchase
-    * graph: (seed, node, dist) for the `CentralitySeeds` pivots, on the
-    * double-step observed-convergence cadence. Serves qCloseness and
-    * qEffDiameter (the two pivot-sampling distance estimators). */
-  private def seedDistances(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.IterCheckpoint.IterCheckpointOps
-    val e = supportedEdges(s, d, MinSupport)
+  /** The multi-source BFS fixpoint: (seed, node, dist) over undirected
+    * `edges` for the `nSeeds` smallest node ids, dist null where a seed
+    * does not reach. Serves qCloseness and qEffDiameter (the two
+    * pivot-sampling distance estimators) over the supported co-purchase
+    * graph. */
+  private[graft] def seedDistances(edges: DataFrame, nSeeds: Int, maxRounds: Int): DataFrame =
     // cached keyed to the per-round join key — see bfsDistances
-    val sym = e.select(col("src").as("a"), col("dst").as("b"))
-      .unionAll(e.select(col("dst").as("a"), col("src").as("b")))
-      .keyedForReuse(col("a"))
-    val nodes = sym.select(col("a").as("node")).distinct()
-    val seeds = nodes.orderBy(col("node").asc).limit(CentralitySeeds)
-      .select(col("node").as("seed"))
-    val init = nodes.crossJoin(broadcast(seeds))
-      .select(col("seed"), col("node"),
-        when(col("node") === col("seed"), 0L)
-          .otherwise(lit(null).cast("long")).as("dist"))
-      .iterCheckpoint()
-    def expand(dd: DataFrame): DataFrame = {
-      val fm = sym
-        .join(dd.filter(col("dist").isNotNull)
-          .select(col("seed"), col("node").as("a"), col("dist")), Seq("a"))
-        .groupBy(col("seed"), col("b").as("node"))
-        .agg(min(col("dist")).as("mn"))
-      dd.join(fm, Seq("seed", "node"), "left")
+    Graph(edges).withKeyed(col("a")) { sym =>
+      val init = pivotPairs(sym, nSeeds)
         .select(col("seed"), col("node"),
-          when(col("dist").isNotNull, col("dist"))
-            .otherwise(col("mn") + 1L).as("dist"))
+          when(col("node") === col("seed"), 0L)
+            .otherwise(lit(null).cast("long")).as("dist"))
+        .iterCheckpoint()
+      // stops only when two consecutive jobs reach equally many
+      val stalled = Fixpoint.Probe(Seq(reachedCount), (prev, cur) =>
+        prev.exists(_.getAs[Long]("reached") == cur.getAs[Long]("reached")))
+      Relax(sym, init, Seq("seed", "node"), col("dist"), hop, stalled, maxRounds)
     }
-    val stalled = Fixpoint.Probe(Seq(reachedCount), (prev, cur) =>
-      prev.exists(_.getAs[Long]("reached") == cur.getAs[Long]("reached")))
-    val dist = Fixpoint.run(init, CcRounds, 2, Some(stalled))((dd, _) => expand(dd)).state
-    sym.unpersist(false) // dist is checkpointed — the cache can go now
-    dist
+
+  /** Every (node, seed) pair of `sym`'s nodes with the `nSeeds` smallest
+    * node ids — the pivots of the seed distances and of betweenness. */
+  private def pivotPairs(sym: DataFrame, nSeeds: Int): DataFrame = {
+    val nodes = Graph.nodes(sym)
+    nodes.crossJoin(broadcast(
+      nodes.orderBy(col("node").asc).limit(nSeeds).select(col("node").as("seed"))))
   }
 
   def qCloseness(s: SparkSession, d: String): DataFrame = {
-    val byDist = seedDistances(s, d).filter(col("dist").isNotNull)
+    val byDist = seedDistances(supportedEdges(s, d), CentralitySeeds, CcRounds)
+      .filter(col("dist").isNotNull)
       .groupBy(col("seed"), col("dist")).agg(count(lit(1)).as("cnt"))
     byDist.groupBy(col("seed"))
       .agg(sum(col("cnt")).as("n_reached"),
@@ -1476,25 +1414,28 @@ object GraphQueries {
         round(col("hsc").cast("double") / CentralityLcm, 6).as("harmonic_r"))
   }
 
-  val qClosenessSql: String = {
+  /** The oracle's [[seedDistances]] over the supported edges: the CTEs
+    * up to `<p>$CcRounds`, the (seed, node, dist) state after the last
+    * round, named with the prefix `p`. Shared by qClosenessSql and
+    * qEffDiameterSql. */
+  private def seedDistancesSql(p: String): String = {
     def iter(prev: String): String =
       s"SELECT l.seed, l.node, CASE WHEN l.dist IS NOT NULL THEN l.dist " +
         "ELSE m.mn + 1 END AS dist " +
         s"FROM $prev l LEFT JOIN (SELECT x.seed, s.b AS node, min(x.dist) AS mn " +
         s"FROM sym s JOIN $prev x ON s.a = x.node " +
         "WHERE x.dist IS NOT NULL GROUP BY 1, 2) m USING (seed, node)"
-    val rounds = (1 to CcRounds)
-      .map(i => s"c$i AS MATERIALIZED (${iter(s"c${i - 1}")})").mkString(", ")
-    "WITH e AS MATERIALIZED (SELECT a.l_partkey AS src, b.l_partkey AS dst " +
-      "FROM lineitem a JOIN lineitem b " +
-      "ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey " +
-      s"GROUP BY 1, 2 HAVING count(DISTINCT a.l_orderkey) >= $MinSupport), " +
+    s"WITH $SqlSupportedEdges, " +
       "sym AS MATERIALIZED (SELECT src AS a, dst AS b FROM e UNION SELECT dst, src FROM e), " +
       "nd AS MATERIALIZED (SELECT DISTINCT a AS node FROM sym), " +
       s"seeds AS (SELECT node AS seed FROM nd ORDER BY node LIMIT $CentralitySeeds), " +
-      "c0 AS MATERIALIZED (SELECT seed, node, CASE WHEN node = seed " +
+      s"${p}0 AS MATERIALIZED (SELECT seed, node, CASE WHEN node = seed " +
       "THEN CAST(0 AS BIGINT) ELSE NULL END AS dist FROM nd CROSS JOIN seeds), " +
-      rounds + ", " +
+      unroll(p, CcRounds)((prev, _) => iter(prev))
+  }
+
+  val qClosenessSql: String =
+    seedDistancesSql("c") + ", " +
       s"bd AS (SELECT seed, dist, CAST(count(*) AS BIGINT) AS cnt FROM c$CcRounds " +
       "WHERE dist IS NOT NULL GROUP BY 1, 2) " +
       "SELECT seed, CAST(sum(cnt) AS BIGINT) AS n_reached, " +
@@ -1503,7 +1444,6 @@ object GraphQueries {
       s"round(CAST(sum(CASE WHEN dist > 0 THEN cnt * ($CentralityLcm // dist) " +
       s"ELSE 0 END) AS DOUBLE) / $CentralityLcm, 6) AS harmonic_r " +
       "FROM bd GROUP BY 1"
-  }
 
   // ── Effective diameter (pivot-sampled distance distribution) ──────────
   // The graph-scale dial that decides BFS/iteration budgets: pool the
@@ -1517,7 +1457,7 @@ object GraphQueries {
   // bounded-frame discipline); everything upstream is the proven BFS.
   def qEffDiameter(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => W}
-    val hist = seedDistances(s, d)
+    val hist = seedDistances(supportedEdges(s, d), CentralitySeeds, CcRounds)
       .filter(col("dist").isNotNull && col("dist") > 0)
       .groupBy(col("dist")).agg(count(lit(1)).as("cnt"))
     val tot = hist.agg(sum(col("cnt")).as("n_pairs"),
@@ -1535,25 +1475,8 @@ object GraphQueries {
           .as("mean_dist_r"))
   }
 
-  val qEffDiameterSql: String = {
-    def iter(prev: String): String =
-      s"SELECT l.seed, l.node, CASE WHEN l.dist IS NOT NULL THEN l.dist " +
-        "ELSE m.mn + 1 END AS dist " +
-        s"FROM $prev l LEFT JOIN (SELECT x.seed, s.b AS node, min(x.dist) AS mn " +
-        s"FROM sym s JOIN $prev x ON s.a = x.node " +
-        "WHERE x.dist IS NOT NULL GROUP BY 1, 2) m USING (seed, node)"
-    val rounds = (1 to CcRounds)
-      .map(i => s"e$i AS MATERIALIZED (${iter(s"e${i - 1}")})").mkString(", ")
-    "WITH e AS MATERIALIZED (SELECT a.l_partkey AS src, b.l_partkey AS dst " +
-      "FROM lineitem a JOIN lineitem b " +
-      "ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey " +
-      s"GROUP BY 1, 2 HAVING count(DISTINCT a.l_orderkey) >= $MinSupport), " +
-      "sym AS MATERIALIZED (SELECT src AS a, dst AS b FROM e UNION SELECT dst, src FROM e), " +
-      "nd AS MATERIALIZED (SELECT DISTINCT a AS node FROM sym), " +
-      s"seeds AS (SELECT node AS seed FROM nd ORDER BY node LIMIT $CentralitySeeds), " +
-      "e0 AS MATERIALIZED (SELECT seed, node, CASE WHEN node = seed " +
-      "THEN CAST(0 AS BIGINT) ELSE NULL END AS dist FROM nd CROSS JOIN seeds), " +
-      rounds + ", " +
+  val qEffDiameterSql: String =
+    seedDistancesSql("e") + ", " +
       s"h AS (SELECT dist, CAST(count(*) AS BIGINT) AS cnt FROM e$CcRounds " +
       "WHERE dist IS NOT NULL AND dist > 0 GROUP BY 1), " +
       "t AS (SELECT CAST(sum(cnt) AS BIGINT) AS n_pairs, max(dist) AS max_dist, " +
@@ -1564,7 +1487,6 @@ object GraphQueries {
       "WHERE cum * 10 >= n_pairs * 9) " +
       "SELECT n_pairs, max_dist, eff_diameter_90, " +
       "round(CAST(sum_dist AS DOUBLE) / n_pairs, 6) AS mean_dist_r FROM t, ed"
-  }
 
   // ── Betweenness centrality (sampled Brandes) ───────────────────────────
   // The last classic centrality the family lacked: "which nodes sit on
@@ -1594,99 +1516,92 @@ object GraphQueries {
   private val BetwMicro = 1000000L
 
   def qBetweenness(s: SparkSession, d: String): DataFrame =
-    betweennessOnEdges(supportedEdges(s, d, MinSupport), CentralitySeeds)
+    betweennessOnEdges(supportedEdges(s, d), CentralitySeeds)
 
   /** Edge-parameterized core of [[qBetweenness]] — public so specs can
     * drive the DISTRIBUTED operator over hand-built closed-form graphs
     * (path, star) instead of only the parquet fixture. */
-  def betweennessOnEdges(e: DataFrame, nSeeds: Int): DataFrame = {
-    import graft.operators.IterCheckpoint.IterCheckpointOps
+  def betweennessOnEdges(e: DataFrame, nSeeds: Int): DataFrame =
     // cached keyed to the forward-phase join key — see bfsDistances
-    val sym = e.select(col("src").as("a"), col("dst").as("b"))
-      .unionAll(e.select(col("dst").as("a"), col("src").as("b")))
-      .keyedForReuse(col("a"))
-    val nodes = sym.select(col("a").as("node")).distinct()
-    val seeds = nodes.orderBy(col("node").asc).limit(nSeeds)
-      .select(col("node").as("seed"))
-    // (seed, node, dist, sigma): dist null = unreached
-    val init = nodes.crossJoin(broadcast(seeds))
-      .select(col("seed"), col("node"),
-        when(col("node") === col("seed"), 0L).otherwise(lit(null).cast("long"))
-          .as("dist"),
-        when(col("node") === col("seed"), 1L).otherwise(lit(null).cast("long"))
-          .as("sigma"))
-      .iterCheckpoint()
-    // early exit once a round assigns nothing: every later round is a
-    // no-op on BOTH engines (the oracle's surplus unrolled rounds leave
-    // a converged state untouched), so parity survives the shortcut —
-    // rounds drop from the fixed 20 to the graph's eccentricity.
-    // (r18 tried the seedDistances double-step here — two σ levels
-    // stacked lazily per checkpoint: the duplicated state references per
-    // plan cost more than the saved actions, +6% drift-adjusted at
-    // sf0.1 and +10% at sf1, so the single-step cadence stays.)
-    // Round index i assigns level r = i + 1.
-    val noneAssigned = Fixpoint.Probe(
-      (i: Int) => Seq(sum(when(col("dist") === i + 1, 1L).otherwise(0L)).as("assigned")),
-      (_, cur) => cur.getAs[Long]("assigned") == 0L)
-    val fwd = Fixpoint.run(init, CcRounds, 1, Some(noneAssigned)) { (st, i) =>
-      val r = i + 1
-      val frontier = st.filter(col("dist") === (r - 1))
-        .select(col("seed"), col("node").as("a"), col("sigma").as("fs"))
-      val contrib = sym.join(frontier, Seq("a"))
-        .groupBy(col("seed"), col("b").as("node"))
-        .agg(sum(col("fs")).as("sig"))
-      st.join(contrib, Seq("seed", "node"), "left")
+    Graph(e).withKeyed(col("a")) { sym =>
+      // (seed, node, dist, sigma): dist null = unreached
+      val init = pivotPairs(sym, nSeeds)
         .select(col("seed"), col("node"),
-          when(col("dist").isNotNull, col("dist"))
-            .when(col("sig").isNotNull, lit(r.toLong)).as("dist"),
-          when(col("dist").isNotNull, col("sigma"))
-            .when(col("sig").isNotNull, col("sig")).as("sigma"))
-    }
-    val st = fwd.state
-    // the last round that assigned a level (a converged run's last round
-    // assigned none)
-    val maxDist = if (fwd.converged) fwd.rounds - 1 else fwd.rounds
-    // backward: δq per (seed, node), deepest reached level first (levels
-    // beyond maxDist are empty — no-ops the oracle still unrolls)
-    var dq = st.filter(col("dist").isNotNull)
-      .select(col("seed"), col("node"), col("dist"), col("sigma"),
-        lit(0L).as("deltaq"))
-      .iterCheckpoint()
-    // the backward levels join sym on the OTHER endpoint — one b-keyed
-    // cached copy up front (repartitioned straight off the still-cached
-    // forward copy) replaces an E-sized exchange per level (guide §2.4)
-    val symB = sym.select(col("a"), col("b")).keyedCopy(col("b"))
-    for (lev <- maxDist to 1 by -1) {
-      val deeper = dq.filter(col("dist") === lev)
-        .select(col("seed"), col("node").as("b"),
-          col("sigma").as("sw"), col("deltaq").as("dw"))
-      // `div` (integral division) keeps the quotient exact BIGINT; the
-      // previous (num - pmod(num, sw)) / sw spelled the same value but
-      // Spark's `/` on BIGINTs goes through DOUBLE, losing exactness
-      // once sigma*(1e6+deltaq) exceeds 2^53 on dense graphs. All values
-      // are positive, so truncating div == the oracle's floor `//`.
-      val c = symB.join(deeper, Seq("b"))
-        .select(col("seed"), col("a").as("node"), col("sw"), col("dw"))
-        .join(dq.filter(col("dist") === (lev - 1))
-          .select(col("seed"), col("node"), col("sigma")), Seq("seed", "node"))
-        .select(col("seed"), col("node"),
-          expr(s"(sigma * (${BetwMicro}L + dw)) div sw").as("dc"))
-        .groupBy(col("seed"), col("node")).agg(sum(col("dc")).as("dsum"))
-      dq = dq.join(c, Seq("seed", "node"), "left")
-        .select(col("seed"), col("node"), col("dist"), col("sigma"),
-          (col("deltaq") + coalesce(col("dsum"), lit(0L))).as("deltaq"))
+          when(col("node") === col("seed"), 0L).otherwise(lit(null).cast("long"))
+            .as("dist"),
+          when(col("node") === col("seed"), 1L).otherwise(lit(null).cast("long"))
+            .as("sigma"))
         .iterCheckpoint()
+      // early exit once a round assigns nothing: every later round is a
+      // no-op on BOTH engines (the oracle's surplus unrolled rounds leave
+      // a converged state untouched), so parity survives the shortcut —
+      // rounds drop from the fixed 20 to the graph's eccentricity.
+      // (r18 tried the seedDistances double-step here — two σ levels
+      // stacked lazily per checkpoint: the duplicated state references per
+      // plan cost more than the saved actions, +6% drift-adjusted at
+      // sf0.1 and +10% at sf1, so the single-step cadence stays.)
+      // Round index i assigns level r = i + 1.
+      val noneAssigned = Fixpoint.Probe(
+        (i: Int) => Seq(sum(when(col("dist") === i + 1, 1L).otherwise(0L)).as("assigned")),
+        (_, cur) => cur.getAs[Long]("assigned") == 0L)
+      val fwd = Fixpoint.run(init, CcRounds, 1, Some(noneAssigned)) { (st, i) =>
+        val r = i + 1
+        val frontier = st.filter(col("dist") === (r - 1))
+          .select(col("seed"), col("node").as("a"), col("sigma").as("fs"))
+        val contrib = sym.join(frontier, Seq("a"))
+          .groupBy(col("seed"), col("b").as("node"))
+          .agg(sum(col("fs")).as("sig"))
+        st.join(contrib, Seq("seed", "node"), "left")
+          .select(col("seed"), col("node"),
+            when(col("dist").isNotNull, col("dist"))
+              .when(col("sig").isNotNull, lit(r.toLong)).as("dist"),
+            when(col("dist").isNotNull, col("sigma"))
+              .when(col("sig").isNotNull, col("sig")).as("sigma"))
+      }
+      val st = fwd.state
+      // the last round that assigned a level (a converged run's last round
+      // assigned none)
+      val maxDist = if (fwd.converged) fwd.rounds - 1 else fwd.rounds
+      // backward: δq per (seed, node), deepest reached level first (levels
+      // beyond maxDist are empty — no-ops the oracle still unrolls)
+      var dq = st.filter(col("dist").isNotNull)
+        .select(col("seed"), col("node"), col("dist"), col("sigma"),
+          lit(0L).as("deltaq"))
+        .iterCheckpoint()
+      // the backward levels join sym on the OTHER endpoint — one b-keyed
+      // cached copy up front (repartitioned straight off the still-cached
+      // forward copy) replaces an E-sized exchange per level (guide §2.4)
+      val symB = sym.select(col("a"), col("b")).keyedCopy(col("b"))
+      for (lev <- maxDist to 1 by -1) {
+        val deeper = dq.filter(col("dist") === lev)
+          .select(col("seed"), col("node").as("b"),
+            col("sigma").as("sw"), col("deltaq").as("dw"))
+        // `div` (integral division) keeps the quotient exact BIGINT; the
+        // previous (num - pmod(num, sw)) / sw spelled the same value but
+        // Spark's `/` on BIGINTs goes through DOUBLE, losing exactness
+        // once sigma*(1e6+deltaq) exceeds 2^53 on dense graphs. All values
+        // are positive, so truncating div == the oracle's floor `//`.
+        val c = symB.join(deeper, Seq("b"))
+          .select(col("seed"), col("a").as("node"), col("sw"), col("dw"))
+          .join(dq.filter(col("dist") === (lev - 1))
+            .select(col("seed"), col("node"), col("sigma")), Seq("seed", "node"))
+          .select(col("seed"), col("node"),
+            expr(s"(sigma * (${BetwMicro}L + dw)) div sw").as("dc"))
+          .groupBy(col("seed"), col("node")).agg(sum(col("dc")).as("dsum"))
+        dq = dq.join(c, Seq("seed", "node"), "left")
+          .select(col("seed"), col("node"), col("dist"), col("sigma"),
+            (col("deltaq") + coalesce(col("dsum"), lit(0L))).as("deltaq"))
+          .iterCheckpoint()
+      }
+      symB.unpersist(false) // dq is checkpointed — the caches can go now
+      dq.filter(col("node") =!= col("seed"))
+        .groupBy(col("node"))
+        .agg(sum(col("deltaq")).as("betw_q"))
+        .orderBy(col("betw_q").desc, col("node").asc)
+        .limit(20)
+        .select(col("node"), col("betw_q"),
+          round(col("betw_q").cast("double") / BetwMicro, 6).as("betweenness_r"))
     }
-    sym.unpersist(false) // dq is checkpointed — both caches can go now
-    symB.unpersist(false)
-    dq.filter(col("node") =!= col("seed"))
-      .groupBy(col("node"))
-      .agg(sum(col("deltaq")).as("betw_q"))
-      .orderBy(col("betw_q").desc, col("node").asc)
-      .limit(20)
-      .select(col("node"), col("betw_q"),
-        round(col("betw_q").cast("double") / BetwMicro, 6).as("betweenness_r"))
-  }
 
   val qBetweennessSql: String = {
     def fwd(prev: String, r: Int): String =
@@ -1709,16 +1624,12 @@ object GraphQueries {
         s"WHERE dist = $lev) d ON d.seed = g.seed AND d.b = s.b " +
         "GROUP BY 1, 2) c USING (seed, node)"
     }
-    val fwds = (1 to CcRounds)
-      .map(i => s"f$i AS MATERIALIZED (${fwd(s"f${i - 1}", i)})").mkString(", ")
+    val fwds = unroll("f", CcRounds)(fwd)
     val bwds = (CcRounds to 1 by -1)
       .map(l => s"b${CcRounds - l} AS MATERIALIZED " +
         s"(${bwd(if (l == CcRounds) "bini" else s"b${CcRounds - l - 1}", l)})")
       .mkString(", ")
-    "WITH e AS MATERIALIZED (SELECT a.l_partkey AS src, b.l_partkey AS dst " +
-      "FROM lineitem a JOIN lineitem b " +
-      "ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey " +
-      s"GROUP BY 1, 2 HAVING count(DISTINCT a.l_orderkey) >= $MinSupport), " +
+    s"WITH $SqlSupportedEdges, " +
       "sym AS MATERIALIZED (SELECT src AS a, dst AS b FROM e UNION SELECT dst, src FROM e), " +
       "nd AS MATERIALIZED (SELECT DISTINCT a AS node FROM sym), " +
       s"seeds AS (SELECT node AS seed FROM nd ORDER BY node LIMIT $CentralitySeeds), " +
@@ -1751,7 +1662,7 @@ object GraphQueries {
   private val LinkPredTop = 20
 
   def qLinkPredict(s: SparkSession, d: String): DataFrame = {
-    val e = supportedEdges(s, d, MinSupport)
+    val e = supportedEdges(s, d)
     val sym = e.select(col("src").as("w"), col("dst").as("n"))
       .unionAll(e.select(col("dst").as("w"), col("src").as("n")))
     val adj = sym.groupBy(col("w"))
@@ -1814,7 +1725,7 @@ object GraphQueries {
   }
 
   def qCommunities(s: SparkSession, d: String): DataFrame = {
-    val we = supportedEdges(s, d, MinSupport).withColumn("w", lit(1L))
+    val we = supportedEdges(s, d).withColumn("w", lit(1L))
     graft.operators.Louvain.clusterFromL1(we, louvainL1(s, d, we),
         rounds = LouvainRounds)
       .groupBy(col("comm").as("community"))
@@ -1844,7 +1755,7 @@ object GraphQueries {
   // asserts it on the fixture + a hand-built defective case). Census
   // output like q_communities so the oracle hash pins the partition.
   def qCommunitiesLeiden(s: SparkSession, d: String): DataFrame = {
-    val we = supportedEdges(s, d, MinSupport).withColumn("w", lit(1L))
+    val we = supportedEdges(s, d).withColumn("w", lit(1L))
     graft.operators.Louvain.clusterLeidenFromL1(we, louvainL1(s, d, we),
         rounds = LouvainRounds)
       .groupBy(col("comm").as("community"))

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{ConnectedComponents, IterCheckpoint, KCore}
+import graft.queries.GraphQueries
 
 /** The reliable-checkpoint opt-in (`graft.iter.checkpointDir`): unset, the
   * iterative family materializes via localCheckpoint exactly as before the
@@ -90,6 +91,17 @@ class IterCheckpointSpec extends AnyFunSuite {
     val graph = Seq.fill(120)((r.nextInt(60).toLong, r.nextInt(60).toLong)).toDF("src", "dst")
     assert(jobsDuring(ConnectedComponents.components(graph)) <= 2)
     assert(jobsDuring(KCore.coreEdges(graph, 2)) <= 2)
+  }
+
+  test("BFS, SSSP and the seed relaxation run a pinned number of builder jobs") {
+    // counts of the hand-written loops the one relaxation operator
+    // replaced: a per-round job added to the shared loop shows here
+    val w = Seq((1L, 2L, 1L), (2L, 3L, 2L), (3L, 4L, 1L), (2L, 5L, 3L), (5L, 6L, 1L),
+      (4L, 6L, 1L), (7L, 8L, 1L)).toDF("src", "dst", "w")
+    val e = w.select(col("src"), col("dst"))
+    assert(jobsDuring(GraphQueries.bfsDistances(e, 1L, 10)) === 35)
+    assert(jobsDuring(GraphQueries.ssspDistances(w, 1L, 10)) === 35)
+    assert(jobsDuring(GraphQueries.seedDistances(e, 2, 10)) === 39)
   }
 
   private val AdvisoryKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"

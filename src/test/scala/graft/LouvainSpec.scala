@@ -232,7 +232,7 @@ class LouvainSpec extends AnyFunSuite {
     val dir = ArtifactCache.dir(sf, "lineitem", "louvain_l1")
     assert(ArtifactCache.ready(dir),
       s"level-1 label store $dir should exist after a community query")
-    val we = graft.queries.GraphQueries.supportedEdgesForSpec(spark, sf)
+    val we = graft.queries.GraphQueries.supportedEdges(spark, sf)
       .withColumn("w", lit(1L))
     val expL = Louvain.cluster(we, rounds = 4)
       .groupBy(col("comm")).count().as[(Long, Long)].collect().toMap

@@ -260,6 +260,40 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("multi-seed BFS distances equal a driver-side BFS per seed on random graphs (10 trials)") {
+    val r = new Random(23)
+    for (trial <- 1 to 10) {
+      val nodes = 3 + r.nextInt(25)
+      val edges = List.fill(4 + r.nextInt(50)) {
+        val a = r.nextInt(nodes); val b = r.nextInt(nodes)
+        (math.min(a, b).toLong, math.max(a, b).toLong)
+      }.filter { case (a, b) => a != b }.distinct
+      if (edges.nonEmpty) {
+        val adj = edges.flatMap(e => List(e, e.swap))
+          .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+        val nSeeds = 1 + r.nextInt(4)
+        val seeds = adj.keys.toSeq.sorted.take(nSeeds)
+        // one driver-side layered BFS per seed; unreached nodes carry null
+        val want = seeds.flatMap { seed =>
+          val dist = scala.collection.mutable.Map(seed -> 0L)
+          var layer = Set(seed); var dd = 0L
+          while (layer.nonEmpty) {
+            dd += 1
+            layer = layer.flatMap(adj(_)).filterNot(dist.contains)
+            layer.foreach(n => dist(n) = dd)
+          }
+          adj.keys.map(n => (seed, n) -> dist.get(n))
+        }.toMap
+        val got = graft.queries.GraphQueries
+          .seedDistances(edges.toDF("src", "dst"), nSeeds, maxRounds = nodes)
+          .collect()
+          .map(x => (x.getLong(0), x.getLong(1)) -> Option(x.get(2)).map(_.asInstanceOf[Long]))
+        assert(got.length === want.size, s"trial $trial edges: $edges")
+        assert(got.toMap === want, s"trial $trial edges: $edges")
+      }
+    }
+  }
+
   test("SSSP distances equal driver-side Dijkstra on random weighted graphs (10 trials)") {
     val r = new Random(29)
     for (trial <- 1 to 10) {
