@@ -1,5 +1,7 @@
 package graft
 
+import graft.sources.LocalFs
+
 /** Fingerprint-keyed local directories for fit-once / serve-forever
   * artifacts (the persisted IVF-PQ ANN index, Louvain level-1 labels).
   *
@@ -91,7 +93,7 @@ object ArtifactCache {
     lock.synchronized {
       if (ready(dir, part)) {
         // lost the race cleanly: a rival's complete artifact is in place
-        deleteRecursively(tmp)
+        LocalFs.deleteRecursively(tmp)
       } else {
         try {
           var lostToRival = false
@@ -108,9 +110,9 @@ object ArtifactCache {
               // the move-aside: restore the complete artifact and serve it
               java.nio.file.Files.move(aside, dir,
                 java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-              deleteRecursively(tmp)
+              LocalFs.deleteRecursively(tmp)
               lostToRival = true
-            } else deleteRecursively(aside)
+            } else LocalFs.deleteRecursively(aside)
           }
           if (!lostToRival) java.nio.file.Files.move(tmp, dir,
             java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -121,20 +123,10 @@ object ArtifactCache {
           // failure (non-atomic filesystem, half-deleted destination) and
           // must surface rather than silently dropping the fitted artifact
           case e: java.nio.file.FileSystemException =>
-            deleteRecursively(tmp)
+            LocalFs.deleteRecursively(tmp)
             if (!ready(dir, part)) throw e
         }
       }
     }
   }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val s = java.nio.file.Files.walk(p)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path])
-          .iterator.asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      } finally s.close()
-    }
 }

@@ -1,9 +1,12 @@
 package graft
 
+import scala.util.Try
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
+import graft.sources.LocalFs
 import graft.streaming.{EventStreams, StreamMetrics}
 
 /** Streaming THROUGHPUT bench — the rate evidence behind the 100 TB
@@ -92,7 +95,7 @@ object StreamBench {
         .getOrElse(sys.error(s"no progress recorded for $name"))
       require(st.terminated, s"listener bus never delivered $name's " +
         "terminate event within 30 s — stats would be partial")
-      deleteRecursively(ckpt)
+      Try(LocalFs.deleteRecursively(ckpt)) // best effort
       st
     }
 
@@ -173,18 +176,6 @@ object StreamBench {
       s""""changelog_checkpointing":$changelog,"pad_bytes":$padBytes,""" +
       s""""files_per_trigger":$FilesPerTrigger,"queries":$qjson}""")
     spark.stop()
-    deleteRecursively(srcDir) // multi-MB /tmp litter otherwise
-  }
-
-  /** Best-effort recursive delete of a bench temp dir (walk stream
-    * closed via try/finally — leaked directory handles otherwise). */
-  private def deleteRecursively(dir: java.nio.file.Path): Unit = {
-    import scala.util.Try
-    Try {
-      val walk = java.nio.file.Files.walk(dir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Try(java.nio.file.Files.deleteIfExists(p)))
-      finally walk.close()
-    }
+    Try(LocalFs.deleteRecursively(srcDir)) // best effort: multi-MB /tmp litter otherwise
   }
 }

@@ -44,13 +44,6 @@ object DataGen {
   private def ui(tag: String, n: Long, keys: Column*): Column =
     pmod(xxhash64((lit(tag) +: keys): _*), lit(n))
 
-  /** Standard gaussian via Box–Muller over two independent streams. */
-  private def gauss(tag: String, keys: Column*): Column = {
-    val u1 = u(tag + ":u1", keys: _*) + lit(1e-12)
-    val u2 = u(tag + ":u2", keys: _*)
-    sqrt(lit(-2.0) * log(u1)) * cos(lit(2.0 * math.Pi) * u2)
-  }
-
   private def pick(arr: Seq[String], idx: Column): Column =
     element_at(array(arr.map(lit): _*), (idx + 1).cast("int"))
 

@@ -72,13 +72,11 @@ object IterCheckpoint {
 
   /** Materialize `df` through [[apply]] (so the reliable conf applies) and
     * count its rows, and the rows holding any null, in the same job. */
-  def measure(df: DataFrame): Measured = measured(df, apply)
-
-  private def measured(df: DataFrame, materialize: DataFrame => DataFrame): Measured = {
+  def measure(df: DataFrame): Measured = {
     val anyNull = df.columns
       .map(c => col("`" + c.replace("`", "``") + "`").isNull)
       .reduceOption(_ || _).getOrElse(lit(false))
-    val (ck, m) = observedBy(materialize)(df,
+    val (ck, m) = observed(df,
       count(lit(1)).as("rows"), count(when(anyNull, 1)).as("null_rows"))
     Measured(ck, m.getAs[Long]("rows"), m.getAs[Long]("null_rows"))
   }
@@ -86,13 +84,9 @@ object IterCheckpoint {
   /** Materialize `df` through [[apply]] and read `metrics` — aggregates
     * over its rows, observed by the materializing job itself, so a probe
     * costs no action of its own. */
-  def observed(df: DataFrame, metrics: Column*): (DataFrame, Row) =
-    observedBy(apply)(df, metrics: _*)
-
-  private def observedBy(materialize: DataFrame => DataFrame)(
-      df: DataFrame, metrics: Column*): (DataFrame, Row) = {
+  def observed(df: DataFrame, metrics: Column*): (DataFrame, Row) = {
     val obs = new Observation()
-    val ck = materialize(df.observe(obs, metrics.head, metrics.tail: _*))
+    val ck = apply(df.observe(obs, metrics.head, metrics.tail: _*))
     (ck, Await.result(obs.future, Duration.Inf))
   }
 
@@ -119,16 +113,18 @@ object IterCheckpoint {
     // while InMemoryTableScan preserves the cached plan's partitioning
     // exactly.
     //
-    // The scratch materialization is ALWAYS localCheckpoint, independent
-    // of the per-round durability conf: the keyed cache supersedes it
-    // within this call, so reliable mode would pay an HDFS/S3 write for
-    // rebuild-once data that only needs lineage truncation. An input
-    // that is already a materialized RDD scan (an iterCheckpoint'd frame,
-    // possibly under projections) skips the scratch copy entirely — its
-    // partition count is already the AQE-coalesced one.
-    IterRoundExplain.maybeDump(df)
-    if (materializedScan(df.queryExecution.analyzed)) keyedCopy(df, keys: _*)
-    else keyedForReuse(measured(df, _.localCheckpoint(eager = true)), keys: _*)
+    // The scratch copy is materialized through [[measure]], so under the
+    // durability conf it is a reliable checkpoint like every round: the
+    // keyed cache is rebuilt from it after an executor loss, and a
+    // released scratch (see below) only drops blocks the checkpoint files
+    // back. An input that is already a materialized RDD scan (an
+    // iterCheckpoint'd frame, possibly under projections) skips the
+    // scratch copy entirely — its partition count is already the
+    // AQE-coalesced one.
+    if (materializedScan(df.queryExecution.analyzed)) {
+      IterRoundExplain.maybeDump(df)
+      keyedCopy(df, keys: _*)
+    } else keyedForReuse(measure(df), keys: _*)
   }
 
   /** [[keyedForReuse]] over a frame [[measure]] materialized for this
@@ -181,11 +177,12 @@ object IterCheckpoint {
     case _                => false
   }
 
-  /** Drop the blocks of a localCheckpoint'd scratch frame. Safe here
-    * because its only consumer (the keyed cache) is filled at
-    * MEMORY_AND_DISK before this is called, so the lineage is never
-    * re-executed — the same executor-loss caveat localCheckpoint itself
-    * carries (see class doc). */
+  /** Drop the blocks of a materialized scratch frame. Safe here because
+    * its only consumer (the keyed cache) is filled at MEMORY_AND_DISK
+    * before this is called. A localCheckpoint'd scratch then carries the
+    * executor-loss caveat localCheckpoint itself carries (see class doc);
+    * a reliably checkpointed one keeps its checkpoint files, which are
+    * not blocks. */
   private def releaseMaterialized(ck: DataFrame): Unit =
     ck.queryExecution.analyzed match {
       case l: LogicalRDD => l.rdd.unpersist(blocking = false)

@@ -5,15 +5,17 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.{Md5Bits, Shingles, SimHash, Winnow}
+import graft.operators.SetSimJoin
 
 /** Deduplication suite over the `documents` table — the LLM-training-data
   * operators the reference lacks entirely (SURVEY.md §7.0 step 5), each
   * designed for the 100 TB shape first:
   *
   *  - exact:        hash-groupBy, one shuffle of 16-byte digests.
-  *  - n-gram Jaccard: exact pairwise similarity via shingle inverted
-  *    index; correct but inherently candidate-quadratic — kept as the
-  *    small-scale ORACLE for the approximate paths.
+  *  - n-gram Jaccard, containment, winnow overlap: exact threshold
+  *    set-similarity joins through one prefix/positional candidate
+  *    generator and one array verifier (operators.SetSimJoin) — the exact
+  *    reference for the approximate paths.
   *  - MinHash-LSH:  the scale path. k minhashes per doc (one scan), banded
   *    into buckets; only same-bucket docs pair up, so shuffle volume is
   *    O(docs × bands), not O(pairs). Candidates are verified with exact
@@ -36,8 +38,7 @@ object DedupQueries {
       "FROM documents GROUP BY md5(text)"
 
   // ── Exact n-gram Jaccard near-dup pairs ────────────────────────────────
-  // Inverted index on distinct 3-gram shingles; pairs sharing a shingle
-  // are counted once per shared shingle; |A∩B| / (|A|+|B|-|A∩B|) >= 0.8.
+  // Distinct 3-gram shingles per doc; |A∩B| / (|A|+|B|-|A∩B|) >= 0.8.
   // Integer counts + one double division → bit-identical to the oracle.
   // graft_shingles emits first-occurrence-distinct shingles in ONE codegen
   // pass (the column-algebra spelling re-tokenizes per position — O(len²)).
@@ -46,89 +47,19 @@ object DedupQueries {
       .select(col("doc_id"), explode(Shingles.shingles(col("text"), 3)).as("sh"))
   }
 
-  /** EXACT threshold Jaccard via prefix filtering (Bayardo/Ma/Srikant
-    * "Scaling Up All Pairs Similarity Search", WWW 2007; Chaudhuri et al.
-    * SSJoin): for J >= t, two docs MUST share at least one shingle among
-    * each one's p = n - ceil(t·n) + 1 rarest shingles (canonical order =
-    * ascending document frequency). So the quadratic self-join runs only
-    * over those short prefixes, a size-ratio filter (min >= t·max) prunes
-    * incompatible pairs, and only surviving candidates get their true
-    * intersection counted. Same exact result set as the naive
-    * all-shingles join (spec-asserted), at a fraction of the pair volume
-    * — this is what keeps EXACT verification affordable after LSH at
-    * scale. */
+  /** EXACT threshold Jaccard through the prefix/positional set-similarity
+    * join ([[SetSimJoin]]): the same result set as the naive all-shingles
+    * join (spec-asserted), at a fraction of the pair volume — this is what
+    * keeps EXACT verification affordable after LSH at scale. */
   def qNgramJaccard(s: SparkSession, d: String): DataFrame =
     ngramJaccardPrefix(shingleIndex(s, d), threshold = 0.8)
 
-  def ngramJaccardPrefix(sh: DataFrame, threshold: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // NOTE (r17): an eager-materialization variant (checkpointing sh /
-    // ranked / docSets, which appear in several subtrees) measured a
-    // clear REGRESSION at sf0.1 (1.6 -> 2.3 s): the repeated subtrees
-    // are identical, AQE's runtime exchange reuse already covers them,
-    // and the checkpoints only pay extra materialization. Kept lazy.
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val df = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-    // rank each doc's shingles rarest-first in the global canonical order
-    val byRarity = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("sh"))
-    // exact-decimal ceil(t*n): double rounding of threshold*n could land
-    // one ulp above an integer product and overshoot the ceiling,
-    // shrinking the prefix below the provable minimum for some thresholds
-    val tDec = new java.math.BigDecimal(threshold.toString)
-    val ranked = sh.join(df, "sh")
-      .withColumn("rk", row_number().over(byRarity))
-      .join(sizes, "doc_id")
-      .withColumn("p", (col("n") - ceil(lit(tDec) * col("n")) + 1).cast("int"))
-    val prefix = ranked.filter(col("rk") <= col("p"))
-      .select(col("doc_id"), col("sh"), col("n"), col("rk"))
-    // required overlap α = ceil(t·(na+nb)/(1+t)) in EXACT integer
-    // arithmetic: t = num/10^s (decimal) → α = ceil(num·(na+nb)/(10^s+num))
-    // = (num·(na+nb) + D − 1) div D. Doubles could round the boundary.
-    val tNum = tDec.unscaledValue.longValueExact
-    val tDen = java.math.BigDecimal.ONE.movePointRight(tDec.scale)
-      .longValueExact + tNum
-    def alpha(na: String, nb: String): Column =
-      expr(s"($tNum * ($na + $nb) + ${tDen - 1}) div $tDen")
-    // candidates: prefix-overlap + size-ratio compatibility + PPJoin's
-    // positional filter (Xiao/Wang/Lin/Yu, WWW 2008): for the FIRST
-    // shared shingle (canonical df-order) at ranks (i, j), every other
-    // shared shingle ranks after both, so overlap ≤ 1 + min(na−i, nb−j);
-    // pairs whose match positions cannot reach α are pruned LOSSLESSLY
-    // before the distinct — on closed-vocabulary corpora (where nothing
-    // is rare and the plain prefix join floods) this is the filter that
-    // keeps the candidate stage output-bound.
-    val cands = prefix.as("a")
-      .join(prefix.as("b"), col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      // decimal threshold here too: double t*max can round one ulp above
-      // an exact integer product and prune a true boundary pair
-      .filter(least(col("a.n"), col("b.n")) >= lit(tDec) * greatest(col("a.n"), col("b.n")))
-      .filter(lit(1) + least(col("a.n") - col("a.rk"), col("b.n") - col("b.rk")) >=
-        alpha("a.n", "b.n"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.n").as("na"), col("b.n").as("nb"))
-      .distinct()
-    // exact verification: true intersection count for candidates only —
-    // against per-doc shingle ARRAYS, so each candidate pair costs one
-    // O(na+nb) array_intersect instead of fanning back through the
-    // inverted index. Closed-vocabulary corpora (like the synthetic
-    // fixture) make even prefix shingles non-rare: at sf1 the index
-    // fan-out was ~350M intermediate rows for 6.5M candidates, while the
-    // array spelling is two doc_id hash joins of the candidate table. At
-    // 100 TB the doc-array table is just the corpus re-keyed — linear,
-    // hash-partitioned, never collected.
-    val docSets = sh.groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("sh"))).as("ss"))
-    val inter = cands
-      .join(docSets.select(col("doc_id").as("doc_a"), col("ss").as("sa")), Seq("doc_a"))
-      .join(docSets.select(col("doc_id").as("doc_b"), col("ss").as("sb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"), col("na"), col("nb"),
-        size(array_intersect(col("sa"), col("sb"))).cast("long").as("shared"))
-    inter
+  def ngramJaccardPrefix(sh: DataFrame, threshold: Double): DataFrame =
+    SetSimJoin(sh, SetSimJoin.jaccard(threshold))
       .select(col("doc_a"), col("doc_b"), col("shared"),
         (col("shared").cast("double") /
           (col("na") + col("nb") - col("shared"))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-  }
 
   // ── PartEnum exact Jaccard (closed-vocabulary-proof candidates) ────────
   // The prefix filter's candidate volume is Σ df² over prefix shingles —
@@ -150,7 +81,7 @@ object DedupQueries {
   // so each pair is generated exactly once at band(n_small). Every part
   // index 0..p−1 emits a row (empty parts hash the empty string —
   // dropping them would lose pairs whose difference-free part is empty
-  // on both sides). Verification is the shared array_intersect plan.
+  // on both sides). Verification is SetSimJoin.verify, the prefix join's.
   // Same output, row-for-row, as q_ngram_jaccard (spec-asserted); the
   // oracle replays the same naive join over the same sample.
   //
@@ -277,18 +208,11 @@ object DedupQueries {
       .filter((col("na") < col("nb") ||
         (col("na") === col("nb") && col("id_a") < col("id_b"))) &&
         lit(num) * col("nb") <= lit(den) * col("na"))
-      .select(col("id_a"), col("id_b"), col("na"), col("nb"))
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("na"), col("nb"))
       .distinct()
-    val docSets = sh.groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("sh"))).as("ss"))
-    cands
-      .join(docSets.select(col("doc_id").as("id_a"), col("ss").as("sa")), Seq("id_a"))
-      .join(docSets.select(col("doc_id").as("id_b"), col("ss").as("sb")), Seq("id_b"))
-      .select(least(col("id_a"), col("id_b")).as("doc_a"),
-        greatest(col("id_a"), col("id_b")).as("doc_b"),
-        col("na"), col("nb"),
-        size(array_intersect(col("sa"), col("sb"))).cast("long").as("shared"))
-      .select(col("doc_a"), col("doc_b"), col("shared"),
+    SetSimJoin.verify(sh, cands)
+      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
+        greatest(col("doc_a"), col("doc_b")).as("doc_b"), col("shared"),
         (col("shared").cast("double") /
           (col("na") + col("nb") - col("shared"))).as("jaccard"))
       .filter(col("jaccard") >= num.toDouble / den)
@@ -303,87 +227,22 @@ object DedupQueries {
   // fully quoted inside a much longer one scores J = |A|/|B| ≈ 0 but
   // containment |A∩B|/|A| ≈ 1 — the quote/boilerplate/excerpt duplicates
   // a curation pipeline must still catch (this is why dedup surveys track
-  // containment separately from resemblance, Broder 1997). Same exact-
-  // verification architecture as qNgramJaccard, with the ONE-SIDED prefix
-  // bound: containment ≥ t of A in B forces a shared shingle inside A's
-  // p = n − ceil(t·n) + 1 rarest shingles, and only n_b ≥ ceil(t·n_a)
-  // survives (shared ≤ n_b) — both filters LOSSLESS, so the result set
-  // equals the naive ordered-pair join (spec-asserted) and the oracle
-  // replays the naive spelling. The candidate side joins A-prefixes to
-  // the full inverted index (no size-ratio symmetric filter exists for
-  // containment — rarity of prefix shingles is what bounds the volume).
+  // containment separately from resemblance, Broder 1997). Same exact
+  // set-similarity join as qNgramJaccard with the one-sided containment
+  // measure (SetSimJoin.containment), so the result set equals the naive
+  // ordered-pair join (spec-asserted) and the oracle replays the naive
+  // spelling.
   private val ContainT = 0.9
 
   def qContainment(s: SparkSession, d: String): DataFrame =
     containmentPrefix(shingleIndex(s, d), threshold = ContainT)
 
-  def containmentPrefix(sh: DataFrame, threshold: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // same note as ngramJaccardPrefix: the eager-materialization variant
-    // measured a clear regression (1.6 -> 3.0 s at sf0.1) — kept lazy
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val df = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-    val byRarity = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("sh"))
-    val tDec = new java.math.BigDecimal(threshold.toString)
-    val ranked = sh.join(df, "sh")
-      .withColumn("rk", row_number().over(byRarity))
-      .join(sizes, "doc_id")
-      .withColumn("p", (col("n") - ceil(lit(tDec) * col("n")) + 1).cast("int"))
-    val prefix = ranked.filter(col("rk") <= col("p"))
-      .select(col("doc_id"), col("sh"), col("n"), col("rk"))
-    // the full inverted index, but carrying each shingle's rank in the
-    // SAME global canonical order — what the positional filter needs
-    val indexed = ranked
-      .select(col("doc_id").as("doc_b"), col("sh"),
-        col("n").as("nb"), col("rk").as("rkb"))
-    // positional filter (PPJoin, one-sided): the FIRST shared shingle at
-    // ranks (i in A, j in B) bounds overlap ≤ 1 + min(na−i, nb−j), and
-    // containment ≥ t needs overlap ≥ ceil(t·na) — prunes pairs whose
-    // match positions cannot carry the bound, LOSSLESSLY (the
-    // prefix==naive equivalence spec covers it). Without it the
-    // prefix × full-index join floods on closed-vocabulary corpora
-    // (85 s at sf1; the b-side match can sit anywhere in B, so no
-    // size-ratio filter exists for containment — position is the only
-    // lever).
-    val cands = prefix.join(indexed, Seq("sh"))
-      .filter(col("doc_id") =!= col("doc_b") &&
-        col("nb") >= ceil(lit(tDec) * col("n")) &&
-        lit(1) + least(col("n") - col("rk"), col("nb") - col("rkb")) >=
-          ceil(lit(tDec) * col("n")))
-      .select(col("doc_id").as("doc_a"), col("doc_b"), col("n").as("na"))
-      .distinct()
-    // same array-based exact verification as ngramJaccardPrefix (see the
-    // rationale there): one array_intersect per candidate, no second
-    // inverted-index fan-out
-    val docSets = sh.groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("sh"))).as("ss"))
-    val inter = cands
-      .join(docSets.select(col("doc_id").as("doc_a"), col("ss").as("sa")), Seq("doc_a"))
-      .join(docSets.select(col("doc_id").as("doc_b"), col("ss").as("sb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"), col("na"),
-        size(array_intersect(col("sa"), col("sb"))).cast("long").as("shared"))
-    inter
+  def containmentPrefix(sh: DataFrame, threshold: Double): DataFrame =
+    SetSimJoin(sh, SetSimJoin.containment(threshold))
       .filter(col("shared").cast("double") / col("na") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("shared"),
         round(col("shared").cast("double") / col("na"), 6)
           .as("containment_r"))
-  }
-
-  /** Naive ordered-pair spelling — the reference for the equivalence
-    * spec and the shape the oracle replays. */
-  private[graft] def containmentNaive(sh: DataFrame, threshold: Double): DataFrame = {
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val shared = sh.as("a")
-      .join(sh.as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") =!= col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("shared"))
-    shared.join(sizes.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .filter(col("shared").cast("double") / col("sa.n") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("shared"),
-        round(col("shared").cast("double") / col("sa.n"), 6)
-          .as("containment_r"))
-  }
 
   lazy val qContainmentSql: String =
     s"WITH toks AS (SELECT doc_id, $sqlToks AS t FROM documents), " +
@@ -396,23 +255,6 @@ object DedupQueries {
       "round(CAST(shared AS DOUBLE) / sa.n, 6) AS containment_r " +
       "FROM shared JOIN sizes sa ON doc_a = sa.doc_id " +
       s"WHERE CAST(shared AS DOUBLE) / sa.n >= $ContainT"
-
-  /** The naive all-shingles spelling, kept as the reference
-    * implementation for the prefix-filter equivalence spec. */
-  private[graft] def ngramJaccardNaive(sh: DataFrame, threshold: Double): DataFrame = {
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val shared = sh.as("a")
-      .join(sh.as("b"), col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("shared"))
-    shared
-      .join(sizes.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .select(col("doc_a"), col("doc_b"), col("shared"),
-        (col("shared").cast("double") /
-          (col("sa.n") + col("sb.n") - col("shared"))).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
 
   private val sqlToks = // single shared oracle tokenizer spelling
     graft.functions.TextFunctions.sqlTokens
@@ -555,68 +397,26 @@ object DedupQueries {
   // unrelated docs in a small vocabulary and quadratically flood the
   // self-join — 12-char grams keep matches meaningful (guarantee: any
   // shared run of >= 19 normalized chars still yields a shared print).
-  // Candidate generation follows the prefix-filter architecture the
-  // Jaccard/containment ops use, adapted to the min-denominator
-  // threshold: overlap >= ceil(n_small/2) forces a shared print among
-  // the SMALLER doc's p = n_small - ceil(n_small/2) + 1 rarest prints
-  // (global df-order), so the anchor side joins only those prints to the
-  // full index, PPJoin's positional bound 1 + min(na-i, nb-j) >= alpha
-  // prunes position-incompatible matches losslessly, and the true shared
-  // count comes from one array_intersect per surviving pair. The naive
-  // print self-join measured 163 s at sf1 (closed-vocabulary fixture:
-  // print df grows with the corpus, so matched rows grow quadratically);
-  // this plan is output-bound. Anchor = (n, doc_id)-lexicographic
-  // smaller side, so each unordered pair generates from exactly one
-  // anchor and the emitted (doc_a < doc_b by id) rows match the naive
-  // spelling row-for-row (spec-asserted).
+  // Pairs come from the exact set-similarity join with the overlap
+  // measure (SetSimJoin.overlap: the smaller doc's prefix anchors). The
+  // naive print self-join measured 163 s at sf1 (closed-vocabulary
+  // fixture: print df grows with the corpus, so matched rows grow
+  // quadratically); this plan is output-bound, and its (doc_a < doc_b by
+  // id) rows match the naive spelling row-for-row (spec-asserted).
   def qWinnowOverlap(s: SparkSession, d: String): DataFrame = {
     val fp = Tables.documents(s, d)
       .select(col("doc_id"), explode(Winnow.winnow(col("text"), 12, 8)).as("h"))
-    winnowOverlapPrefix(fp, num = 1, den = 2)
+    winnowOverlapPrefix(fp, threshold = 0.5)
   }
 
-  /** Exact threshold overlap (shared >= ceil(num·min(na,nb)/den)) over a
-    * (doc_id, h) fingerprint table — prefix + positional candidates from
-    * the smaller side, array_intersect verification. */
-  private[graft] def winnowOverlapPrefix(fp: DataFrame, num: Int, den: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val df = fp.groupBy(col("h")).agg(count(lit(1)).as("df"))
-    val sizes = fp.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val byRarity = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("h"))
-    val ranked = fp.join(df, "h")
-      .withColumn("rk", row_number().over(byRarity))
-      .join(sizes, "doc_id")
-    // alpha(ns) = ceil(num·ns/den) in exact integer arithmetic
-    def alphaOf(n: String) = s"(($num * $n + ${den - 1}) div $den)"
-    val prefix = ranked
-      .filter(expr(s"rk <= n - ${alphaOf("n")} + 1"))
-      .select(col("doc_id").as("id_s"), col("h"),
-        col("n").as("ns"), col("rk").as("rks"))
-    val indexed = ranked.select(col("doc_id").as("id_l"), col("h"),
-      col("n").as("nl"), col("rk").as("rkl"))
-    val cands = prefix.join(indexed, Seq("h"))
-      // anchor strictly (n, doc_id)-smaller: one generator per pair
-      .filter(col("ns") < col("nl") ||
-        (col("ns") === col("nl") && col("id_s") < col("id_l")))
-      // positional: the first shared print bounds the total overlap
-      .filter(lit(1) + least(col("ns") - col("rks"), col("nl") - col("rkl")) >=
-        expr(alphaOf("ns")))
-      .select(col("id_s"), col("id_l"), col("ns"))
-      .distinct()
-    val docSets = fp.groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("h"))).as("hs"))
-    cands
-      .join(docSets.select(col("doc_id").as("id_s"), col("hs").as("ha")), Seq("id_s"))
-      .join(docSets.select(col("doc_id").as("id_l"), col("hs").as("hb")), Seq("id_l"))
-      .select(
-        least(col("id_s"), col("id_l")).as("doc_a"),
-        greatest(col("id_s"), col("id_l")).as("doc_b"),
-        size(array_intersect(col("ha"), col("hb"))).cast("long").as("shared"),
-        col("ns"))
-      .select(col("doc_a"), col("doc_b"), col("shared"),
-        (col("shared").cast("double") / col("ns")).as("overlap"))
-      .filter(col("overlap") >= num.toDouble / den)
-  }
+  /** Exact threshold overlap (shared / min(na, nb) >= threshold) over a
+    * (doc_id, h) fingerprint table. */
+  private[graft] def winnowOverlapPrefix(fp: DataFrame, threshold: Double): DataFrame =
+    SetSimJoin(fp, SetSimJoin.overlap(threshold))
+      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
+        greatest(col("doc_a"), col("doc_b")).as("doc_b"), col("shared"),
+        (col("shared").cast("double") / col("na")).as("overlap"))
+      .filter(col("overlap") >= threshold)
 
   // ── DuckDB oracles for the approximate family ──────────────────────────
   // Every hash bit above derives from md5 (Md5Bits), so DuckDB recomputes
@@ -1201,30 +1001,21 @@ object DedupQueries {
   // the pairs LSH actually surfaces? The question every banding
   // configuration decision rests on. Candidates come from the proven
   // lshPairs machinery with NO similarity floor (every banded collision);
-  // exact Jaccard is counted only for those candidates (the same
-  // candidates-only exact verification the PPJoin path uses). The
+  // exact Jaccard is counted only for those candidates, by the array
+  // verifier of the exact set-similarity join (SetSimJoin.verify). The
   // over/under/equal split compares the two rationals by integer
   // cross-multiplication — sign(agree·u − 32·i) — so no float comparison
   // decides a count; error magnitudes micro-quantize before the sum.
   def qMinhashError(s: SparkSession, d: String): DataFrame = {
-    val cands = lshPairs(Tables.documents(s, d),
-      numHashes = 32, bands = 8, threshold = 0.0)
     val sh = shingleIndex(s, d)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = cands.select(col("doc_a"), col("doc_b"))
-      .join(sh.select(col("doc_id").as("doc_a"), col("sh")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("sh")),
-        Seq("doc_b", "sh"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("i"))
-    val stats = cands
-      .join(inter, Seq("doc_a", "doc_b"), "left")
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")),
-        Seq("doc_a"))
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")),
-        Seq("doc_b"))
-      .select(col("est_jaccard"),
-        coalesce(col("i"), lit(0L)).as("i"),
-        (col("na") + col("nb") - coalesce(col("i"), lit(0L))).as("u"),
+    val cands = lshPairs(Tables.documents(s, d),
+        numHashes = 32, bands = 8, threshold = 0.0)
+      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("na")), Seq("doc_a"))
+      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb")), Seq("doc_b"))
+    val stats = SetSimJoin.verify(sh, cands)
+      .select(col("est_jaccard"), col("shared").as("i"),
+        (col("na") + col("nb") - col("shared")).as("u"),
         round(col("est_jaccard") * 32, 0).cast("long").as("agree"))
       .withColumn("err_u",
         round(abs(col("est_jaccard") -

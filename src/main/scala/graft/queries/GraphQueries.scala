@@ -580,7 +580,7 @@ object GraphQueries {
     e.select(col("src").as("a")).unionAll(e.select(col("dst").as("a")))
       .groupBy(col("a")).agg(count(lit(1)).as("deg"))
       .orderBy(col("deg").desc, col("a").asc).limit(1)
-      .head.getLong(0)
+      .head().getLong(0)
 
   // a def, not a val: qSsspSql initializes before this point in the
   // object body and a val would interpolate as null

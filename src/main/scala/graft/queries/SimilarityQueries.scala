@@ -1273,7 +1273,7 @@ object SimilarityQueries {
         .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
     }
     val selected = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-    val remaining = scala.collection.mutable.ArrayBuffer(pool: _*)
+    val remaining = scala.collection.mutable.ArrayBuffer.from(pool)
     while (selected.length < MmrK && remaining.nonEmpty) {
       val scored = remaining.map { c =>
         val redundancy =

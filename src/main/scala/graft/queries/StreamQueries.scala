@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 
+import graft.sources.LocalFs
 import graft.streaming.EventStreams
 
 /** Oracle-checked Structured Streaming: the SAME streaming plans the
@@ -83,15 +84,7 @@ object StreamQueries {
       q.awaitTermination()
     } finally {
       if (q != null) q.stop()
-      deleteRecursively(ckpt)
-    }
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverseIterator
-        .foreach(f => java.nio.file.Files.deleteIfExists(f))
+      LocalFs.deleteRecursively(ckpt)
     }
   }
 

@@ -89,3 +89,20 @@ class ForkFreeRawLocalFs(conf: Configuration) extends DelegateToFileSystem(
   * (URI, Configuration) constructor. */
 class ForkFreeLocalFs(uri: URI, conf: Configuration)
     extends ChecksumFs(new ForkFreeRawLocalFs(conf))
+
+/** Plain local-directory helpers for the engine's own scratch dirs
+  * (streaming checkpoints, fitted-artifact staging, bench inputs). */
+object LocalFs {
+
+  /** Delete `p` and everything under it, children first; a missing `p` is
+    * a no-op. The walk's directory stream is closed on every path. */
+  def deleteRecursively(p: java.nio.file.Path): Unit =
+    if (Files.exists(p)) {
+      val s = Files.walk(p)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path])
+          .iterator.asScala.foreach(Files.deleteIfExists(_))
+      } finally s.close()
+    }
+}

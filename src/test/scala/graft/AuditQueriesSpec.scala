@@ -38,23 +38,23 @@ class AuditQueriesSpec extends AnyFunSuite {
   }
 
   test("sketch audits report coherent error statistics") {
-    val mh = queries.DedupQueries.qMinhashError(spark, sf).head
+    val mh = queries.DedupQueries.qMinhashError(spark, sf).head()
     assert(mh.getLong(0) > 0, "minhash audit saw no pairs")
     assert(mh.getLong(1) + mh.getLong(2) + mh.getLong(3) === mh.getLong(0),
       "over/under/equal must partition the pairs")
     assert(mh.getDouble(4) <= mh.getDouble(5) + 1e-12, "mean > max")
 
-    val cms = queries.SketchQueries.qCmsError(spark, sf).head
+    val cms = queries.SketchQueries.qCmsError(spark, sf).head()
     assert(cms.getLong(1) <= cms.getLong(0), "exact hits exceed tokens")
     assert(cms.getLong(2) >= 0L, "CMS must never underestimate")
     assert(cms.getDouble(4) >= 0.0, "mean overestimate negative")
 
-    val hll = queries.DedupQueries.qHllError(spark, sf).head
+    val hll = queries.DedupQueries.qHllError(spark, sf).head()
     assert(hll.getLong(0) > 0L)
     // m=128 standard error ~9%; 4 sigma guard
     assert(math.abs(hll.getDouble(2)) < 0.4, s"HLL error implausible: $hll")
 
-    val srp = queries.SimilarityQueries.qSrpError(spark, sf).head
+    val srp = queries.SimilarityQueries.qSrpError(spark, sf).head()
     assert(srp.getLong(0) > 0)
     assert(srp.getDouble(1) <= srp.getDouble(2) + 1e-12, "mean > max")
     assert(math.abs(srp.getDouble(3)) <= srp.getDouble(1) + 1e-12,
@@ -62,12 +62,12 @@ class AuditQueriesSpec extends AnyFunSuite {
   }
 
   test("IVF recall and CF hit-rate stay inside their counting bounds") {
-    val r = queries.SimilarityQueries.qIvfRecall(spark, sf).head
+    val r = queries.SimilarityQueries.qIvfRecall(spark, sf).head()
     assert(r.getLong(0) > 0)
     assert(r.getDouble(2) >= 0.0 && r.getDouble(2) <= 1.0)
     assert(r.getDouble(3) >= 0.0 && r.getDouble(3) <= r.getDouble(2) + 1e-12)
 
-    val h = queries.GraphQueries.qCfHitrate(spark, sf).head
+    val h = queries.GraphQueries.qCfHitrate(spark, sf).head()
     val (nTest, nScored, nHits) = (h.getLong(0), h.getLong(1), h.getLong(2))
     assert(nScored <= nTest, "scored orders cannot exceed test orders")
     assert(nHits <= nScored, "a hit requires a scored order")

@@ -80,7 +80,7 @@ class DedupSpec extends AnyFunSuite {
       val fast = DedupQueries.ngramJaccardPrefix(sh, t)
         .select($"doc_a", $"doc_b", $"shared").as[(Long, Long, Long)]
         .collect().toSet
-      val naive = DedupQueries.ngramJaccardNaive(sh, t)
+      val naive = SetSimNaive.jaccard(sh, t)
         .select($"doc_a", $"doc_b", $"shared").as[(Long, Long, Long)]
         .collect().toSet
       assert(fast === naive, s"threshold $t")
@@ -95,7 +95,7 @@ class DedupSpec extends AnyFunSuite {
     val pe = DedupQueries.jaccardPartEnum(sh, num = 4, den = 5)
       .select($"doc_a", $"doc_b", $"shared").as[(Long, Long, Long)]
       .collect().toSet
-    val naive = DedupQueries.ngramJaccardNaive(sh, 0.8)
+    val naive = SetSimNaive.jaccard(sh, 0.8)
       .select($"doc_a", $"doc_b", $"shared").as[(Long, Long, Long)]
       .collect().toSet
     assert(pe === naive)
@@ -181,17 +181,10 @@ class DedupSpec extends AnyFunSuite {
     val fp = Tables.documents(spark, sf)
       .select($"doc_id",
         explode(graft.functions.Winnow.winnow($"text", 12, 8)).as("h"))
-    val sizes = fp.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val naive = fp.as("a")
-      .join(fp.as("b"), col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("shared"))
-      .join(sizes.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .filter(col("shared").cast("double") / least(col("sa.n"), col("sb.n")) >= 0.5)
+    val naive = SetSimNaive.overlap(fp, 0.5)
       .select($"doc_a", $"doc_b", $"shared").as[(Long, Long, Long)]
       .collect().toSet
-    val fast = DedupQueries.winnowOverlapPrefix(fp, num = 1, den = 2)
+    val fast = DedupQueries.winnowOverlapPrefix(fp, threshold = 0.5)
       .select($"doc_a", $"doc_b", $"shared").as[(Long, Long, Long)]
       .collect().toSet
     assert(fast === naive)

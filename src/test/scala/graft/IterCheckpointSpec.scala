@@ -86,6 +86,29 @@ class IterCheckpointSpec extends AnyFunSuite {
     }
   }
 
+  test("set, release threshold 0: the keyed frame's scratch is a reliable checkpoint, rows unchanged") {
+    val input = edges.filter(col("src") > 0L)
+    val expected = input.as[(Long, Long)].collect().sorted
+    val dir = java.nio.file.Files.createTempDirectory("graft_iter_keyed")
+    spark.conf.set(IterCheckpoint.ConfKey, dir.toString)
+    spark.conf.set(IterCheckpoint.ReleaseBytesKey, "0")
+    try {
+      val keyed = IterCheckpoint.keyedForReuse(input, col("src"))
+      val scratch = keyed.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+      }
+      assert(scratch.size === 1)
+      assert(scratch.head.getCheckpointFile.exists(_.contains(dir.toString)),
+        s"scratch checkpoint ${scratch.head.getCheckpointFile} is not under $dir")
+      assert(keyed.as[(Long, Long)].collect().sorted === expected)
+      keyed.unpersist()
+    } finally {
+      spark.conf.unset(IterCheckpoint.ConfKey)
+      spark.conf.unset(IterCheckpoint.ReleaseBytesKey)
+      graft.sources.LocalFs.deleteRecursively(dir)
+    }
+  }
+
   test("components and coreEdges finish a small graph locally: at most 2 jobs in the builder") {
     val r = new scala.util.Random(3)
     val graph = Seq.fill(120)((r.nextInt(60).toLong, r.nextInt(60).toLong)).toDF("src", "dst")

@@ -292,7 +292,7 @@ class MiningSpec extends AnyFunSuite {
       explode(graft.functions.Shingles.shingles(col("text"), 3)).as("sh"))
     val fast = DedupQueries.containmentPrefix(sh, 0.9).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val naive = DedupQueries.containmentNaive(sh, 0.9).collect()
+    val naive = SetSimNaive.containment(sh, 0.9).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(fast === naive)
   }

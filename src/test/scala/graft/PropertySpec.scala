@@ -158,7 +158,7 @@ class PropertySpec extends AnyFunSuite {
     // rounds; caps 0-2 stop short of the fixed point
     val ids = (0 until 40).map(i => 100L + (i * 17) % 41)
     val chain = ids.zip(ids.tail).toDF("src", "dst")
-    val intChain = chain.select(chain.columns.map(c => chain(c).cast("int")): _*)
+    val intChain = chain.select(chain.columns.toSeq.map(c => chain(c).cast("int")): _*)
     for (cap <- 0 to 2) {
       val got = bothPaths(ConnectedComponents.components(chain, maxIterations = cap))
       assert(got.map(_._1).toSet === ids.toSet)
@@ -182,10 +182,39 @@ class PropertySpec extends AnyFunSuite {
         val fast = queries.DedupQueries.ngramJaccardPrefix(sh, t)
           .select($"doc_a", $"doc_b", $"shared").as[(Long, Long, Long)]
           .collect().toSet
-        val naive = queries.DedupQueries.ngramJaccardNaive(sh, t)
+        val naive = SetSimNaive.jaccard(sh, t)
           .select($"doc_a", $"doc_b", $"shared").as[(Long, Long, Long)]
           .collect().toSet
         assert(fast === naive, s"threshold $t")
+      }
+    }
+  }
+
+  test("jaccard, containment and overlap joins equal their naive references on random token docs (4 trials)") {
+    import queries.DedupQueries
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, explode}
+    type Join = (DataFrame, Double) => DataFrame
+    val measures = Seq[(String, Join, Join)](
+      ("jaccard", DedupQueries.ngramJaccardPrefix, SetSimNaive.jaccard),
+      ("containment", DedupQueries.containmentPrefix, SetSimNaive.containment),
+      ("overlap", DedupQueries.winnowOverlapPrefix, SetSimNaive.overlap))
+    val r = new Random(13)
+    for (trial <- 1 to 4) {
+      // a small vocabulary makes every token frequent (the closed-vocabulary
+      // regime where prefixes are not rare); sizes vary 3x to exercise the
+      // size rules and the one-sided measures
+      val vocab = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta")
+      val docs = (0L until (5 + r.nextInt(6)).toLong).map { i =>
+        (i, List.fill(4 + r.nextInt(30))(vocab(r.nextInt(vocab.size))).mkString(" "))
+      }.toDF("doc_id", "text")
+      val sh = docs.select(col("doc_id"),
+        explode(graft.functions.Shingles.shingles(col("text"), 3)).as("sh"))
+        .localCheckpoint()
+      for ((name, fast, naive) <- measures; t <- Seq(0.3, 0.6, 0.9)) {
+        def rows(df: DataFrame) =
+          df.select($"doc_a", $"doc_b", $"shared").as[(Long, Long, Long)].collect().toSet
+        assert(rows(fast(sh, t)) === rows(naive(sh, t)), s"$name at $t, trial $trial")
       }
     }
   }
