@@ -71,6 +71,15 @@ private[graft] object Fixpoint {
     Result(state, rounds, converged || probe.isEmpty)
   }
 
+  /** The DuckDB oracle's spelling of a fixed-cap loop: `n` rounds as a
+    * chain of materialized CTEs `<prefix>1 … <prefix>n`, round `i` being
+    * `iter(<prefix>{i−1}, i)`; the caller defines `<prefix>0`.
+    * AS MATERIALIZED: a round references its predecessor more than once,
+    * and DuckDB inlines plain CTEs per reference — 20 rounds would
+    * otherwise expand the plan 2^20-fold. */
+  def unroll(prefix: String, n: Int)(iter: (String, Int) => String): String =
+    (1 to n).map(i => s"$prefix$i AS MATERIALIZED (${iter(s"$prefix${i - 1}", i)})").mkString(", ")
+
   /** The iterative family's warning for a loop that hit its cap before its
     * fixed point, logged under `owner`'s logger (owner is the operator
     * object, so the logger name is the operator's class). */

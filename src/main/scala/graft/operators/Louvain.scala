@@ -244,10 +244,9 @@ object Louvain {
       s"LEFT JOIN (SELECT a AS node, sum(w) AS d FROM $sym GROUP BY 1) d USING (node) " +
       s"LEFT JOIN (SELECT src AS node, sum(w) AS sw FROM $we WHERE src = dst GROUP BY 1) sw USING (node))"
 
-  private def roundSql(p: String, t: Int, r: Int, sym: String, kk: String,
-      m2: String): (String, String) = {
-    val (vol, cand, best, next) = (s"${p}vol$t", s"${p}cand$t", s"${p}best$t", s"${p}l${t + 1}")
-    val prev = s"${p}l$t"
+  private def roundSql(p: String, r: Int, sym: String, kk: String, m2: String): (String, String) = {
+    val (vol, cand, best, next) = (s"${p}vol$r", s"${p}cand$r", s"${p}best$r", s"${p}l${r + 1}")
+    val prev = s"${p}l$r"
     val sql =
       s"$vol AS MATERIALIZED (SELECT comm, sum(k) AS vol FROM $prev JOIN $kk USING (node) GROUP BY 1), " +
       s"$cand AS MATERIALIZED (SELECT node, comm, sum(w) AS k_uc FROM (" +
@@ -265,95 +264,62 @@ object Louvain {
     (sql, next)
   }
 
+  /** One level of the replay over the weighted CTE `we`: its `sym<level>`
+    * and `kk<level>` (level 1 also defines the invariant volume `m2`),
+    * singleton communities, then `rounds` local-move rounds, each CTE
+    * followed by ", ". Returns the CTEs and the last (node, comm) CTE. */
+  private def levelSql(level: Int, we: String, rounds: Int): (String, String) = {
+    val (p, sym, kk) = (if (level == 1) "a" else "b", s"sym$level", s"kk$level")
+    val m2 = if (level == 1) s"m2 AS MATERIALIZED (SELECT sum(k) AS m2 FROM $kk), " else ""
+    val moves = (0 until rounds).map(roundSql(p, _, sym, kk, "m2"))
+    (symSql(we, sym) + ", " + kSql(we, sym, kk) + ", " + m2 +
+      s"${p}l0 AS MATERIALIZED (SELECT node, node AS comm FROM $kk), " +
+      moves.map(_._1 + ", ").mkString, moves.lastOption.fold(s"${p}l0")(_._2))
+  }
+
+  /** The level-2 graph `we2`: [[aggregateGraph]] of `we` under `lvl1`. */
+  private def aggregateSql(lvl1: String): String =
+    s"we2 AS MATERIALIZED (SELECT least(la.comm, lb.comm) AS src, " +
+      s"greatest(la.comm, lb.comm) AS dst, sum(w) AS w FROM we e " +
+      s"JOIN $lvl1 la ON la.node = e.src JOIN $lvl1 lb ON lb.node = e.dst GROUP BY 1, 2), "
+
   /** The full SQL replay: `we` must already be defined; appends CTEs and
     * returns the name of the final (node, comm) CTE. */
   def clusterSql(rounds: Int): (String, String) = {
-    val sb = new StringBuilder
-    sb ++= symSql("we", "sym1") + ", " + kSql("we", "sym1", "kk1") + ", "
-    sb ++= "m2 AS MATERIALIZED (SELECT sum(k) AS m2 FROM kk1), "
-    sb ++= "al0 AS MATERIALIZED (SELECT node, node AS comm FROM kk1), "
-    var last = "al0"
-    for (r <- 0 until rounds) {
-      val (sql, next) = roundSql("a", r, r, "sym1", "kk1", "m2")
-      sb ++= sql + ", "
-      last = next
-    }
-    val lvl1 = last
-    sb ++= s"we2 AS MATERIALIZED (SELECT least(la.comm, lb.comm) AS src, " +
-      s"greatest(la.comm, lb.comm) AS dst, sum(w) AS w FROM we e " +
-      s"JOIN $lvl1 la ON la.node = e.src JOIN $lvl1 lb ON lb.node = e.dst GROUP BY 1, 2), "
-    sb ++= symSql("we2", "sym2") + ", " + kSql("we2", "sym2", "kk2") + ", "
-    sb ++= "bl0 AS MATERIALIZED (SELECT node, node AS comm FROM kk2), "
-    last = "bl0"
-    for (r <- 0 until rounds) {
-      val (sql, next) = roundSql("b", r, r, "sym2", "kk2", "m2")
-      sb ++= sql + ", "
-      last = next
-    }
-    sb ++= s"final AS (SELECT l1.node, l2.comm FROM $lvl1 l1 " +
-      s"JOIN $last l2 ON l2.node = l1.comm)"
-    (sb.toString, "final")
+    val (l1Sql, lvl1) = levelSql(1, "we", rounds)
+    val (l2Sql, lvl2) = levelSql(2, "we2", rounds)
+    (l1Sql + aggregateSql(lvl1) + l2Sql +
+      s"final AS (SELECT l1.node, l2.comm FROM $lvl1 l1 " +
+      s"JOIN $lvl2 l2 ON l2.node = l1.comm)", "final")
   }
 
   /** SQL replay of [[refine]]: intra-community edge filter, then
-    * `RefineRounds` unrolled rounds of the pointer-jumping CC update
-    * (neighbor-min prop + one-hop jump, exactly the engine's two joins
-    * per round; converged rounds are fixed points so the engine's early
-    * exit and this fixed unroll agree). `sym` must hold both directions
-    * of the non-self edges; emits `out(node, comm)`. */
-  def refineSql(p: String, sym: String, labels: String, out: String): String = {
-    val sb = new StringBuilder
-    sb ++= s"${p}isym AS MATERIALIZED (SELECT s.a, s.b FROM $sym s " +
+    * `RefineRounds` unrolled min-reach rounds
+    * ([[ConnectedComponents.minReachSql]]) from the same fused one-hop
+    * init. The replay jumps through each round's fresh hop, the engine
+    * through the previous round's labels; both only lower labels toward
+    * the component minimum, and converged rounds are fixed points, so the
+    * engine's early exit and this fixed unroll agree. `sym` must hold both
+    * directions of the non-self edges; emits `out(node, comm)`. */
+  def refineSql(p: String, sym: String, labels: String, out: String): String =
+    s"${p}isym AS MATERIALIZED (SELECT s.a, s.b FROM $sym s " +
       s"JOIN $labels la ON la.node = s.a JOIN $labels lb ON lb.node = s.b " +
-      "WHERE la.comm = lb.comm), "
-    sb ++= s"${p}cc0 AS MATERIALIZED (SELECT a AS node, least(a, min(b)) AS comp " +
-      s"FROM ${p}isym GROUP BY a), "
-    for (i <- 1 to RefineRounds) {
-      sb ++= s"${p}nm$i AS (SELECT s.a AS node, min(l.comp) AS ncomp " +
-        s"FROM ${p}isym s JOIN ${p}cc${i - 1} l ON l.node = s.b GROUP BY 1), "
-      sb ++= s"${p}pp$i AS MATERIALIZED (SELECT l.node, " +
-        s"least(l.comp, coalesce(n.ncomp, l.comp)) AS comp " +
-        s"FROM ${p}cc${i - 1} l LEFT JOIN ${p}nm$i n USING (node)), "
-      sb ++= s"${p}cc$i AS MATERIALIZED (SELECT p.node, " +
-        s"least(p.comp, coalesce(j.jcomp, p.comp)) AS comp " +
-        s"FROM ${p}pp$i p LEFT JOIN " +
-        s"(SELECT node AS comp, comp AS jcomp FROM ${p}pp$i) j USING (comp)), "
-    }
-    sb ++= s"$out AS MATERIALIZED (SELECT l.node, coalesce(c.comp, l.node) AS comm " +
+      "WHERE la.comm = lb.comm), " +
+      s"${p}cc0 AS MATERIALIZED (SELECT a AS node, least(a, min(b)) AS m " +
+      s"FROM ${p}isym GROUP BY a), " +
+      ConnectedComponents.minReachSql(s"${p}cc", s"${p}isym", "a", "b", RefineRounds) + ", " +
+      s"$out AS MATERIALIZED (SELECT l.node, coalesce(c.m, l.node) AS comm " +
       s"FROM $labels l LEFT JOIN ${p}cc$RefineRounds c USING (node))"
-    sb.toString
-  }
 
   /** The full Leiden replay: level-1 moves, refine, aggregate on the
     * REFINED partition, level-2 moves, project, final refine. Expects
     * `we`; emits the name of the final (node, comm) CTE. */
   def clusterLeidenSql(rounds: Int): (String, String) = {
-    val sb = new StringBuilder
-    sb ++= symSql("we", "sym1") + ", " + kSql("we", "sym1", "kk1") + ", "
-    sb ++= "m2 AS MATERIALIZED (SELECT sum(k) AS m2 FROM kk1), "
-    sb ++= "al0 AS MATERIALIZED (SELECT node, node AS comm FROM kk1), "
-    var last = "al0"
-    for (r <- 0 until rounds) {
-      val (sql, next) = roundSql("a", r, r, "sym1", "kk1", "m2")
-      sb ++= sql + ", "
-      last = next
-    }
-    sb ++= refineSql("ra", "sym1", last, "ral") + ", "
-    val lvl1 = "ral"
-    sb ++= s"we2 AS MATERIALIZED (SELECT least(la.comm, lb.comm) AS src, " +
-      s"greatest(la.comm, lb.comm) AS dst, sum(w) AS w FROM we e " +
-      s"JOIN $lvl1 la ON la.node = e.src JOIN $lvl1 lb ON lb.node = e.dst GROUP BY 1, 2), "
-    sb ++= symSql("we2", "sym2") + ", " + kSql("we2", "sym2", "kk2") + ", "
-    sb ++= "bl0 AS MATERIALIZED (SELECT node, node AS comm FROM kk2), "
-    last = "bl0"
-    for (r <- 0 until rounds) {
-      val (sql, next) = roundSql("b", r, r, "sym2", "kk2", "m2")
-      sb ++= sql + ", "
-      last = next
-    }
-    sb ++= s"mrg AS MATERIALIZED (SELECT l1.node, l2.comm FROM $lvl1 l1 " +
-      s"JOIN $last l2 ON l2.node = l1.comm), "
-    sb ++= refineSql("rb", "sym1", "mrg", "leidenfinal")
-    (sb.toString, "leidenfinal")
+    val (l1Sql, raw1) = levelSql(1, "we", rounds)
+    val (l2Sql, lvl2) = levelSql(2, "we2", rounds)
+    (l1Sql + refineSql("ra", "sym1", raw1, "ral") + ", " + aggregateSql("ral") + l2Sql +
+      s"mrg AS MATERIALIZED (SELECT l1.node, l2.comm FROM ral l1 " +
+      s"JOIN $lvl2 l2 ON l2.node = l1.comm), " +
+      refineSql("rb", "sym1", "mrg", "leidenfinal"), "leidenfinal")
   }
 }

@@ -28,11 +28,12 @@ private[graft] object SetSimJoin {
     * the probed token. Both sides carry `doc_id`, the set size `n` and the
     * token's rarity rank `rk`.
     *
-    * @param t            the threshold as an exact decimal: double t·n can
-    *                     land one ulp above an integer product and
-    *                     overshoot a ceiling, shrinking the prefix below
-    *                     the provable minimum or pruning a true boundary
-    *                     pair
+    * @param num          the numerator of the threshold t = num / pow,
+    *                     kept as an exact ratio: double t·n can land one
+    *                     ulp above an integer product and overshoot a
+    *                     ceiling, shrinking the prefix below the provable
+    *                     minimum or pruning a true boundary pair
+    * @param pow          its denominator, a power of ten
     * @param probesPrefix whether `b` is another prefix (symmetric
     *                     measures) or the full index
     * @param pair         which (a, b) rows may pair, so that each pair is
@@ -41,7 +42,7 @@ private[graft] object SetSimJoin {
     * @param overlap      the shared count the pair needs, which the
     *                     positional bound tests
     */
-  final case class Measure(t: java.math.BigDecimal, probesPrefix: Boolean,
+  final case class Measure(num: Long, pow: Long, probesPrefix: Boolean,
       pair: Column, size: Column, overlap: Column)
 
   private def exact(threshold: Double) = new java.math.BigDecimal(threshold.toString)
@@ -65,7 +66,7 @@ private[graft] object SetSimJoin {
     val t = exact(threshold)
     // required overlap α = ceil(t·(na+nb)/(1+t)) = ceil(num·(na+nb)/(10^s+num))
     val (num, pow) = ratio(t)
-    Measure(t, probesPrefix = true,
+    Measure(num, pow, probesPrefix = true,
       pair = a("doc_id") < b("doc_id"),
       size = least(a("n"), b("n")) >= lit(t) * greatest(a("n"), b("n")),
       overlap = ceilDiv(s"$num * (a.n + b.n)", pow + num))
@@ -78,10 +79,9 @@ private[graft] object SetSimJoin {
     * lever, and without it the prefix × full-index join floods on
     * closed-vocabulary corpora (85 s at sf1). */
   def containment(threshold: Double): Measure = {
-    val t = exact(threshold)
-    val (num, pow) = ratio(t)
+    val (num, pow) = ratio(exact(threshold))
     val need = ceilDiv(s"$num * a.n", pow) // ceil(t·na)
-    Measure(t, probesPrefix = false,
+    Measure(num, pow, probesPrefix = false,
       pair = a("doc_id") =!= b("doc_id"), size = b("n") >= need, overlap = need)
   }
 
@@ -90,9 +90,8 @@ private[graft] object SetSimJoin {
     * full index: each unordered pair is generated from exactly one anchor,
     * which already orders the sizes. */
   def overlap(threshold: Double): Measure = {
-    val t = exact(threshold)
-    val (num, pow) = ratio(t)
-    Measure(t, probesPrefix = false,
+    val (num, pow) = ratio(exact(threshold))
+    Measure(num, pow, probesPrefix = false,
       pair = a("n") < b("n") || (a("n") === b("n") && a("doc_id") < b("doc_id")),
       size = lit(true), overlap = ceilDiv(s"$num * a.n", pow))
   }
@@ -124,7 +123,7 @@ private[graft] object SetSimJoin {
     val ranked = sets.join(df, tok)
       .withColumn("rk", row_number().over(byRarity))
       .join(sizes, "doc_id")
-      .withColumn("p", (col("n") - ceil(lit(m.t) * col("n")) + 1).cast("int"))
+      .withColumn("p", (col("n") - ceilDiv(s"${m.num} * n", m.pow) + 1).cast("int"))
     val prefix = ranked.filter(col("rk") <= col("p"))
       .select(col("doc_id"), col(tok), col("n"), col("rk"))
     val probed =

@@ -33,63 +33,27 @@ import graft.operators.IterCheckpoint.IterCheckpointOps
   *
   * Scale shape: every fixpoint round is one key-shuffle join + one
   * aggregation over the (shrinking) edge list; per-node state is two
-  * BIGINT columns; `iterCheckpoint` truncates lineage per double-step and
+  * BIGINT columns; `iterCheckpoint` truncates lineage once per round and
   * an `Observation` metric rides the checkpoint job for convergence — no
   * driver-side materialization at any size (same discipline as
   * [[ConnectedComponents]] / [[PageRank]]).
   */
 object StronglyConnectedComponents {
 
-  /** Min-label-reach fixpoint with pointer jumping: for every node of
-    * `edges` (two-column src/dst), the min id reachable by following
-    * edges forward. Returns (node, m). */
+  /** For every node of `edges` (two-column src/dst), the min id reachable
+    * by following edges forward: [[ConnectedComponents.minReach]] over the
+    * edges keyed on the hop join's key. Returns (node, m). */
   private def minReach(edges: DataFrame, maxRounds: Int): DataFrame = {
     // hash-partitioned by the hop-join key once — every fixpoint round's
     // edge join then reuses this layout and only the V-sized label side
     // shuffles (guide §2.4)
     val e = edges.toDF("src", "dst")
       .transform(IterCheckpoint.keyedForReuse(_, col("dst")))
-    // init fused with round one: F0(v) = min(v, out-neighbors) — labels
-    // start at one-hop reach; isolated-as-source nodes (dst-only) get
-    // their own id via the full outer union below
-    val init = e.groupBy(col("src"))
-      .agg(least(col("src"), min(col("dst"))).as("m"))
-      .withColumnRenamed("src", "node")
+    // CC's fused one-hop init, plus the dst-only nodes at their own id
+    val init = ConnectedComponents.initLabels(e)
       .union(e.select(col("dst").as("node"), col("dst").as("m")))
       .groupBy(col("node")).agg(min(col("m")).as("m"))
-      .iterCheckpoint()
-    val changed = Fixpoint.Probe(
-      Seq(sum(when(col("m") =!= col("prev"), 1L).otherwise(0L)).as("changed")),
-      (_, cur) => cur.getAs[Long]("changed") == 0L)
-    val run = Fixpoint.run(init, maxRounds, 1, Some(changed)) { (st, _) =>
-      val labels = st.select(col("node"), col("m"))
-      // one hop: m'(v) = min(m(v), m(out-neighbors))
-      val hop = e.join(labels.withColumnRenamed("node", "dst"), "dst")
-        .groupBy(col("src").as("node")).agg(min(col("m")).as("hm"))
-      val m1 = labels.join(hop, Seq("node"), "left")
-        .select(col("node"),
-          least(col("m"), coalesce(col("hm"), col("m"))).as("m"),
-          col("m").as("prev"))
-      // pointer jump THROUGH THE PREVIOUS ROUND'S CHECKPOINTED LABELS:
-      // m := min(m1, labels(m1)). labels(x) is reachable from x, so the
-      // jump stays sound; reading the jump side from the materialized
-      // frame (not from m1 itself) keeps the whole round ONE action with
-      // ONE checkpoint — the previous spelling checkpointed m1 first
-      // because self-joining the un-materialized aggregation re-ran the
-      // hop on both sides (the CC +31% lazy-respell measurement), paying
-      // two driver actions per round. Convergence still detects hop-
-      // stability (changed counts the full round's movement vs the old
-      // labels), and a hop-stable labeling IS the min-reach fixpoint —
-      // the jump is only an accelerator — so results are unchanged; the
-      // stale-by-one jump can only add rounds (+2 total across the whole
-      // query at sf0.1, 21→23 per plans/r18/q_scc_{before,after}.txt,
-      // against the 2× per-round action cut; whole-query −19% A/B).
-      val jump = labels.select(col("m").as("jm"), col("node").as("m"))
-      m1.join(jump, Seq("m"), "left")
-        .select(col("node"),
-          least(col("m"), coalesce(col("jm"), col("m"))).as("m"),
-          col("prev"))
-    }
+    val run = ConnectedComponents.minReach(e, init, maxRounds)
     e.unpersist(false)
     if (!run.converged)
       Fixpoint.warnCapHit(this, s"scc min-reach did not converge in $maxRounds rounds; labels partial")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.{Md5Bits, Shingles, SimHash, Winnow}
-import graft.operators.SetSimJoin
+import graft.operators.{ConnectedComponents, SetSimJoin}
 
 /** Deduplication suite over the `documents` table — the LLM-training-data
   * operators the reference lacks entirely (SURVEY.md §7.0 step 5), each
@@ -469,19 +469,14 @@ object DedupQueries {
     val pairs = lshPairs(Tables.documents(s, d),
         numHashes = 32, bands = 8, threshold = 0.8)
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    graft.operators.ConnectedComponents
+    ConnectedComponents
       .components(pairs, maxIterations = DedupCcRounds)
       .groupBy(col("comp")).agg(count(lit(1)).as("cluster_size"))
       .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
   }
 
   val qDedupReportSql: String = {
-    def iter(prev: String): String =
-      s"SELECT l.node, least(l.comp, coalesce(m.mn, l.comp)) AS comp FROM $prev l " +
-        s"LEFT JOIN (SELECT s2.a AS node, min(x.comp) AS mn FROM dsym s2 " +
-        s"JOIN $prev x ON s2.b = x.node GROUP BY 1) m USING (node)"
-    val rounds = (1 to DedupCcRounds)
-      .map(i => s"dl$i AS MATERIALIZED (${iter(s"dl${i - 1}")})").mkString(", ")
+    val rounds = ConnectedComponents.labelRoundsSql("dl", "dsym", DedupCcRounds)
     // qMinhashLshSql's own CTE chain, re-used verbatim as a subquery
     s"WITH pr AS MATERIALIZED (SELECT doc_a, doc_b FROM ($qMinhashLshSql) z), " +
       "dsym AS MATERIALIZED (SELECT doc_a AS a, doc_b AS b FROM pr " +
@@ -792,7 +787,7 @@ object DedupQueries {
       .join(ids.select(col("name").as("name_a"), col("nid").as("src")), Seq("name_a"))
       .join(ids.select(col("name").as("name_b"), col("nid").as("dst")), Seq("name_b"))
       .select(col("src"), col("dst"))
-    val labels = graft.operators.ConnectedComponents
+    val labels = ConnectedComponents
       .components(edges, maxIterations = ErRounds)
     // unmatched names are their own singleton entity
     val withComp = names
@@ -810,12 +805,7 @@ object DedupQueries {
   }
 
   val qEntityResolutionSql: String = {
-    def iter(prev: String): String =
-      s"SELECT l.node, least(l.comp, coalesce(m.mn, l.comp)) AS comp FROM $prev l " +
-        s"LEFT JOIN (SELECT s.a AS node, min(x.comp) AS mn FROM sym s " +
-        s"JOIN $prev x ON s.b = x.node GROUP BY 1) m USING (node)"
-    val rounds = (1 to ErRounds)
-      .map(i => s"l$i AS MATERIALIZED (${iter(s"l${i - 1}")})").mkString(", ")
+    val rounds = ConnectedComponents.labelRoundsSql("l", "sym", ErRounds)
     "WITH names AS (SELECT p_name AS name, count(*) AS n_parts, " +
       "min(p_partkey) AS nid FROM part GROUP BY 1), " +
       "blocks AS (SELECT name, nid, unnest([" +

@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Fixpoint, Graph, IterCheckpoint, Relax}
+import graft.operators.{ConnectedComponents, Fixpoint, Graph, IterCheckpoint, Relax}
+import graft.operators.Fixpoint.unroll
 import graft.operators.IterCheckpoint.IterCheckpointOps
 
 /** Graph analytics beyond the reference's simplified PageRank
@@ -133,14 +134,6 @@ object GraphQueries {
       "ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey " +
       s"GROUP BY 1, 2 HAVING count(DISTINCT a.l_orderkey) >= $MinSupport)"
 
-  /** `n` oracle rounds as a chain of materialized CTEs
-    * `<prefix>1 … <prefix>n`, round `i` being `iter(<prefix>{i−1}, i)`.
-    * AS MATERIALIZED: a round references its predecessor more than once,
-    * and DuckDB inlines plain CTEs per reference — 20 rounds would
-    * otherwise expand the plan 2^20-fold. */
-  private def unroll(prefix: String, n: Int)(iter: (String, Int) => String): String =
-    (1 to n).map(i => s"$prefix$i AS MATERIALIZED (${iter(s"$prefix${i - 1}", i)})").mkString(", ")
-
   def qComponents(s: SparkSession, d: String): DataFrame = {
     val labels = graft.operators.ConnectedComponents
       .components(supportedEdges(s, d), maxIterations = CcRounds)
@@ -150,13 +143,8 @@ object GraphQueries {
       .agg(count(lit(1)).as("n_components"))
   }
 
-  private def ccIter(prev: String): String =
-    s"SELECT l.node, least(l.comp, coalesce(m.mn, l.comp)) AS comp FROM $prev l " +
-      s"LEFT JOIN (SELECT s.a AS node, min(x.comp) AS mn FROM sym s " +
-      s"JOIN $prev x ON s.b = x.node GROUP BY 1) m USING (node)"
-
   val qComponentsSql: String = {
-    val rounds = unroll("l", CcRounds)((p, _) => ccIter(p))
+    val rounds = ConnectedComponents.labelRoundsSql("l", "sym", CcRounds)
     s"WITH $SqlSupportedEdges, " +
       "sym AS MATERIALIZED (SELECT src AS a, dst AS b FROM e UNION SELECT dst, src FROM e), " +
       "l0 AS MATERIALIZED (SELECT DISTINCT a AS node, a AS comp FROM sym), " +
@@ -204,7 +192,7 @@ object GraphQueries {
   }
 
   val qModularitySql: String = {
-    val rounds = unroll("l", CcRounds)((p, _) => ccIter(p))
+    val rounds = ConnectedComponents.labelRoundsSql("l", "sym", CcRounds)
     s"WITH $SqlSupportedEdges, " +
       "sym AS MATERIALIZED (SELECT src AS a, dst AS b FROM e UNION SELECT dst, src FROM e), " +
       "l0 AS MATERIALIZED (SELECT DISTINCT a AS node, a AS comp FROM sym), " +
@@ -1266,34 +1254,6 @@ object GraphQueries {
       "(PARTITION BY src ORDER BY sim DESC, dst) AS rn FROM sim) " +
       "SELECT src, dst, round(sim, 6) AS sim_r, rn FROM r WHERE rn <= 3"
 
-  /** One unrolled min-label-reach fixpoint with pointer jumping, as
-    * (hop, jump) materialized-CTE pairs — the DuckDB replay of
-    * `StronglyConnectedComponents.minReach`. Labels start at self; each
-    * round takes m := min(m, min over out-neighbors' m) then
-    * m := min(m, m(m)) (m(v) is reachable from v, so the jump is sound),
-    * covering reach distance 2^rounds. Converged labels are a fixed
-    * point, so surplus rounds are no-ops — the same argument every other
-    * unrolled graph oracle in this file leans on. Returns (ctes, final). */
-  private def sccReachCtes(tag: String, edges: String, initNodes: String,
-      rounds: Int, reverse: Boolean): (String, String) = {
-    val (s, d) = if (reverse) ("dst", "src") else ("src", "dst")
-    val b = new StringBuilder(
-      s"${tag}0 AS MATERIALIZED (SELECT node, node AS m FROM ($initNodes) t)")
-    var prev = s"${tag}0"
-    for (i <- 1 to rounds) {
-      val hop = s"${tag}h$i"
-      b.append(s", $hop AS MATERIALIZED (SELECT l.node, " +
-        s"least(l.m, coalesce(h.hm, l.m)) AS m FROM $prev l " +
-        s"LEFT JOIN (SELECT e.$s AS node, min(x.m) AS hm FROM $edges e " +
-        s"JOIN $prev x ON e.$d = x.node GROUP BY 1) h USING (node))")
-      b.append(s", $tag$i AS MATERIALIZED (SELECT l.node, " +
-        s"least(l.m, coalesce(j.m, l.m)) AS m FROM $hop l " +
-        s"LEFT JOIN $hop j ON l.m = j.node)")
-      prev = s"$tag$i"
-    }
-    (b.toString, prev)
-  }
-
   // The sf3-feasible FW-BW replay (r16): unrolls the engine's own outer
   // coloring rounds — forward min-reach F, same-color edge restriction,
   // backward min-reach G on the transpose, settle F = G, recurse on the
@@ -1323,20 +1283,22 @@ object GraphQueries {
     parts += "ed0 AS MATERIALIZED (SELECT DISTINCT l_partkey AS src, " +
       "nxt AS dst FROM seq WHERE nxt IS NOT NULL AND l_partkey % 7 = 0 " +
       "AND nxt % 7 = 0 AND l_partkey <> nxt)"
+    // one min-reach pass: labels start at self over the pass's own node
+    // set; returns the final (node, m) CTE
+    def reach(tag: String, edges: String, from: String, to: String): String = {
+      parts += s"${tag}0 AS MATERIALIZED (SELECT node, node AS m FROM " +
+        s"(SELECT $edges.src AS node FROM $edges UNION SELECT $edges.dst FROM $edges) t)"
+      parts += ConnectedComponents.minReachSql(tag, edges, from, to, SccPropRounds)
+      s"$tag$SccPropRounds"
+    }
     val settled = scala.collection.mutable.ArrayBuffer[String]()
     for (o <- 0 until SccOuterRounds) {
       val ed = s"ed$o"
-      val (fCtes, fFin) = sccReachCtes(s"f${o}_", ed,
-        s"SELECT $ed.src AS node FROM $ed UNION SELECT $ed.dst FROM $ed",
-        SccPropRounds, reverse = false)
-      parts += fCtes
+      val fFin = reach(s"f${o}_", ed, "src", "dst")
       parts += s"c$o AS MATERIALIZED (SELECT e.src, e.dst FROM $ed e " +
         s"JOIN $fFin fs ON e.src = fs.node " +
         s"JOIN $fFin fd ON e.dst = fd.node WHERE fs.m = fd.m)"
-      val (gCtes, gFin) = sccReachCtes(s"g${o}_", s"c$o",
-        s"SELECT c$o.src AS node FROM c$o UNION SELECT c$o.dst FROM c$o",
-        SccPropRounds, reverse = true)
-      parts += gCtes
+      val gFin = reach(s"g${o}_", s"c$o", "dst", "src")
       // nodes with no same-color edge never enter the backward fixpoint:
       // G defaults to self, matching the engine's coalesce(g, node)
       parts += s"v$o AS MATERIALIZED (SELECT f.node, f.m AS f, " +

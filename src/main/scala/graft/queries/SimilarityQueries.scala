@@ -1913,15 +1913,7 @@ object SimilarityQueries {
 
   val qDbscanGridSql: String = {
     val ccRounds = 24
-    def ccIter(prev: String, cur: String): String =
-      s"$cur AS MATERIALIZED (SELECT l.node, " +
-        "LEAST(l.comp, COALESCE(MIN(l2.comp), l.comp)) AS comp " +
-        s"FROM $prev l " +
-        "LEFT JOIN sym s ON s.a = l.node " +
-        s"LEFT JOIN $prev l2 ON l2.node = s.b " +
-        "GROUP BY l.node, l.comp)"
-    val rounds = (1 to ccRounds)
-      .map(i => ccIter(s"l${i - 1}", s"l$i")).mkString(", ")
+    val rounds = graft.operators.ConnectedComponents.labelRoundsSql("l", "sym", ccRounds)
     "WITH cells AS MATERIALIZED (SELECT cx, cy, " +
       "(cx + 1000) * 100000 + (cy + 1000) AS cid, count(*) AS cnt FROM " +
       s"(SELECT CAST(floor(CAST(embedding[1] AS DOUBLE) * $DbScale) AS BIGINT) AS cx, " +

@@ -50,7 +50,10 @@ class IterCheckpointSpec extends AnyFunSuite {
         finally s.close()
       }
       assert(filesUnder(dir) > 0, s"no checkpoint files under $dir")
-    } finally spark.conf.unset(IterCheckpoint.ConfKey)
+    } finally {
+      spark.conf.unset(IterCheckpoint.ConfKey)
+      graft.sources.LocalFs.deleteRecursively(dir)
+    }
   }
 
   test("measure counts rows and null rows in the materializing job, on both paths") {
@@ -63,7 +66,10 @@ class IterCheckpointSpec extends AnyFunSuite {
     try {
       val reliable = IterCheckpoint.measure(withNull)
       assert((reliable.rows, reliable.nullRows) === (2L, 1L))
-    } finally spark.conf.unset(IterCheckpoint.ConfKey)
+    } finally {
+      spark.conf.unset(IterCheckpoint.ConfKey)
+      graft.sources.LocalFs.deleteRecursively(dir)
+    }
   }
 
   test("a bad keyedScratchReleaseBytes value raises an error naming the key") {

@@ -19,6 +19,11 @@ hash of a lambda argument (`LocalGraph$$$Lambda$5654/0x…@15d24cb4`, which
 change from one JVM to the next). Any other difference — a
 section more or less, or a changed line — is printed as a unified diff.
 
+Every paired file also prints its number of `iterCheckpoint #n` sections
+on each side, `<file>: N iterCheckpoint before, M after` — one per
+materialization, so a per-round job added or saved shows there even when
+the plans differ too much to read.
+
 Exit status: 0 when every paired query matches, 1 on any difference or
 on a query present on one side only, 2 on bad arguments.
 """
@@ -70,6 +75,9 @@ def dumps(d):
 def diff_query(query, before, after):
     """Printed differences between two dumps of one query; True if equal."""
     a, b = sections(before), sections(after)
+    def checkpoints(secs):
+        return sum(h.startswith("iterCheckpoint #") for h, _ in secs)
+    print(f"{query}: {checkpoints(a)} iterCheckpoint before, {checkpoints(b)} after")
     same = True
     if len(a) != len(b):
         print(f"{query}: {len(a)} sections before, {len(b)} after")
